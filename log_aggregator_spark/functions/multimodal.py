@@ -349,11 +349,16 @@ def media_features(documents: DataFrame) -> DataFrame:
                 feats = [
                     _fake_feature(bytes(b).decode("utf-8")) for b in pdf["body"]
                 ]
-            fm = (
-                np.stack(feats).astype(np.float64)
-                if feats
-                else np.empty((0, MM_FDIM))
-            )
+            fm = np.stack(feats) if feats else np.empty((0, MM_FDIM), np.int64)
+            # media_near_dup ships v through its joins as int32
+            over = np.flatnonzero(np.abs(fm).max(axis=1, initial=0) >= 2**31)
+            if over.size:
+                raise ValueError(
+                    f"media feature of doc_id {pdf['doc_id'].iloc[over[0]]} "
+                    "has a component with |v| >= 2^31, beyond the int32 "
+                    "transport of media_near_dup"
+                )
+            fm = fm.astype(np.float64)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -409,9 +414,10 @@ def media_near_dup(
     Like the text-embedding path (`similarity._attach_vectors`), the
     verify vectors ship through the two attach joins as ``array<int>``
     (features are integer-valued, |component| ≤ MM_FDIM·n_bigrams ≪ 2³¹
-    for any real document) and are cast back to double inside the verify
-    fold — bit-identical sim, half the bytes through the byte-dominant
-    exchange (2 KB/vector as doubles at MM_FDIM=256)."""
+    for any real document, and ``media_features`` rejects a component
+    ≥ 2³¹ from an installed featurizer) and are cast back to double inside
+    the verify fold — bit-identical sim, half the bytes through the
+    byte-dominant exchange (2 KB/vector as doubles at MM_FDIM=256)."""
     from .similarity import _pair_sim_col_i32
 
     feats = features_df if features_df is not None else media_features(documents)

@@ -13,14 +13,23 @@ promoted to a cluster batch job:
    staging snapshot,
 3. derive routed output, new checkpoint, new held cache and metrics from
    that one materialized result, and commit all four in ONE atomic
-   TableGroup manifest swap.
+   TableGroup manifest swap,
+4. return the per-sink counts read with pyarrow from the routed files that
+   commit added — exactly what was published, at no Spark job.
 
 Consistency: the gate plan contains an ``asNondeterministic`` Arrow UDF and
 order-sensitive tie-breaks, so deriving each state table from its own
 recomputation would let task retries/speculation hand different inputs to
 different commits. Materializing ``_gate_flags`` once means routed,
-checkpoint, held and the count summary all observe the SAME physical rows —
-and the pass reads the parse output once instead of 4-5 times.
+checkpoint, held and metrics all observe the SAME physical rows — and the
+pass reads the parse output once instead of 4-5 times.
+
+Cost: at small inputs a pass is bound by fixed per-job cost. A warm pass
+over new chunks starts 14 Spark jobs on perfbench's ``resume_two_pass``
+input, all of them run by the gate's staging write and the commit's member
+writes. Every read names the schema its manifest (or the gate DataFrame)
+recorded, so none starts a parquet schema-inference job, and the lineage
+rows reach the JVM as Arrow.
 
 Crash safety: the single TableGroup commit has NO duplicate-append window —
 either the CURRENT swap happened (all four tables advanced together) or it
@@ -49,7 +58,6 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import lineage_from_files, lineage_records
-from .operators.aggregate import sink_counts
 from .operators.enrich import enrich
 from .operators.reassemble import (
     _gate_flags,
@@ -185,11 +193,8 @@ def _run_job_once(
     # footers + manifest diff — no second data scan (at 100 TB a lineage
     # scan doubles read I/O). 'scan' keeps the per-task mapInPandas pass
     # (per-partition wall times, arbitrary inputs); 'off' skips.
-    empty_lin = spark.createDataFrame(
-        [], schema="partition_id int, input_file string, n_rows long, n_bytes long, wall_ms long"
-    )
     if new_chunks is None or lineage_mode == "off":
-        lin = empty_lin
+        lin = lineage_from_files(spark, [])
     elif lineage_mode == "scan":
         lin = lineage_records(new_chunks)
     else:
@@ -207,8 +212,9 @@ def _run_job_once(
     # ---- the ONE computation: gate decision, materialized ----------------
     _sweep_stale_staging(state.staging_root)
     staging = f"{state.staging_root}/{uuid.uuid4().hex}"
-    _gate_flags(parsed, ckpt_df).write.mode("overwrite").parquet(staging)
-    flagged = spark.read.parquet(staging)
+    gate = _gate_flags(parsed, ckpt_df)
+    gate.write.mode("overwrite").parquet(staging)
+    flagged = spark.read.schema(gate.schema).parquet(staging)
 
     reassembled = reassemble_from_flags(flagged)
     enriched = enrich(reassembled, routes).withColumn(
@@ -275,7 +281,7 @@ def _run_job_once(
     if quarantined is not None:
         tables["quarantine"] = (quarantined, "append")
     try:
-        state.group.commit(
+        snap = state.group.commit(
             tables,
             lineage={
                 "chunks_snapshot": current_snap,
@@ -284,9 +290,6 @@ def _run_job_once(
                 "wall_sec": wall,
             },
         )
-        counts = {
-            r["sink"]: r["n_rows"] for r in sink_counts(enriched).collect()
-        }
     finally:
         # the staging snapshot is pass-local scratch: committed data was
         # rewritten into the group's data dirs, and a failed/aborted commit
@@ -301,8 +304,21 @@ def _run_job_once(
         "run_id": run_id,
         "status": "ok",
         "wall_sec": round(time.perf_counter() - t_start, 3),
-        "sink_counts": counts,
+        "sink_counts": _committed_sink_counts(state.routed.added_files(snap)),
     }
+
+
+def _committed_sink_counts(files: list[str]) -> dict:
+    """Rows per sink in the routed files a commit added, read from those
+    files with pyarrow: exactly what was published, at no Spark job."""
+    if not files:
+        return {}
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    sinks = ds.dataset(files, format="parquet").to_table(columns=["sink"])["sink"]
+    vc = pc.value_counts(sinks)
+    return dict(zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()))
 
 
 def requeue_quarantine(spark: SparkSession, state: JobState) -> int:

@@ -7,6 +7,12 @@ and the partition's wall time — all computed batch-vectorized, no per-row
 Python. ``input_file_name()`` is Spark's own file provenance; partition id
 comes from ``TaskContext`` inside the worker.
 
+``lineage_from_files`` (the ``run_job`` default) reads parquet footers
+only, and builds its rows through Arrow: they reach Spark as one
+``pyarrow.Table`` that the JVM decodes. A Python list would become a
+pickled Python RDD, and writing it to the metrics table would start a
+Python worker.
+
 The reference's nearest analog is the server's running chunk counter
 (``/root/reference/server/.../LogServerController.java:156-158,181-188``)
 plus its per-chunk log lines; here lineage is first-class data, appended to
@@ -23,10 +29,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
-LINEAGE_SCHEMA = (
-    "partition_id int, input_file string, n_rows long, n_bytes long, wall_ms long"
-)
+LINEAGE_SCHEMA = StructType([
+    StructField("partition_id", IntegerType()),
+    StructField("input_file", StringType()),
+    StructField("n_rows", LongType()),
+    StructField("n_bytes", LongType()),
+    StructField("wall_ms", LongType()),
+])
 
 
 def _bytes_estimate(pdf: pd.DataFrame) -> int:
@@ -89,13 +100,21 @@ def lineage_from_files(spark, files: list[str]) -> DataFrame:
     and ``wall_ms`` 0 — file identity, row count and bytes are the columns
     downstream auditing actually joins on. Driver-side footer loop: fine to
     ~10⁵ files per pass; beyond that, distribute with a parallelized read
-    of the same footers."""
+    of the same footers. Rows go through Arrow (see the module docstring)."""
     import os
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    rows = [
-        (-1, f, int(pq.ParquetFile(f).metadata.num_rows), int(os.path.getsize(f)), 0)
-        for f in files
-    ]
-    return spark.createDataFrame(rows, schema=LINEAGE_SCHEMA)
+    table = pa.table(
+        {
+            "partition_id": [-1] * len(files),
+            "input_file": files,
+            "n_rows": [pq.read_metadata(f).num_rows for f in files],
+            "n_bytes": [os.path.getsize(f) for f in files],
+            "wall_ms": [0] * len(files),
+        },
+        schema=to_arrow_schema(LINEAGE_SCHEMA),
+    )
+    return spark.createDataFrame(table, schema=LINEAGE_SCHEMA)

@@ -83,6 +83,16 @@ def get_spark(
         # serial driver-side rename per task output — matters for the
         # per-sink fan-out write, which produces many files by design.
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
+        # generated-code cache: one run_job pass (gate, five member writes,
+        # their reads) generates more distinct classes than the default
+        # 100 entries hold, so every pass recompiled some of the same code
+        # with Janino and the JIT started over on the new classes. How
+        # many it recompiled depended on the order the concurrent member
+        # writes reached the cache, so a pass's CPU time varied from one
+        # pass to the next. Sized to hold a pass's classes, a repeated
+        # pass compiles nothing. A static conf: it only takes effect when
+        # the session is created.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     if master.startswith("local-cluster["):
         # local-cluster[N, cores, mem_mb] sizes the WORKER's allocatable

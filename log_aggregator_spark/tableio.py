@@ -146,11 +146,8 @@ class SnapshotTable:
         snap = snapshot if snapshot is not None else self.current_snapshot()
         if snap is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
-        files = self._manifest(snap)["files"]
-        if not files:
-            schema = self._manifest(snap)["schema"]
-            return spark.createDataFrame([], schema=_schema_from_json(schema))
-        return spark.read.parquet(*files)
+        m = self._manifest(snap)
+        return _read_files(spark, m["files"], m["schema"])
 
     def read_incremental(
         self, spark: SparkSession, since: int | None
@@ -163,10 +160,11 @@ class SnapshotTable:
         if since is None:
             return self.read(spark, current)
         old = set(self._manifest(since)["files"])
-        files = [f for f in self._manifest(current)["files"] if f not in old]
+        m = self._manifest(current)
+        files = [f for f in m["files"] if f not in old]
         if not files:
             return None
-        return spark.read.parquet(*files)
+        return _read_files(spark, files, m["schema"])
 
     def incremental_files(self, since: int | None) -> list[str]:
         """The file list ``read_incremental(since)`` would scan — the
@@ -289,6 +287,16 @@ def _schema_from_json(schema_json: str):
     from pyspark.sql.types import StructType
 
     return StructType.fromJson(json.loads(schema_json))
+
+
+def _read_files(spark: SparkSession, files: list[str], schema_json: str) -> DataFrame:
+    """Scan ``files`` under the schema their manifest recorded. Naming the
+    schema skips Spark's parquet footer-inference job (one per read), and
+    older files that lack a column added later read it as null."""
+    schema = _schema_from_json(schema_json)
+    if not files:
+        return spark.createDataFrame([], schema=schema)
+    return spark.read.schema(schema).parquet(*files)
 
 
 class IcebergTable:
@@ -421,10 +429,12 @@ class IcebergTable:
         cutoff = datetime.datetime.now(datetime.timezone.utc) - datetime.timedelta(
             seconds=orphan_min_age_sec
         )
+        # explicit offset: a zone-less literal is read in the session time
+        # zone, which would shift the min-age guard by up to ~14h
         orphans = self.spark.sql(
             f"CALL {catalog}.system.remove_orphan_files("
             f"table => '{self.name}', "
-            f"older_than => TIMESTAMP '{cutoff:%Y-%m-%d %H:%M:%S}')"
+            f"older_than => TIMESTAMP '{cutoff:%Y-%m-%d %H:%M:%S}+00:00')"
         ).collect()
         return {"expired": [r[0] for r in expired], "deleted_files": len(orphans)}
 
@@ -441,6 +451,11 @@ class GroupMember:
 
     def read(self, spark: SparkSession, snapshot: int | None = None) -> DataFrame:
         return self._group.read_member(spark, self.name, snapshot)
+
+    def added_files(self, snapshot: int | None = None) -> list[str]:
+        """The data files ``snapshot`` (default: latest) wrote for this
+        member; [] when that commit carried the member forward."""
+        return self._group._entry(self.name, snapshot)["added_files"]
 
     def exists(self) -> bool:
         return self._group.member_exists(self.name)
@@ -577,15 +592,14 @@ class TableGroup:
     def read_member(
         self, spark: SparkSession, name: str, snapshot: int | None = None
     ) -> DataFrame:
+        entry = self._entry(name, snapshot)
+        return _read_files(spark, entry["files"], entry["schema"])
+
+    def _entry(self, name: str, snapshot: int | None) -> dict:
         snap = snapshot if snapshot is not None else self.current_snapshot()
         if snap is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
-        entry = self._manifest(snap)["tables"][name]
-        if not entry["files"]:
-            return spark.createDataFrame(
-                [], schema=_schema_from_json(entry["schema"])
-            )
-        return spark.read.parquet(*entry["files"])
+        return self._manifest(snap)["tables"][name]
 
     def lineage(self, snapshot: int | None = None) -> dict:
         snap = snapshot if snapshot is not None else self.current_snapshot()

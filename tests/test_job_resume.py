@@ -51,6 +51,50 @@ def _segments(state: JobState, spark) -> pd.DataFrame:
     )
 
 
+def _job_ids(spark) -> set[int]:
+    """Ids of the Spark jobs the status store has recorded so far, once the
+    listener bus has delivered every event already posted."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+
+def _routed_counts(state: JobState, spark, run_id) -> dict:
+    """Per-sink counts of the routed rows committed under ``run_id``."""
+    rows = (
+        state.routed.read(spark).where(F.col("run_id") == run_id)
+        .groupBy("sink").count().collect()
+    )
+    return {r["sink"]: r["count"] for r in rows}
+
+
+def test_manifest_schema_reads_latest_columns(spark, tmp_path):
+    """Reads take the schema the latest manifest recorded, not one inferred
+    from a parquet footer: after a second append gains a column, the read
+    has that column, null in the older file, for a SnapshotTable and a
+    TableGroup member alike — and building the read starts no Spark job."""
+    from log_aggregator_spark.tableio import TableGroup
+
+    old = spark.createDataFrame([(1,)], schema="k long")
+    new = spark.createDataFrame([(2, "x")], schema="k long, extra string")
+    t = SnapshotTable(str(tmp_path / "t"))
+    s1 = t.commit(old)
+    t.commit(new)
+    g = TableGroup(str(tmp_path / "g"))
+    g.commit({"m": (old, "append")})
+    g.commit({"m": (new, "append")})
+
+    before = _job_ids(spark)
+    reads = [t.read(spark), t.read_incremental(spark, None), g.table("m").read(spark)]
+    assert _job_ids(spark) == before
+    for df in reads:
+        assert df.columns == ["k", "extra"]
+        assert sorted(map(tuple, df.collect())) == [(1, None), (2, "x")]
+    delta = t.read_incremental(spark, s1)
+    assert delta.columns == ["k", "extra"] and delta.collect() == [(2, "x")]
+
+
 def test_tableio_snapshot_commit_and_incremental(spark, tmp_path):
     t = SnapshotTable(str(tmp_path / "t"))
     df1 = spark.range(5).select(F.col("id").alias("x"))
@@ -127,6 +171,98 @@ def test_two_pass_job_equals_single_run(spark, docs, tmp_path):
     assert sorted(map(tuple, held.collect())) == sorted(
         map(tuple, want_held.collect())
     )
+
+
+def test_resume_pass_job_budget(spark, docs, tmp_path):
+    """A resume pass pays a fixed cost per Spark job, so its job count is a
+    budget. On this input the second pass started 25 jobs while the counts
+    were recomputed from staging and every read inferred its schema from
+    parquet footers; with counts read from the committed files, schemas
+    from the manifests and lineage rows sent as Arrow it starts 15. A
+    change that brings back a recount or an inferred read fails here."""
+    chunks = chunker.chunks(docs)
+    routes = _routes(docs)
+    seq = F.regexp_extract("envelope", r"_(\d+)\.pbData$", 1).cast("long")
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(chunks.where(seq <= 2))
+    run_job(spark, ct, routes, state)
+    ct.commit(chunks.where(seq > 2))
+
+    before = _job_ids(spark)
+    r = run_job(spark, ct, routes, state)
+    n_jobs = len(_job_ids(spark) - before)
+    assert r["status"] == "ok" and r["sink_counts"]
+    assert n_jobs <= 15, f"second pass started {n_jobs} Spark jobs"
+
+
+def test_repeated_pass_compiles_no_code(spark, docs, tmp_path):
+    """A pass repeated from the same saved state generates the same code,
+    and the session's codegen cache holds all of it: the repeat compiles
+    nothing. With Spark's default 100-entry cache the repeats here
+    recompiled 24 and 25 classes; how many depends on the order in which
+    the concurrent member writes reach the cache, and so did the pass's
+    CPU time."""
+    import shutil
+
+    chunks = chunker.chunks(docs)
+    routes = _routes(docs)
+    seq = F.regexp_extract("envelope", r"_(\d+)\.pbData$", 1).cast("long")
+    live, saved = tmp_path / "live", tmp_path / "saved"
+    ct = SnapshotTable(str(live / "chunks"))
+    state = JobState(str(live / "state"))
+    ct.commit(chunks.where(seq <= 2))
+    run_job(spark, ct, routes, state)
+    ct.commit(chunks.where(seq > 2))
+    shutil.copytree(live, saved)
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    counts = []
+    for _ in range(3):
+        shutil.rmtree(live)
+        shutil.copytree(saved, live)
+        before = compiles.getCount()
+        assert run_job(spark, ct, routes, state)["status"] == "ok"
+        counts.append(compiles.getCount() - before)
+    assert counts[-1] == 0, f"compiles per repeated pass: {counts}"
+
+
+def test_sink_counts_are_the_committed_routed_rows(spark, tmp_path):
+    """run_job's sink counts equal the per-sink counts of the routed rows it
+    committed for its run_id — over a chunks table with malformed envelopes
+    and two sinks, and as {} for a pass that routes nothing because every
+    chunk it sees is held behind a gap."""
+    schema = "doc_id string, session long, seq long, chunk_tokens array<int>, source string"
+    good = spark.createDataFrame(
+        [("d", 10, 1, [1], "src1"), ("d", 10, 2, [2], "src1"),
+         ("e", 10, 1, [5], "src2"), ("f", 11, 1, [6], "src2")],
+        schema=schema,
+    )
+    corrupt = spark.createDataFrame(
+        [("totally-garbage", [7], "src1")],
+        schema="envelope string, chunk_tokens array<int>, source string",
+    )
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0), ("src2", "sinkB", 0)],
+        schema="source string, sink string, priority int",
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(encode_envelope(good).select("envelope", "chunk_tokens", "source")
+              .unionByName(corrupt))
+    r1 = run_job(spark, ct, routes, state)
+    assert state.rejects.read(spark).count() == 1
+    assert r1["sink_counts"] == _routed_counts(state, spark, r1["run_id"])
+    assert r1["sink_counts"] == {"sinkA": 1, "sinkB": 2}
+
+    # seq 4 of stream d arrives without seq 3: held, nothing routed
+    ct.commit(encode_envelope(spark.createDataFrame(
+        [("d", 10, 4, [4], "src1")], schema=schema,
+    )).select("envelope", "chunk_tokens", "source"))
+    r2 = run_job(spark, ct, routes, state)
+    assert r2["status"] == "ok" and r2["sink_counts"] == {}
+    assert _routed_counts(state, spark, r2["run_id"]) == {}
+    assert state.held.read(spark).count() == 1
 
 
 def test_gap_fill_across_runs(spark, tmp_path):
@@ -602,3 +738,13 @@ def test_lineage_metadata_matches_scan(spark, docs, tmp_path):
     scan_counts = {f.replace("file://", ""): n for f, n in zip(scan["input_file"], scan["n_rows"])}
     assert meta_counts == scan_counts
     assert (meta["n_bytes"] > 0).all()
+
+
+def test_lineage_from_no_files_is_empty_with_schema(spark):
+    """No new files → an empty DataFrame with LINEAGE_SCHEMA, built through
+    Arrow like the non-empty case; partition_id stays int, not long."""
+    from log_aggregator_spark.lineage import LINEAGE_SCHEMA, lineage_from_files
+
+    df = lineage_from_files(spark, [])
+    assert df.schema == LINEAGE_SCHEMA
+    assert df.collect() == []

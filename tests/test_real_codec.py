@@ -161,3 +161,24 @@ def test_fake_seam_restored_after_uninstall(spark, p3_docs):
     row = mm.decode_features(one).collect()[0]
     text = one.collect()[0]["text"]
     assert row["checksum"] == sum(ord(c) for c in text)
+
+
+def test_media_features_reject_component_beyond_int32(spark, p3_docs):
+    """media_near_dup ships feature vectors through its joins as int32: a
+    featurizer component with |v| ≥ 2³¹ must fail naming its doc, not wrap
+    silently into a wrong similarity."""
+    docs, images = p3_docs
+    near_body = p3_text(images[1], W, H).encode()
+
+    def oversized(body: bytes) -> np.ndarray:
+        v = p3_histogram(body)
+        if body == near_body:
+            v[0] = 2**31
+        return v
+
+    mm.set_feature_extractor(oversized)
+    try:
+        with pytest.raises(Exception, match=r"doc_id 1 .*2\^31"):
+            mm.media_near_dup(docs.where("doc_id < 3")).collect()
+    finally:
+        mm.set_feature_extractor(None)

@@ -17,6 +17,15 @@ lineage is checked as a superset (Iceberg accumulates table properties);
 CAS-conflict and crash-injection semantics stay in the backend-specific
 suites (test_tableio_maintenance, test_job_resume) because the engines
 legitimately differ there (Iceberg retries optimistically inside commit).
+
+Known divergence, unexercised while the jar is absent: ``IcebergTable.
+expire_snapshots`` calls Iceberg's ``expire_snapshots`` with ``retain_last``
+but no ``older_than``, so Iceberg's 5-day default max snapshot age applies
+and snapshots younger than that survive beyond ``keep_last`` — unlike
+``SnapshotTable``, which expires every snapshot older than the newest
+``keep_last``. ``remove_orphan_files`` also refuses an ``older_than`` within
+24 h of now, so ``test_expire_snapshots_keeps_current_readable``'s
+``orphan_min_age_sec=0`` call would fail on a real Iceberg deployment.
 """
 
 from __future__ import annotations
