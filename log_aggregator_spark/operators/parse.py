@@ -82,35 +82,35 @@ def parse_envelope(chunks: DataFrame, jvm: bool = False) -> DataFrame:
     return parsed
 
 
-def split_rejects(chunks: DataFrame, jvm: bool = False) -> tuple[DataFrame, DataFrame]:
-    """Dead-letter split: (parsed_ok, rejects). An envelope that fails the
-    regex parses to null fields; at 100 TB silently dropping (or crashing
-    on) malformed input is not an option — the reject stream keeps the
-    original envelope + source for quarantine/audit, the ok stream carries
-    parsed keys only. One pass over the parse output, no second regex
-    evaluation (the reference logs-and-skips unparseable cached files; here
-    the skipped set is first-class data)."""
-    if jvm:
-        # Non-match detection keys on the seq group: ``(\d+)`` cannot match
-        # empty, so ``regexp_extract(...) == ''`` ⇔ the envelope failed the
-        # pattern. (doc_id's ``(.*)`` group legitimately matches empty —
-        # '_3_7.pbData' is a valid envelope with doc_id '' — so nullif on
-        # group 1 would reject it here while the Arrow path accepts it.)
-        matched = F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3) != F.lit("")
-        tagged = chunks.withColumn(
-            "_p",
-            F.struct(
-                F.when(
-                    matched, F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 1)
-                ).alias("doc_id"),
-                F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 2)
-                .cast("long").alias("session"),
-                F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3)
-                .cast("long").alias("seq"),
-            ),
-        )
-    else:
-        tagged = chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope")))
+def tag_envelopes(chunks: DataFrame, jvm: bool = False) -> DataFrame:
+    """chunks plus ``_p``, the parsed (doc_id, session, seq) struct. An
+    envelope that fails the regex gets a null ``_p.doc_id``. The one parse
+    evaluation that ``split_tagged`` derives both streams from — a caller
+    that caches this frame parses each envelope once."""
+    if not jvm:
+        return chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope")))
+    # Non-match detection keys on the seq group: ``(\d+)`` cannot match
+    # empty, so ``regexp_extract(...) == ''`` ⇔ the envelope failed the
+    # pattern. (doc_id's ``(.*)`` group legitimately matches empty —
+    # '_3_7.pbData' is a valid envelope with doc_id '' — so nullif on
+    # group 1 would reject it here while the Arrow path accepts it.)
+    matched = F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3) != F.lit("")
+    return chunks.withColumn(
+        "_p",
+        F.struct(
+            F.when(
+                matched, F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 1)
+            ).alias("doc_id"),
+            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 2)
+            .cast("long").alias("session"),
+            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3)
+            .cast("long").alias("seq"),
+        ),
+    )
+
+
+def split_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(parsed_ok, rejects) from a ``tag_envelopes`` output."""
     ok = tagged.where(F.col("_p.doc_id").isNotNull()).select(
         F.col("_p.doc_id").alias("doc_id"),
         F.col("_p.session").alias("session"),
@@ -120,6 +120,17 @@ def split_rejects(chunks: DataFrame, jvm: bool = False) -> tuple[DataFrame, Data
     )
     rejects = tagged.where(F.col("_p.doc_id").isNull()).select("envelope", "source")
     return ok, rejects
+
+
+def split_rejects(chunks: DataFrame, jvm: bool = False) -> tuple[DataFrame, DataFrame]:
+    """Dead-letter split: (parsed_ok, rejects). An envelope that fails the
+    regex parses to null fields; at 100 TB silently dropping (or crashing
+    on) malformed input is not an option — the reject stream keeps the
+    original envelope + source for quarantine/audit, the ok stream carries
+    parsed keys only. One pass over the parse output, no second regex
+    evaluation (the reference logs-and-skips unparseable cached files; here
+    the skipped set is first-class data)."""
+    return split_tagged(tag_envelopes(chunks, jvm))
 
 
 def encode_envelope(df: DataFrame) -> DataFrame:

@@ -271,10 +271,10 @@ def reassemble_sql(parsed: DataFrame, checkpoint: DataFrame | None = None) -> Da
 
 def reassemble_from_flags(flagged: DataFrame) -> DataFrame:
     """The aggregate half of ``reassemble_sql``, split out so a caller that
-    MATERIALIZES the gate decision once (job.py writes ``_gate_flags``
-    output to a staging snapshot) can derive reassembly, held state and
-    checkpoint from the same physical rows — one computation observed by
-    every commit, instead of N independent recomputations that task
+    MATERIALIZES the gate decision once (job.py holds ``_gate_flags``
+    output as an eager local checkpoint) can derive reassembly, held state
+    and checkpoint from the same physical rows — one computation observed
+    by every commit, instead of N independent recomputations that task
     retries could silently diverge."""
     kept = flagged.where(F.col("accepted")).drop("_first")
     return (

@@ -844,6 +844,12 @@ pk AS (
         probe_side = "pk"
     else:
         probe_side = "bk"
+    # Candidate pairs are found on ids alone and the vectors joined back
+    # (vec_id is unique in n). Carrying the vectors through the pair
+    # aggregate as any_value(v) gives the same values, but DuckDB 1.0 then
+    # holds ~12 GB for sim_lsh_topk's 90k pairs of 64-dim vectors.
+    pair_vecs = "JOIN n na ON na.vec_id = c.vec_id JOIN n nb ON nb.vec_id = c.nb_id"
+    pair_sim = "list_dot_product(na.v, nb.v) / sqrt(na.n2 * nb.n2)"
     return {
         "sim_brute_topk": _SIM_PRELUDE
         + f"""
@@ -873,13 +879,14 @@ n AS (SELECT vec_id, v, list_dot_product(v, v) AS n2 FROM d)
 SELECT vec_a, vec_b, n_bands,
        CAST(floor(sim * 1000000) AS BIGINT) AS sim_x1m
 FROM (
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-         CAST(count(*) AS BIGINT) AS n_bands,
-         list_dot_product(any_value(a.v), any_value(b.v))
-           / sqrt(any_value(a.n2) * any_value(b.n2)) AS sim
-  FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                     AND a.vec_id < b.vec_id
-  GROUP BY a.vec_id, b.vec_id
+  SELECT c.vec_id AS vec_a, c.nb_id AS vec_b, c.n_bands,
+         {pair_sim} AS sim
+  FROM (
+    SELECT a.vec_id, b.vec_id AS nb_id, CAST(count(*) AS BIGINT) AS n_bands
+    FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
+                       AND a.vec_id < b.vec_id
+    GROUP BY a.vec_id, b.vec_id
+  ) c {pair_vecs}
 ) WHERE sim >= {_sim.LSH_TAU}
 """,
         "sim_lsh_topk": f"""
@@ -891,12 +898,12 @@ FROM (
   SELECT vec_id, nb_id AS neighbor_id,
          row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, nb_id) AS rank
   FROM (
-    SELECT a.vec_id, b.vec_id AS nb_id,
-           list_dot_product(any_value(a.v), any_value(b.v))
-             / sqrt(any_value(a.n2) * any_value(b.n2)) AS sim
-    FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                       AND a.vec_id <> b.vec_id
-    GROUP BY a.vec_id, b.vec_id
+    SELECT c.vec_id, c.nb_id, {pair_sim} AS sim
+    FROM (
+      SELECT DISTINCT a.vec_id, b.vec_id AS nb_id
+      FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
+                         AND a.vec_id <> b.vec_id
+    ) c {pair_vecs}
   )
 ) WHERE rank <= {_sim.LSH_TOPK}
 """,
@@ -917,13 +924,13 @@ approx AS (
     SELECT vec_id, nb_id AS neighbor_id,
            row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, nb_id) AS rank
     FROM (
-      SELECT a.vec_id, b.vec_id AS nb_id,
-             list_dot_product(any_value(a.v), any_value(b.v))
-               / sqrt(any_value(a.n2) * any_value(b.n2)) AS sim
-      FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
-                         AND a.vec_id <> b.vec_id
-      WHERE {_QSAMPLE_PRED.format(col="a.vec_id")}
-      GROUP BY a.vec_id, b.vec_id
+      SELECT c.vec_id, c.nb_id, {pair_sim} AS sim
+      FROM (
+        SELECT DISTINCT a.vec_id, b.vec_id AS nb_id
+        FROM {probe_side} a JOIN bk b ON a.band = b.band AND a.bucket = b.bucket
+                           AND a.vec_id <> b.vec_id
+        WHERE {_QSAMPLE_PRED.format(col="a.vec_id")}
+      ) c {pair_vecs}
     )
   ) WHERE rank <= {_sim.LSH_TOPK}
 ),

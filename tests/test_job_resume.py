@@ -60,6 +60,69 @@ def _job_ids(spark) -> set[int]:
     return {jobs.apply(i).jobId() for i in range(jobs.size())}
 
 
+def _execution_ids(spark) -> set[int]:
+    """Ids of the SQL executions the status store has recorded so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return {execs.apply(i).executionId() for i in range(execs.size())}
+
+
+def _parse_executions(spark, since: set[int]) -> list[int]:
+    """SQL executions after ``since`` in which an ``ArrowEvalPython`` node
+    (the parse UDF) reported output rows. A plan that reads a cached
+    relation prints the relation's plan, UDF included, but its own tasks
+    never run that node, so its row metric stays unset or 0 there."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    hits = []
+    for eid in sorted(_execution_ids(spark) - since):
+        values = {}
+        it = store.executionMetrics(eid).iterator()
+        while it.hasNext():
+            kv = it.next()
+            values[kv._1()] = kv._2()
+        nodes = store.planGraph(eid).allNodes()
+        for i in range(nodes.size()):
+            node = nodes.apply(i)
+            if "ArrowEvalPython" not in node.name():
+                continue
+            metrics = node.metrics()
+            for j in range(metrics.size()):
+                m = metrics.apply(j)
+                rows = values.get(m.accumulatorId(), "0").replace(",", "")
+                if m.name() == "number of output rows" and int(rows) > 0:
+                    hits.append(eid)
+    return hits
+
+
+def _pinned(spark) -> tuple[set[int], bool]:
+    """RDDs pinned in executor storage, and whether the session's cache
+    manager holds nothing."""
+    from log_aggregator_spark.session import persistent_rdd_ids
+
+    cache_empty = spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    return persistent_rdd_ids(spark), cache_empty
+
+
+def _small_input(spark, tmp_path):
+    """A chunks table with two good chunks of stream ``d`` and one
+    malformed envelope, routes, and an empty state."""
+    good = spark.createDataFrame(
+        [("d", 10, 1, [1], "src1"), ("d", 10, 2, [2], "src1")],
+        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+    )
+    corrupt = spark.createDataFrame(
+        [("totally-garbage", [7], "src1")],
+        schema="envelope string, chunk_tokens array<int>, source string",
+    )
+    chunks = encode_envelope(good).select("envelope", "chunk_tokens", "source")
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    ct.commit(chunks.unionByName(corrupt))
+    return ct, routes, JobState(str(tmp_path / "state"))
+
+
 def _routed_counts(state: JobState, spark, run_id) -> dict:
     """Per-sink counts of the routed rows committed under ``run_id``."""
     rows = (
@@ -178,8 +241,11 @@ def test_resume_pass_job_budget(spark, docs, tmp_path):
     budget. On this input the second pass started 25 jobs while the counts
     were recomputed from staging and every read inferred its schema from
     parquet footers; with counts read from the committed files, schemas
-    from the manifests and lineage rows sent as Arrow it starts 15. A
-    change that brings back a recount or an inferred read fails here."""
+    from the manifests and lineage rows sent as Arrow it started 15. With
+    the gate held in a local checkpoint instead of a parquet staging copy,
+    and the checkpoint member merged in one aggregate, it starts 14. A
+    change that brings back a recount, an inferred read or a second
+    reassembly aggregate fails here."""
     chunks = chunker.chunks(docs)
     routes = _routes(docs)
     seq = F.regexp_extract("envelope", r"_(\d+)\.pbData$", 1).cast("long")
@@ -193,7 +259,20 @@ def test_resume_pass_job_budget(spark, docs, tmp_path):
     r = run_job(spark, ct, routes, state)
     n_jobs = len(_job_ids(spark) - before)
     assert r["status"] == "ok" and r["sink_counts"]
-    assert n_jobs <= 15, f"second pass started {n_jobs} Spark jobs"
+    assert n_jobs <= 14, f"second pass started {n_jobs} Spark jobs"
+
+
+def test_resume_pass_parses_once(spark, tmp_path):
+    """One pass evaluates the parse UDF in one Spark execution: the gate
+    input and the rejects member read the same cached parse. Evaluated in
+    the gate's materialization and again in the rejects write, the UDF
+    cost two rounds of Python-worker tasks per pass."""
+    ct, routes, state = _small_input(spark, tmp_path)
+    before = _execution_ids(spark)
+    assert run_job(spark, ct, routes, state)["status"] == "ok"
+    hits = _parse_executions(spark, before)
+    assert len(hits) == 1, f"parse UDF ran in executions {hits}"
+    assert state.rejects.read(spark).count() == 1
 
 
 def test_repeated_pass_compiles_no_code(spark, docs, tmp_path):
@@ -580,6 +659,71 @@ def test_session_restart_across_runs(spark, tmp_path):
     assert state.held.read(spark).count() == 0
 
 
+def test_checkpoint_merge_cases(spark, tmp_path):
+    """The checkpoint member after a second pass, one stream per case: an
+    idle stream keeps its last_seq, an emitting one advances, a new one
+    appears, a stream that only ever emitted seq 0 stays at 0 (idle or
+    new), and a restarted session gets its own row beside the old one."""
+    schema = "doc_id string, session long, seq long, chunk_tokens array<int>, source string"
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+
+    def commit(rows):
+        df = spark.createDataFrame(
+            [(d, s, q, [q], "src1") for d, s, q in rows], schema=schema
+        )
+        ct.commit(encode_envelope(df).select("envelope", "chunk_tokens", "source"))
+
+    commit([("idle", 1, 1), ("idle", 1, 2), ("emit", 1, 1), ("zero", 1, 0),
+            ("restart", 1, 1), ("restart", 1, 2), ("restart", 1, 3)])
+    run_job(spark, ct, routes, state)
+    commit([("emit", 1, 2), ("emit", 1, 3), ("new", 1, 4), ("new", 1, 5),
+            ("zero_new", 1, 0), ("restart", 2, 1)])
+    run_job(spark, ct, routes, state)
+
+    ck = {(r["doc_id"], r["session"]): r["last_seq"]
+          for r in state.checkpoint.read(spark).collect()}
+    assert ck == {
+        ("idle", 1): 2, ("emit", 1): 3, ("new", 1): 5, ("zero", 1): 0,
+        ("zero_new", 1): 0, ("restart", 1): 3, ("restart", 2): 1,
+    }
+    assert state.held.read(spark).count() == 0
+
+
+def test_summary_counts_are_the_committed_rows(spark, tmp_path):
+    """run_job's ``rejects`` and ``held`` counts equal the rows the pass
+    committed to those members: this pass's rejects, and the whole held
+    cache, over a pass with malformed envelopes and a gapped stream, and
+    over a pass with no malformed envelopes."""
+    ct, routes, state = _small_input(spark, tmp_path)
+    ct.commit(encode_envelope(spark.createDataFrame(
+        [("d", 10, 4, [4], "src1"), ("e", 10, 1, [5], "src1")],
+        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+    )).select("envelope", "chunk_tokens", "source").unionByName(
+        spark.createDataFrame(
+            [("also-garbage", [8], "src1"), ("d_10_x.pbData", [9], "src1")],
+            schema="envelope string, chunk_tokens array<int>, source string",
+        )
+    ))
+    # the first pass reads both commits
+    r = run_job(spark, ct, routes, state)
+    this_run = F.col("run_id") == r["run_id"]
+    assert r["rejects"] == state.rejects.read(spark).where(this_run).count() == 3
+    assert r["held"] == state.held.read(spark).count() == 1
+
+    ct.commit(encode_envelope(spark.createDataFrame(
+        [("d", 10, 3, [3], "src1")],
+        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+    )).select("envelope", "chunk_tokens", "source"))
+    r = run_job(spark, ct, routes, state)
+    this_run = F.col("run_id") == r["run_id"]
+    assert r["rejects"] == state.rejects.read(spark).where(this_run).count() == 0
+    assert r["held"] == state.held.read(spark).count() == 0
+
+
 def test_held_cache_ages_out_to_quarantine(spark, tmp_path):
     """A permanently-gapped stream must not grow the held cache forever
     (the reference's 'cache grows' failure mode): with held_max_age_runs=2
@@ -670,27 +814,47 @@ def test_job_routes_malformed_envelopes_to_rejects(spark, tmp_path):
     assert state.rejects.read(spark).count() == 2
 
 
-def test_job_staging_dir_cleaned_after_commit(spark, tmp_path):
-    """ADVICE r2: each pass's materialized gate staging dir must be deleted
-    once the commit (and post-commit reads) are done — unbounded disk
-    growth otherwise."""
-    import os
+def test_run_job_leaves_nothing_pinned(spark, tmp_path, monkeypatch):
+    """A pass caches its parse and local-checkpoints its gate decision;
+    both are released whether the pass commits, crashes before the commit
+    point, or loses the manifest CAS and retries. Pinned blocks left
+    behind would fill executor storage one pass at a time."""
+    from log_aggregator_spark.tableio import TableGroup
 
-    good = spark.createDataFrame(
-        [("d", 10, 1, [1], "src1")],
-        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
-    )
-    routes = spark.createDataFrame(
-        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
-    )
-    ct = SnapshotTable(str(tmp_path / "chunks"))
-    state = JobState(str(tmp_path / "state"))
-    ct.commit(encode_envelope(good).select("envelope", "chunk_tokens", "source"))
-    run_job(spark, ct, routes, state)
-    leftovers = (
-        os.listdir(state.staging_root) if os.path.exists(state.staging_root) else []
-    )
-    assert leftovers == []
+    spark.catalog.clearCache()
+    before = _pinned(spark)
+    assert before[1]
+
+    ct, routes, state = _small_input(spark, tmp_path / "ok")
+    assert run_job(spark, ct, routes, state)["status"] == "ok"
+    assert _pinned(spark) == before
+
+    real_publish = TableGroup._publish
+
+    def crash(self, snap_id, manifest):
+        raise RuntimeError("simulated crash before commit point")
+
+    monkeypatch.setattr(TableGroup, "_publish", crash)
+    ct, routes, state = _small_input(spark, tmp_path / "crash")
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(spark, ct, routes, state)
+    assert state.group.current_snapshot() is None
+    assert _pinned(spark) == before
+
+    raced = {"done": False}
+
+    def lose_race_once(self, snap_id, manifest):
+        if not raced["done"]:
+            raced["done"] = True
+            rival = spark.createDataFrame([("rival",)], schema="who string")
+            TableGroup(self.root).commit({"audit": (rival, "append")})
+        return real_publish(self, snap_id, manifest)
+
+    monkeypatch.setattr(TableGroup, "_publish", lose_race_once)
+    ct, routes, state = _small_input(spark, tmp_path / "race")
+    assert run_job(spark, ct, routes, state, retries=1)["status"] == "ok"
+    assert raced["done"] and state.group.current_snapshot() == 2
+    assert _pinned(spark) == before
 
 
 def test_iceberg_backend_capability_gate(spark):
