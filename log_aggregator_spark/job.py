@@ -29,12 +29,16 @@ before the CAS, and the retry starts over from the committed state. The
 cached parse under it may be recomputed after a lost block, which is safe
 because the UDF is a pure function of the envelope.
 
-Cost: at small inputs a pass is bound by fixed per-job cost. A warm pass
-over new chunks starts 13 Spark jobs on perfbench's ``resume_two_pass``
-input: the gate's checkpoint and the commit's member writes. It runs the
-parse UDF in one of them. Every read names the schema its manifest
-recorded, so none starts a parquet schema-inference job, and the lineage
-rows reach the JVM as Arrow.
+Cost: at small inputs a pass is bound by fixed per-job and per-task cost.
+A warm pass over new chunks starts 12 Spark jobs on perfbench's
+``resume_two_pass`` input: the gate's checkpoint and the commit's member
+writes. It runs the parse UDF in one of them, in one Python task per
+Arrow batch of new rows (``maxRecordsPerBatch``, counted from the new
+files' footers), not one per input file: a Python UDF task costs about
+0.2 CPU-s before it reads a row. The held chunks' ages ride through the
+gate, so no join brings them back. Every read names the schema its
+manifest recorded, so none starts a parquet schema-inference job, and the
+lineage rows reach the JVM as Arrow and are written as one file.
 
 Crash safety: the single TableGroup commit has NO duplicate-append window —
 either the CURRENT swap happened (all tables advanced together) or it
@@ -157,7 +161,13 @@ def _run_job_once(
     pinned_before = persistent_rdd_ids(spark)
     tagged = None
     try:
-        parsed_parts = []
+        # the new files' parquet footers, read once: they size the parse
+        # below and are the lineage rows' counts
+        new_files = (
+            chunks_table.incremental_files(last_processed) if new_chunks is not None else []
+        )
+        new_file_rows = _file_rows(new_files)
+        parsed = None
         rejects = None
         if new_chunks is not None:
             # dead-letter split: a malformed envelope parses to null fields
@@ -165,19 +175,22 @@ def _run_job_once(
             # it — the reject stream makes corrupt input first-class data
             # instead (the reference logs-and-skips; parse.py:85-). Cached,
             # so the gate input and the rejects member read one evaluation
-            # of the parse UDF.
-            tagged = tag_envelopes(new_chunks).cache()
-            ok, rejects = split_tagged(tagged)
-            parsed_parts.append(ok)
-        prev_held = None
+            # of the parse UDF. Sized by rows, not files: a Python task
+            # costs a fixed ~0.2 CPU-s before its first row, so the new
+            # chunks are parsed in one task per Arrow batch of rows.
+            # ``coalesce`` never splits, so a large input keeps its splits.
+            tagged = tag_envelopes(
+                new_chunks.coalesce(_parse_tasks(spark, sum(new_file_rows)))
+            ).cache()
+            parsed, rejects = split_tagged(tagged)
         if state.held.exists():
-            prev_held = state.held.read(spark)
-            parsed_parts.append(
-                prev_held.select("doc_id", "session", "seq", "chunk_tokens", "source")
+            # held chunks carry ``first_held_run`` into the gate, which keeps
+            # the least one among equal seqs; new chunks carry none
+            held = state.held.read(spark)
+            parsed = (
+                held if parsed is None
+                else parsed.unionByName(held, allowMissingColumns=True)
             )
-        parsed = parsed_parts[0]
-        for p in parsed_parts[1:]:
-            parsed = parsed.unionByName(p)
 
         # lineage over this pass's *new* input. Default 'metadata': parquet
         # footers + manifest diff — no second data scan (at 100 TB a lineage
@@ -188,9 +201,7 @@ def _run_job_once(
         elif lineage_mode == "scan":
             lin = lineage_records(new_chunks)
         else:
-            lin = lineage_from_files(
-                spark, chunks_table.incremental_files(last_processed)
-            )
+            lin = lineage_from_files(spark, new_files, new_file_rows)
 
         run_id = current_snap or 0
         # age unit for the held cache: the group's own pass counter (one
@@ -208,28 +219,13 @@ def _run_job_once(
         )
 
         # held cache with age tracking: a chunk held before keeps its
-        # original first_held_run (in group-pass units); a newly-held one is
-        # stamped with this pass. Broadcast the carry-forward join only when
-        # the cache is BOUNDED (held_max_age_runs set): with the unbounded
-        # default the held table is exactly the one documented as growing
-        # without limit, and force-broadcasting it risks driver OOM at scale
-        # — let AQE choose.
+        # original first_held_run (in group-pass units), carried through the
+        # gate; a newly-held one is stamped with this pass.
         held_full = held_from_flags(flagged)
-        if prev_held is not None and "first_held_run" in prev_held.columns:
-            prev_ages = prev_held.select("doc_id", "session", "seq", "first_held_run")
-            if held_max_age_runs is not None:
-                prev_ages = F.broadcast(prev_ages)
-            held_full = held_full.join(
-                prev_ages, ["doc_id", "session", "seq"], "left"
-            )
-            held_full = held_full.withColumn(
-                "first_held_run",
-                F.coalesce(F.col("first_held_run"), F.lit(pass_id)).cast("long"),
-            )
-        else:
-            held_full = held_full.withColumn(
-                "first_held_run", F.lit(pass_id).cast("long")
-            )
+        first_held = F.lit(pass_id)
+        if "first_held_run" in held_full.columns:
+            first_held = F.coalesce(F.col("first_held_run"), first_held)
+        held_full = held_full.withColumn("first_held_run", first_held.cast("long"))
         quarantined = None
         if held_max_age_runs is not None:
             too_old = F.col("first_held_run") <= F.lit(pass_id - held_max_age_runs)
@@ -254,7 +250,8 @@ def _run_job_once(
         )
 
         wall = time.perf_counter() - t_start
-        summary_df = lin.withColumn("run_id", F.lit(run_id).cast("long"))
+        # one metrics file per pass: a few lineage rows need no more tasks
+        summary_df = lin.withColumn("run_id", F.lit(run_id).cast("long")).coalesce(1)
 
         # ---- ONE atomic commit covering all state tables -----------------
         tables = {
@@ -290,9 +287,10 @@ def _run_job_once(
         "wall_sec": round(time.perf_counter() - t_start, 3),
         "sink_counts": _committed_sink_counts(state.routed.added_files(snap)),
         "rejects": (
-            _footer_rows(state.rejects.added_files(snap)) if rejects is not None else 0
+            sum(_file_rows(state.rejects.added_files(snap)))
+            if rejects is not None else 0
         ),
-        "held": _footer_rows(state.held.added_files(snap)),
+        "held": sum(_file_rows(state.held.added_files(snap))),
     }
 
 
@@ -309,11 +307,18 @@ def _committed_sink_counts(files: list[str]) -> dict:
     return dict(zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()))
 
 
-def _footer_rows(files: list[str]) -> int:
-    """Rows in parquet ``files``, summed from their footers."""
+def _file_rows(files: list[str]) -> list[int]:
+    """Rows in each parquet file of ``files``, read from its footer."""
     import pyarrow.parquet as pq
 
-    return sum(pq.read_metadata(f).num_rows for f in files)
+    return [pq.read_metadata(f).num_rows for f in files]
+
+
+def _parse_tasks(spark: SparkSession, rows: int) -> int:
+    """Tasks for parsing ``rows`` new chunks: one per Arrow batch
+    (``spark.sql.execution.arrow.maxRecordsPerBatch``), at least one."""
+    batch = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    return max(1, -(-rows // batch))
 
 
 def requeue_quarantine(spark: SparkSession, state: JobState) -> int:

@@ -91,7 +91,9 @@ def lineage_records(df: DataFrame) -> DataFrame:
     return with_file.mapInPandas(gen, schema=LINEAGE_SCHEMA)
 
 
-def lineage_from_files(spark, files: list[str]) -> DataFrame:
+def lineage_from_files(
+    spark, files: list[str], rows: list[int] | None = None
+) -> DataFrame:
     """Metadata-only lineage: parquet footers already carry exact per-file
     row counts, so provenance costs one footer read per file instead of a
     second full data scan (at 100 TB, ``lineage_records`` doubles read I/O
@@ -100,7 +102,9 @@ def lineage_from_files(spark, files: list[str]) -> DataFrame:
     and ``wall_ms`` 0 — file identity, row count and bytes are the columns
     downstream auditing actually joins on. Driver-side footer loop: fine to
     ~10⁵ files per pass; beyond that, distribute with a parallelized read
-    of the same footers. Rows go through Arrow (see the module docstring)."""
+    of the same footers. ``rows``: the files' row counts, when the caller
+    has already read those footers. Rows go through Arrow (see the module
+    docstring)."""
     import os
 
     import pyarrow as pa
@@ -111,7 +115,9 @@ def lineage_from_files(spark, files: list[str]) -> DataFrame:
         {
             "partition_id": [-1] * len(files),
             "input_file": files,
-            "n_rows": [pq.read_metadata(f).num_rows for f in files],
+            "n_rows": (
+                rows if rows is not None else [pq.read_metadata(f).num_rows for f in files]
+            ),
             "n_bytes": [os.path.getsize(f) for f in files],
             "wall_ms": [0] * len(files),
         },

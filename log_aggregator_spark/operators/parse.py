@@ -3,17 +3,20 @@
 The reference extracts (id, session, seq) from the cached-chunk filename with
 a per-file regex match (``/root/reference/datadecoder/.../PBLogFile.java:17-27``,
 pattern ``(.*)_(\\d*)_(\\d*)\\.pbData``). Here the same extraction runs as ONE
-Arrow-batched pandas UDF over the envelope column — ``pandas.Series.str.extract``
-is a single vectorized C call per batch, never per-row Python (BASELINE.json
+Arrow UDF over the envelope column: each Arrow batch reaches Python as a
+``pa.Array``, RE2 (``pyarrow.compute.extract_regex``) matches it in C++ and
+the (doc_id, session, seq) struct goes back as a ``pa.StructArray`` — no
+pandas conversion either way, never per-row Python (BASELINE.json
 ``input_hint``).
 
 A pure-JVM variant (three ``regexp_extract`` calls, whole-stage codegen) is
-provided as well; the pipeline default is chosen by benchmark (see bench.py).
+kept behind ``jvm=True`` as a cross-check of the Arrow path's keys and
+null semantics; it is not faster.
 """
 
 from __future__ import annotations
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,27 +32,20 @@ _PARSE_SCHEMA = T.StructType(
 )
 
 
-@F.pandas_udf(_PARSE_SCHEMA)
-def _parse_envelope_udf(env: pd.Series) -> pd.DataFrame:
-    """Arrow-native extraction: the batch goes straight back into a pyarrow
-    StringArray and RE2 (`pyarrow.compute.extract_regex`) does the match in
-    C++ — ~5-10x faster than pandas ``str.extract``, which loops Python
-    ``re`` per element. Same named-group pattern, same null semantics
-    (non-matching envelope → null fields)."""
-    import pyarrow as pa
+@F.arrow_udf(_PARSE_SCHEMA)
+def _parse_envelope_udf(env: pa.Array) -> pa.Array:
+    """envelope batch → (doc_id, session, seq) struct batch. A non-matching
+    envelope gets null fields."""
     import pyarrow.compute as pc
 
-    arr = pa.Array.from_pandas(env)
-    ext = pc.extract_regex(arr, spec.ENVELOPE_REGEX_NAMED)
-    doc_id = pc.struct_field(ext, "doc_id")
-    session = pc.cast(pc.struct_field(ext, "session"), pa.int64())
-    seq = pc.cast(pc.struct_field(ext, "seq"), pa.int64())
-    return pd.DataFrame(
-        {
-            "doc_id": doc_id.to_pandas(),
-            "session": session.to_pandas(),
-            "seq": seq.to_pandas(),
-        }
+    ext = pc.extract_regex(env, spec.ENVELOPE_REGEX_NAMED)
+    return pa.StructArray.from_arrays(
+        [
+            pc.cast(pc.struct_field(ext, "doc_id"), pa.string()),
+            pc.cast(pc.struct_field(ext, "session"), pa.int64()),
+            pc.cast(pc.struct_field(ext, "seq"), pa.int64()),
+        ],
+        names=["doc_id", "session", "seq"],
     )
 
 

@@ -236,7 +236,7 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
     zero = (F.col("seq") == 0) & (F.col("last_seq") == 0)
     anchor = F.first(F.when(F.col("seq") > 0, F.col("seq")), ignorenulls=True).over(w_run)
     anchor_rank = F.lit(1) + F.max(F.when(zero, 1).otherwise(0)).over(w_run)
-    return (
+    flags = (
         live.withColumn("_first", F.lag("seq").over(w).isNull() | (F.lag("seq").over(w) != F.col("seq")))
         # deterministic survivor payload: least among equal seqs (peer
         # frames are size 1 except for duplicate seqs, so the array
@@ -262,6 +262,16 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
         )
         .drop("_dr")
     )
+    if "first_held_run" in live.columns:
+        # a held chunk that arrives again (as a new duplicate) keeps the
+        # pass that first held it: the least among equal seqs, nulls (never
+        # held) ignored. Added last, so it joins the anchor's WindowExec
+        # (aggregate frames only): beside the lag's frame, whose key in
+        # Spark's frame map holds expression ids, the generated window code
+        # changed from one pass to the next on the same input, and a
+        # repeated pass recompiled it.
+        flags = flags.withColumn("first_held_run", F.min("first_held_run").over(w_peer))
+    return flags
 
 
 def reassemble_sql(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFrame:
@@ -384,11 +394,12 @@ def reassemble_agg(parsed: DataFrame, checkpoint: DataFrame | None = None) -> Da
 
 def held_from_flags(flagged: DataFrame) -> DataFrame:
     """Held chunks (full payloads) from a materialized ``_gate_flags``
-    output — see ``reassemble_from_flags``."""
-    return (
-        flagged.where(~F.col("accepted") & F.col("_first"))
-        .select("doc_id", "session", "seq", "chunk_tokens", "source")
-    )
+    output — see ``reassemble_from_flags``. Keeps ``first_held_run`` when
+    the gate input carried it."""
+    cols = ["doc_id", "session", "seq", "chunk_tokens", "source"]
+    if "first_held_run" in flagged.columns:
+        cols.append("first_held_run")
+    return flagged.where(~F.col("accepted") & F.col("_first")).select(*cols)
 
 
 def held_back(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFrame:

@@ -69,7 +69,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big Arrow batches: the parse UDF ships only a string column per
         # row — 64k rows ≈ 2.5 MB per batch, and fewer Python round-trips
-        # matter more than batch memory here...
+        # matter more than batch memory here. run_job also parses its new
+        # chunks in one Python task per this many rows (job._parse_tasks)...
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # ...but the row cap alone is wrong for WIDE rows: 64k rows of 64 KB
         # media payloads would be a ~4 GiB Arrow batch. The byte cap closes

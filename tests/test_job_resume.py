@@ -94,6 +94,32 @@ def _parse_executions(spark, since: set[int]) -> list[int]:
     return hits
 
 
+def _parse_stage_tasks(spark, eid: int) -> dict[int, int]:
+    """Tasks per stage of SQL execution ``eid`` that ran the parse UDF: a
+    stage whose RDD graph holds an ``ArrowEvalPython`` scope and no
+    ``InMemoryTableScan`` one. (A stage that reads the cached parse shows
+    the UDF's scope under the scan, but takes its rows from storage.)"""
+    app = spark.sparkContext._jsc.sc().statusStore()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def scopes(cluster) -> set[str]:
+        names = set()
+        children = cluster.childClusters()
+        for i in range(children.size()):
+            names.add(children.apply(i).name())
+            names |= scopes(children.apply(i))
+        return names
+
+    tasks = {}
+    it = store.execution(eid).get().stages().iterator()
+    while it.hasNext():
+        sid = it.next()
+        names = scopes(app.operationGraphForStage(sid).rootCluster())
+        if "ArrowEvalPython" in names and "InMemoryTableScan" not in names:
+            tasks[sid] = app.lastStageAttempt(sid).numCompleteTasks()
+    return tasks
+
+
 def _pinned(spark) -> tuple[set[int], bool]:
     """RDDs pinned in executor storage, and whether the session's cache
     manager holds nothing."""
@@ -243,9 +269,11 @@ def test_resume_pass_job_budget(spark, docs, tmp_path):
     parquet footers; with counts read from the committed files, schemas
     from the manifests and lineage rows sent as Arrow it started 15. With
     the gate held in a local checkpoint instead of a parquet staging copy,
-    and the checkpoint member merged in one aggregate, it starts 14. A
-    change that brings back a recount, an inferred read or a second
-    reassembly aggregate fails here."""
+    and the checkpoint member merged in one aggregate, it started 14. With
+    the held chunks' ages carried through the gate instead of joined back
+    in their own broadcast job, it starts 13. A change that brings back a
+    recount, an inferred read, a second reassembly aggregate or a held-age
+    join fails here."""
     chunks = chunker.chunks(docs)
     routes = _routes(docs)
     seq = F.regexp_extract("envelope", r"_(\d+)\.pbData$", 1).cast("long")
@@ -259,7 +287,7 @@ def test_resume_pass_job_budget(spark, docs, tmp_path):
     r = run_job(spark, ct, routes, state)
     n_jobs = len(_job_ids(spark) - before)
     assert r["status"] == "ok" and r["sink_counts"]
-    assert n_jobs <= 14, f"second pass started {n_jobs} Spark jobs"
+    assert n_jobs <= 13, f"second pass started {n_jobs} Spark jobs"
 
 
 def test_resume_pass_parses_once(spark, tmp_path):
@@ -273,6 +301,23 @@ def test_resume_pass_parses_once(spark, tmp_path):
     hits = _parse_executions(spark, before)
     assert len(hits) == 1, f"parse UDF ran in executions {hits}"
     assert state.rejects.read(spark).count() == 1
+
+
+def test_resume_pass_parses_in_one_task(spark, tmp_path):
+    """The new chunks are parsed in one Python task per Arrow batch of
+    rows, not one per input file: a Python UDF task costs about 0.2 CPU-s
+    before its first row. The three chunk rows here sit in four files
+    (one of them empty), which gave four parse tasks. The pass also writes
+    its lineage rows as one ``metrics`` file, not one per input file."""
+    ct, routes, state = _small_input(spark, tmp_path)
+    assert len(ct.incremental_files(None)) > 1
+    before = _execution_ids(spark)
+    assert run_job(spark, ct, routes, state)["status"] == "ok"
+    (eid,) = _parse_executions(spark, before)
+    tasks = _parse_stage_tasks(spark, eid)
+    assert list(tasks.values()) == [1], f"parse tasks per stage: {tasks}"
+    assert len(state.metrics.added_files()) == 1
+    assert state.metrics.read(spark).count() == len(ct.incremental_files(None))
 
 
 def test_repeated_pass_compiles_no_code(spark, docs, tmp_path):
@@ -769,6 +814,38 @@ def test_held_cache_ages_out_to_quarantine(spark, tmp_path):
     # and the stream's accepted prefix was emitted exactly once in run 1
     routed = state.routed.read(spark)
     assert routed.where("doc_id = 'd'").count() == 1
+
+
+def test_redelivered_held_chunk_keeps_its_age(spark, tmp_path):
+    """A held chunk that arrives again as a new duplicate keeps the pass
+    that first held it: its age is carried through the gate, so a chunk
+    re-sent while its gap stays open still reaches quarantine on time."""
+    schema = "doc_id string, session long, seq long, chunk_tokens array<int>, source string"
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+
+    def commit(rows):
+        ct.commit(encode_envelope(spark.createDataFrame(rows, schema=schema)).select(
+            "envelope", "chunk_tokens", "source"))
+
+    commit([("d", 10, 1, [1], "src1"), ("d", 10, 2, [2], "src1"),
+            ("d", 10, 5, [5], "src1")])
+    run_job(spark, ct, routes, state, held_max_age_runs=2)  # pass 1 holds seq 5
+    commit([("d", 10, 5, [5], "src1"), ("e", 10, 1, [1], "src1")])
+    run_job(spark, ct, routes, state, held_max_age_runs=2)
+    held = state.held.read(spark).collect()
+    assert [(r["seq"], r["first_held_run"]) for r in held] == [(5, 1)]
+
+    commit([("d", 10, 5, [5], "src1")])
+    run_job(spark, ct, routes, state, held_max_age_runs=2)
+    assert state.held.read(spark).count() == 0
+    q = state.quarantine.read(spark).collect()
+    assert [(r["seq"], r["first_held_run"], list(r["chunk_tokens"])) for r in q] == [
+        (5, 1, [5])
+    ]
 
 
 def test_job_routes_malformed_envelopes_to_rejects(spark, tmp_path):
