@@ -413,7 +413,7 @@ def run_pipeline_job(spark, chunks_path: str, write_out: str | None = None,
     chunks = spark.read.parquet(chunks_path)
 
     t0 = time.perf_counter()
-    res = run_pipeline(chunks, routes, checkpoint=None, strategy="sql")
+    res = run_pipeline(chunks, routes, checkpoint=None)
     sec_write = None
     if write_out is not None:
         # fan-out write IS the routed sink; aggregates then scan the routed

@@ -20,7 +20,7 @@ from .functions import similarity as fsim
 from .functions import text as ftext
 from .operators.merge import merge_upsert
 from .operators.parse import parse_envelope, split_rejects
-from .operators.reassemble import held_back, held_back_full, reassemble_sql
+from .operators.reassemble import _gate_flags, held_back, held_from_flags, reassemble_sql
 from .plans.pipeline import run_pipeline
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -36,7 +36,6 @@ def _pipeline(spark: SparkSession, sf_dir: str):
         chunker.chunks(docs),
         chunker.routes_table(docs),
         chunker.checkpoint_table(docs),
-        strategy="sql",
     )
 
 
@@ -144,7 +143,7 @@ def q_pipeline_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     p2 = parsed.where(F.col("seq") > 2)
 
     r1 = reassemble_sql(p1, ckpt0)
-    held1 = held_back_full(p1, ckpt0)
+    held1 = held_from_flags(_gate_flags(p1, ckpt0))
     ck1 = r1.selectExpr("doc_id", "session", "cast(last_seq_out as long) as last_seq")
     ckpt1 = ck1.unionByName(
         ckpt0.join(ck1.select("doc_id", "session"), ["doc_id", "session"], "left_anti")

@@ -64,7 +64,7 @@ import time
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .lineage import lineage_from_files, lineage_records
+from .lineage import lineage_from_files
 from .operators.enrich import enrich
 from .operators.parse import split_tagged, tag_envelopes
 from .operators.reassemble import (
@@ -73,7 +73,7 @@ from .operators.reassemble import (
     reassemble_from_flags,
 )
 from .session import persistent_rdd_ids, unpersist_rdds
-from .tableio import SnapshotTable, TableGroup
+from .tableio import ConcurrentCommitError, SnapshotTable, TableGroup
 
 
 class JobState:
@@ -98,7 +98,6 @@ def run_job(
     routes,
     state: JobState,
     held_max_age_runs: int | None = None,
-    lineage_mode: str = "metadata",
     retries: int = 0,
 ) -> dict:
     """See ``_run_job_once``. ``retries``: on ``ConcurrentCommitError``
@@ -106,14 +105,11 @@ def run_job(
     re-run the pass up to N more times — the loser's recomputation then
     stands on the winner's committed checkpoint, so work is neither lost
     nor doubled. 0 (default) = propagate immediately."""
-    from .tableio import ConcurrentCommitError
-
     for attempt in range(retries + 1):
         try:
             return _run_job_once(
                 spark, chunks_table, routes, state,
                 held_max_age_runs=held_max_age_runs,
-                lineage_mode=lineage_mode,
             )
         except ConcurrentCommitError:
             if attempt == retries:
@@ -127,7 +123,6 @@ def _run_job_once(
     routes,
     state: JobState,
     held_max_age_runs: int | None = None,
-    lineage_mode: str = "metadata",
 ) -> dict:
     """One resumable pass. Returns a run summary dict.
 
@@ -139,9 +134,8 @@ def _run_job_once(
     being re-gated forever — the batch counterpart of the streaming state
     TTL. None (default) = keep forever (reference-faithful).
 
-    ``lineage_mode``: 'metadata' (default — manifest diff + parquet
-    footers, zero extra data I/O), 'scan' (mapInPandas pass: per-partition
-    wall times, works on any input), or 'off'."""
+    Lineage rows come from metadata alone (the manifest diff and the new
+    files' parquet footers), so they cost no second scan of the input."""
     t_start = time.perf_counter()
     last_processed = None
     ckpt_df = None
@@ -192,16 +186,10 @@ def _run_job_once(
                 else parsed.unionByName(held, allowMissingColumns=True)
             )
 
-        # lineage over this pass's *new* input. Default 'metadata': parquet
-        # footers + manifest diff — no second data scan (at 100 TB a lineage
-        # scan doubles read I/O). 'scan' keeps the per-task mapInPandas pass
-        # (per-partition wall times, arbitrary inputs); 'off' skips.
-        if new_chunks is None or lineage_mode == "off":
-            lin = lineage_from_files(spark, [])
-        elif lineage_mode == "scan":
-            lin = lineage_records(new_chunks)
-        else:
-            lin = lineage_from_files(spark, new_files, new_file_rows)
+        # lineage over this pass's *new* input, from parquet footers and
+        # the manifest diff — no second data scan (at 100 TB a lineage scan
+        # doubles read I/O)
+        lin = lineage_from_files(spark, new_files, new_file_rows)
 
         run_id = current_snap or 0
         # age unit for the held cache: the group's own pass counter (one

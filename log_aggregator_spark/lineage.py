@@ -1,13 +1,13 @@
 """Per-partition lineage capture (north rule: "per-partition lineage records
 (input files, row counts, bytes, wall time) emitted to a metrics table").
 
-``lineage_records`` runs as a ``mapInPandas`` scan over the input: each task
-emits one record per (partition, input file) with row count, byte estimate
-and the partition's wall time — all computed batch-vectorized, no per-row
-Python. ``input_file_name()`` is Spark's own file provenance; partition id
+``lineage_records`` runs as a ``mapInPandas`` scan over the input (the
+tests' reference for the footer counts below): each task emits one record
+per (partition, input file) with row count, byte estimate and the
+partition's wall time — all computed batch-vectorized, no per-row Python. ``input_file_name()`` is Spark's own file provenance; partition id
 comes from ``TaskContext`` inside the worker.
 
-``lineage_from_files`` (the ``run_job`` default) reads parquet footers
+``lineage_from_files`` (what ``run_job`` records) reads parquet footers
 only, and builds its rows through Arrow: they reach Spark as one
 ``pyarrow.Table`` that the JVM decodes. A Python list would become a
 pickled Python RDD, and writing it to the metrics table would start a
@@ -16,8 +16,8 @@ Python worker.
 The reference's nearest analog is the server's running chunk counter
 (``/root/reference/server/.../LogServerController.java:156-158,181-188``)
 plus its per-chunk log lines; here lineage is first-class data, appended to
-a ``SnapshotTable`` per run by ``job.py`` so every snapshot's provenance is
-queryable.
+the state group's ``metrics`` member on every ``job.py`` pass so every
+snapshot's provenance is queryable.
 """
 
 from __future__ import annotations

@@ -8,10 +8,6 @@ Arrow UDF over the envelope column: each Arrow batch reaches Python as a
 the (doc_id, session, seq) struct goes back as a ``pa.StructArray`` — no
 pandas conversion either way, never per-row Python (BASELINE.json
 ``input_hint``).
-
-A pure-JVM variant (three ``regexp_extract`` calls, whole-stage codegen) is
-kept behind ``jvm=True`` as a cross-check of the Arrow path's keys and
-null semantics; it is not faster.
 """
 
 from __future__ import annotations
@@ -56,53 +52,24 @@ def _parse_envelope_udf(env: pa.Array) -> pa.Array:
 _parse_envelope_udf = _parse_envelope_udf.asNondeterministic()
 
 
-def parse_envelope(chunks: DataFrame, jvm: bool = False) -> DataFrame:
+def parse_envelope(chunks: DataFrame) -> DataFrame:
     """chunks(envelope, chunk_tokens, source) →
     (doc_id, session, seq, chunk_tokens, source)."""
-    if jvm:
-        parsed = chunks.select(
-            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 1).alias("doc_id"),
-            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 2).cast("long").alias("session"),
-            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3).cast("long").alias("seq"),
-            "chunk_tokens",
-            "source",
-        )
-    else:
-        parsed = chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope"))).select(
-            F.col("_p.doc_id").alias("doc_id"),
-            F.col("_p.session").alias("session"),
-            F.col("_p.seq").alias("seq"),
-            "chunk_tokens",
-            "source",
-        )
-    return parsed
+    return tag_envelopes(chunks).select(
+        F.col("_p.doc_id").alias("doc_id"),
+        F.col("_p.session").alias("session"),
+        F.col("_p.seq").alias("seq"),
+        "chunk_tokens",
+        "source",
+    )
 
 
-def tag_envelopes(chunks: DataFrame, jvm: bool = False) -> DataFrame:
+def tag_envelopes(chunks: DataFrame) -> DataFrame:
     """chunks plus ``_p``, the parsed (doc_id, session, seq) struct. An
     envelope that fails the regex gets a null ``_p.doc_id``. The one parse
     evaluation that ``split_tagged`` derives both streams from — a caller
     that caches this frame parses each envelope once."""
-    if not jvm:
-        return chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope")))
-    # Non-match detection keys on the seq group: ``(\d+)`` cannot match
-    # empty, so ``regexp_extract(...) == ''`` ⇔ the envelope failed the
-    # pattern. (doc_id's ``(.*)`` group legitimately matches empty —
-    # '_3_7.pbData' is a valid envelope with doc_id '' — so nullif on
-    # group 1 would reject it here while the Arrow path accepts it.)
-    matched = F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3) != F.lit("")
-    return chunks.withColumn(
-        "_p",
-        F.struct(
-            F.when(
-                matched, F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 1)
-            ).alias("doc_id"),
-            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 2)
-            .cast("long").alias("session"),
-            F.regexp_extract("envelope", spec.ENVELOPE_REGEX, 3)
-            .cast("long").alias("seq"),
-        ),
-    )
+    return chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope")))
 
 
 def split_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -118,7 +85,7 @@ def split_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
     return ok, rejects
 
 
-def split_rejects(chunks: DataFrame, jvm: bool = False) -> tuple[DataFrame, DataFrame]:
+def split_rejects(chunks: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Dead-letter split: (parsed_ok, rejects). An envelope that fails the
     regex parses to null fields; at 100 TB silently dropping (or crashing
     on) malformed input is not an option — the reject stream keeps the
@@ -126,7 +93,7 @@ def split_rejects(chunks: DataFrame, jvm: bool = False) -> tuple[DataFrame, Data
     parsed keys only. One pass over the parse output, no second regex
     evaluation (the reference logs-and-skips unparseable cached files; here
     the skipped set is first-class data)."""
-    return split_tagged(tag_envelopes(chunks, jvm))
+    return split_tagged(tag_envelopes(chunks))
 
 
 def encode_envelope(df: DataFrame) -> DataFrame:

@@ -13,22 +13,23 @@ Reproduces the reference decoder's semantics (SURVEY.md §2 S10–S13):
 * resume: per-(doc_id, session) ``last_seq`` checkpoint
   (``/root/reference/datadecoder/.../SequenceTracker.java:105-113`` — absent ⇒ 0)
 
-Two physical strategies, same semantics (cross-checked in tests):
+One batch plan, ``reassemble_sql``: pure built-in window/aggregate
+operators (the gap cut is ``seq`` minus the running count of distinct
+seqs), whole-stage codegen, no Python. ``job.py`` runs its two halves
+(``_gate_flags``, then ``reassemble_from_flags``/``held_from_flags``)
+around one materialization. The streaming path runs the same decision per
+key in numpy (``gate_select``); ``oracle_pandas.reassemble_oracle`` is the
+test reference both are checked against.
 
-``reassemble``      — ``groupBy(doc_id, session).applyInPandas`` with a fully
-                      numpy-vectorized kernel. One shuffle on the group key;
-                      per-key single-writer discipline falls out of Spark's
-                      partitioning (the reference needed a dedicated
-                      single-threaded executor for this,
-                      ``datadecoder/.../AppConfig.java:16-27``).
-``reassemble_sql``  — pure built-in window/aggregate plan (lag-free gap cut via
-                      ``seq - row_number()``), whole-stage codegen, no Python.
-
-At 100 TB: both shuffle once on (doc_id, session) — the minimum possible, since
-reassembly is a per-stream total order. AQE handles skew in doc sizes; the
-pandas variant bounds memory per group by the doc length (≤ a few MB), the SQL
-variant spills via Tungsten sort. ``reassemble_sql`` is the default in the
-pipeline (codegen beats Arrow transfer; see BENCH).
+At 100 TB: the plan shuffles once on (doc_id, session) — the minimum
+possible, since reassembly is a per-stream total order — and per-key
+single-writer discipline falls out of Spark's partitioning (the reference
+needed a dedicated single-threaded executor for this,
+``datadecoder/.../AppConfig.java:16-27``). AQE handles skew in doc sizes;
+the window sort spills via Tungsten. A grouped pandas-UDF kernel and a
+higher-order-function aggregate compute the same gate, but measured slower
+on a 500k-doc corpus at ``local[32]``: 112 s and 14.3 s against this
+plan's 4.6 s.
 """
 
 from __future__ import annotations
@@ -37,11 +38,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-_OUT_SCHEMA = (
-    "doc_id string, session long, tokens array<int>, n_tok long, source string, "
-    "last_seq_out long"
-)
 
 
 def _with_last_seq(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
@@ -77,8 +73,9 @@ def payload_ranks(seqs: np.ndarray, arrays) -> np.ndarray | None:
 def gate_select(
     seqs: np.ndarray, last: int, payload_rank: np.ndarray | None = None
 ) -> tuple[np.ndarray, int, np.ndarray]:
-    """The pure gate decision, shared by the batch kernel and the streaming
-    state kernel: given raw (possibly shuffled, duplicated) seqs and the
+    """The pure gate decision of the streaming state kernel, in numpy (the
+    batch plan computes the same decision with window functions, see
+    ``_gate_flags``): given raw (possibly shuffled, duplicated) seqs and the
     stream's ``last`` state, return (accepted original indices in emit
     order, new last, held original indices — dedupe'd live chunks past the
     first gap).
@@ -86,11 +83,12 @@ def gate_select(
     Duplicate-seq survivor rule: the reference collector keeps the FIRST
     arrival (PBLogFileCollector.java:67-70) — but arrival order does not
     survive a distributed shuffle, so "first" is not reproducible here.
-    This engine's rule, uniform across all three batch strategies and the
-    streaming gate: among rows with equal seq, the lexicographically-least
-    token payload wins (deterministic, retry/speculation-stable, and
-    identical to first-wins whenever duplicate payloads are identical —
-    the only case the reference's own corpus produces). ``payload_rank``
+    This engine's rule, uniform across the batch plan, the streaming gate
+    and the test oracle: among rows with equal seq, the
+    lexicographically-least token payload wins (deterministic,
+    retry/speculation-stable, and identical to first-wins whenever
+    duplicate payloads are identical — the only case the reference's own
+    corpus produces). ``payload_rank``
     carries that ordering; None means the caller verified there are no
     duplicate seqs (or accepts arbitrary survivor choice).
 
@@ -134,54 +132,6 @@ def gate_select(
     if take_zero is not None:
         idx = np.concatenate([[take_zero], idx]).astype(idx.dtype)
     return idx, new_last, held
-
-
-def _gate_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized per-(doc_id, session) gate + concat (``gate_select`` on
-    numpy arrays — no per-row Python)."""
-    last = int(pdf["last_seq"].iloc[0])
-    seqs = pdf["seq"].to_numpy()
-    ranks = payload_ranks(seqs, pdf["chunk_tokens"].to_numpy())
-    idx, new_last, _held = gate_select(seqs, last, ranks)
-    if len(idx) == 0:
-        return _empty_out()
-
-    arrays = pdf["chunk_tokens"].to_numpy()[idx]
-    tokens = np.concatenate([np.asarray(a, dtype=np.int32) for a in arrays]) if len(arrays) else np.array([], dtype=np.int32)
-    return pd.DataFrame(
-        {
-            "doc_id": [pdf["doc_id"].iloc[0]],
-            "session": [pdf["session"].iloc[0]],
-            "tokens": [tokens],
-            "n_tok": [len(tokens)],
-            "source": [pdf["source"].iloc[0]],
-            "last_seq_out": [new_last],
-        }
-    )
-
-
-def _empty_out() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "doc_id": pd.Series([], dtype=object),
-            "session": pd.Series([], dtype="int64"),
-            "tokens": pd.Series([], dtype=object),
-            "n_tok": pd.Series([], dtype="int64"),
-            "source": pd.Series([], dtype=object),
-            "last_seq_out": pd.Series([], dtype="int64"),
-        }
-    )
-
-
-def reassemble(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFrame:
-    """parsed(doc_id, session, seq, chunk_tokens, source) →
-    (doc_id, session, tokens, n_tok, source, last_seq_out), one row per stream
-    that emitted anything this run."""
-    return (
-        _with_last_seq(parsed, checkpoint)
-        .groupBy("doc_id", "session")
-        .applyInPandas(_gate_kernel, schema=_OUT_SCHEMA)
-    )
 
 
 def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
@@ -275,7 +225,9 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
 
 
 def reassemble_sql(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFrame:
-    """Same semantics as ``reassemble``, pure built-ins (no Python)."""
+    """parsed(doc_id, session, seq, chunk_tokens, source) →
+    (doc_id, session, tokens, n_tok, source, last_seq_out), one row per
+    stream that emitted anything this run. Pure built-ins (no Python)."""
     return reassemble_from_flags(_gate_flags(parsed, checkpoint))
 
 
@@ -309,93 +261,11 @@ def reassemble_from_flags(flagged: DataFrame) -> DataFrame:
     )
 
 
-def reassemble_agg(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFrame:
-    """Same semantics as ``reassemble``/``reassemble_sql``, third physical
-    strategy: ONE hash aggregate, ZERO window passes.
-
-    ``reassemble_sql`` pays an exchange + full sort + two WindowExec
-    materializations of every chunk row before it even starts aggregating —
-    at 10^12 rows that is the dominant memory traffic. Here the gate runs
-    *inside* the aggregated row: ``collect_list`` gathers each stream's
-    chunks (hash agg, partial on the map side), ``array_sort`` orders the
-    ~tens of per-stream items, and one ``aggregate`` higher-order function
-    replays the reference's gate loop (DataPumpDecoderSort.java:142-181)
-    over the sorted items — duplicate skip, init rule, zero rule, first-gap
-    stop — exactly the loop shape, but per aggregated row instead of per
-    window frame. The accumulator appends chunk *references* into an
-    array-of-arrays (pointer copies, not token copies) and flattens once at
-    the end, so token bytes are touched exactly once.
-
-    Whole plan: scan → parse → one shuffle on (doc_id, session) → hash agg →
-    codegen'd HOF projection. Measured (500k-doc synth corpus, local[32],
-    min-of-2 after warm-up): sql 4.6 s, agg 14.3 s, pandas 112 s — the HOF
-    gate's interpreted expression tree loses to the window plan's
-    whole-stage codegen, and ObjectHashAggregate falls back to sort-based
-    past 128 keys per partition. Kept as the third cross-check strategy
-    and as the shape a future codegen'd aggregate could win with;
-    ``reassemble_sql`` is the production default.
-    """
-    live = _with_last_seq(parsed, checkpoint).where(
-        (F.col("seq") > F.col("last_seq"))
-        | ((F.col("seq") == 0) & (F.col("last_seq") == 0))
-    )
-    grouped = live.groupBy("doc_id", "session").agg(
-        F.array_sort(F.collect_list(F.struct("seq", "chunk_tokens"))).alias("items"),
-        F.first("source").alias("source"),
-        F.first("last_seq").alias("last_seq"),
-    )
-
-    init = F.struct(
-        F.col("last_seq").cast("long").alias("last"),
-        F.lit(-1).cast("long").alias("prev"),  # previous item's seq (dedupe)
-        F.array().cast("array<array<int>>").alias("toks"),
-        F.lit(False).alias("stopped"),
-        F.lit(0).alias("n_acc"),
-    )
-
-    def step(st, it):
-        # duplicate = same seq as the previous sorted item (the reference
-        # collector rejects these on insert, PBLogFileCollector.java:67-70) —
-        # NOT same as the gate's `last`, which is 0 both initially and after
-        # the seq==0 quirk. array_sort on struct(seq, chunk_tokens) ordered
-        # the items by (seq, payload), so the survivor among equal seqs is
-        # the lexicographically-least payload — the same deterministic rule
-        # as the other strategies (see gate_select).
-        dup = it["seq"] == st["prev"]
-        zero = (it["seq"] == 0) & (st["last"] == 0)
-        ok = (~st["stopped"]) & (~dup) & (
-            zero | (it["seq"] == st["last"] + 1) | (st["last"] == 0)
-        )
-        return F.struct(
-            F.when(ok & ~zero, it["seq"]).otherwise(st["last"]).alias("last"),
-            F.when(st["stopped"], st["prev"]).otherwise(it["seq"]).alias("prev"),
-            F.when(ok, F.concat(st["toks"], F.array(it["chunk_tokens"])))
-            .otherwise(st["toks"])
-            .alias("toks"),
-            (st["stopped"] | ((~dup) & (~ok))).alias("stopped"),
-            (st["n_acc"] + F.when(ok, 1).otherwise(0)).alias("n_acc"),
-        )
-
-    return (
-        grouped.withColumn("st", F.aggregate("items", init, step))
-        .where(F.col("st.n_acc") > 0)
-        .select(
-            "doc_id",
-            "session",
-            F.flatten("st.toks").alias("tokens"),
-            F.col("st.n_acc").alias("_n_acc"),
-            "source",
-            F.col("st.last").alias("last_seq_out"),
-        )
-        .withColumn("n_tok", F.size("tokens").cast("long"))
-        .select("doc_id", "session", "tokens", "n_tok", "source", "last_seq_out")
-    )
-
-
 def held_from_flags(flagged: DataFrame) -> DataFrame:
     """Held chunks (full payloads) from a materialized ``_gate_flags``
-    output — see ``reassemble_from_flags``. Keeps ``first_held_run`` when
-    the gate input carried it."""
+    output — see ``reassemble_from_flags``; what ``job.py`` persists as the
+    carry-over cache between runs. Keeps ``first_held_run`` when the gate
+    input carried it."""
     cols = ["doc_id", "session", "seq", "chunk_tokens", "source"]
     if "first_held_run" in flagged.columns:
         cols.append("first_held_run")
@@ -407,18 +277,7 @@ def held_back(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFra
     blocked on a resume gap) — the reference leaves these on disk for a later
     pass ("cache grows", /root/reference/datadecoder/README.md:13-15).
     Returns distinct (doc_id, session, seq)."""
-    return (
-        _gate_flags(parsed, checkpoint)
-        .where(~F.col("accepted") & F.col("_first"))
-        .select("doc_id", "session", "seq")
+    return held_from_flags(_gate_flags(parsed, checkpoint)).select(
+        "doc_id", "session", "seq"
     )
 
-
-def held_back_full(
-    parsed: DataFrame, checkpoint: DataFrame | None = None
-) -> DataFrame:
-    """Like ``held_back`` but with full chunk payloads — what ``job.py``
-    persists as the carry-over cache between runs (the exact analog of the
-    reference leaving unconsumed ``.pbData`` files on disk for the next
-    directory pass, ``/root/reference/datadecoder/README.md:13-15``)."""
-    return held_from_flags(_gate_flags(parsed, checkpoint))

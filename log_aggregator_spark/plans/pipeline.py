@@ -14,6 +14,11 @@ Shuffle inventory (the thing that matters at 10^12 rows):
 Everything before the reassembly shuffle (parse, projections) is narrow and
 pipelined into the shuffle-map stage; Catalyst prunes chunk columns read from
 parquet down to (envelope, chunk_tokens, source).
+
+The gate is ``reassemble_sql``, the one batch reassembly plan. This is the
+stateless form of the pass: the caller supplies the checkpoint and gets
+lazy frames back. ``job._run_job_once`` composes the same operators around
+one materialized gate decision and commits the results to snapshot tables.
 """
 
 from __future__ import annotations
@@ -25,7 +30,7 @@ from pyspark.sql import DataFrame
 from ..operators.aggregate import sink_counts
 from ..operators.enrich import enrich
 from ..operators.parse import split_rejects
-from ..operators.reassemble import held_back, reassemble, reassemble_agg, reassemble_sql
+from ..operators.reassemble import held_back, reassemble_sql
 from ..operators.route import route_write
 
 
@@ -43,26 +48,17 @@ def run_pipeline(
     chunks: DataFrame,
     routes: DataFrame,
     checkpoint: DataFrame | None = None,
-    strategy: str = "sql",
     out_dir: str | None = None,
 ) -> PipelineResult:
-    """strategy: 'sql' (pure built-in window/agg plan, default) or 'pandas'
-    (applyInPandas kernel) — identical semantics, see reassemble.py.
+    """One batch pass, the frames left lazy: the caller decides what to
+    collect or write (``out_dir`` routes the enriched streams there).
 
     Malformed envelopes go to ``result.rejects`` (dead-letter), never into
     the gate: a null doc_id/seq row would silently evaluate false in the
     gate predicates and vanish — at 100 TB, silent drop of corrupt input is
     the one failure mode a pipeline cannot have."""
     parsed, rejects = split_rejects(chunks)
-    if strategy == "pandas":
-        reassembled = reassemble(parsed, checkpoint)
-    elif strategy == "sql":
-        reassembled = reassemble_sql(parsed, checkpoint)
-    elif strategy == "agg":
-        reassembled = reassemble_agg(parsed, checkpoint)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r}")
-
+    reassembled = reassemble_sql(parsed, checkpoint)
     enriched = enrich(reassembled, routes)
     counts = sink_counts(enriched)
     ckpt_out = reassembled.selectExpr(

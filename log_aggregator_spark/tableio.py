@@ -1,19 +1,24 @@
 """Snapshot-table storage layer — the Iceberg stand-in (SURVEY.md §7).
 
 The north rule stores everything in Iceberg tables; this sandbox has no
-Iceberg runtime jar (network blocked), so ``SnapshotTable`` reproduces the
+Iceberg runtime jar (network blocked), so ``TableGroup`` reproduces the
 two Iceberg properties the pipeline actually relies on, over plain parquet:
 
 * **atomic snapshot commit** — data files land first, then a manifest JSON
-  naming exactly those files is written via tmp-file + ``os.replace``
-  (atomic on POSIX). Readers resolve the latest manifest; a crash mid-write
-  leaves no partially-visible data. This is the table-level analog of the
-  reference's ``.tmp`` + ``ATOMIC_MOVE`` per chunk
+  naming exactly those files is O_EXCL-created and the CURRENT pointer is
+  swapped via tmp-file + ``os.replace`` (atomic on POSIX). Readers resolve
+  the latest manifest; a crash mid-write leaves no partially-visible data.
+  This is the table-level analog of the reference's ``.tmp`` +
+  ``ATOMIC_MOVE`` per chunk
   (``/root/reference/agent/.../DataPumpImpl.java:55-61``,
   ``/root/reference/server/.../LogServerController.java:122-128``).
 * **incremental reads** — each manifest records its parent; the diff of two
   manifests' file lists is the set of files added between snapshots (the
   analog of the reference's directory watch / Iceberg's incremental scan).
+
+A group commits several member tables in one manifest. A standalone
+``SnapshotTable`` is a group of one member, so there is one write, publish,
+compaction and expiry path for both.
 
 On a real cluster the same call sites switch to
 ``df.writeTo(table).append()`` / snapshot-ref reads — the pipeline code
@@ -21,9 +26,9 @@ only sees this module's API.
 
 Layout::
 
-    <root>/data/<snapshot-uuid>/part-*.parquet     (one dir per commit)
-    <root>/manifests/snap-00000001.json            (file list + lineage)
-    <root>/manifests/CURRENT                       (atomic pointer file)
+    <root>/data/<uuid>/part-*.parquet          (one dir per member write)
+    <root>/manifests/snap-00000001.json        (member file lists + lineage)
+    <root>/manifests/CURRENT                   (atomic pointer file)
 
 Driver-side filesystem ops only (a commit is O(#files) metadata, never
 data movement); executors touch parquet exclusively.
@@ -61,189 +66,11 @@ def _create_exclusive(path: str, content: str) -> None:
         os.close(fd)
 
 
-class SnapshotTable:
-    def __init__(self, root: str) -> None:
-        self.root = root
-        self._manifest_dir = os.path.join(root, "manifests")
-
-    # ---------------------------------------------------------- write path
-
-    def commit(
-        self,
-        df: DataFrame,
-        mode: str = "append",
-        lineage: dict | None = None,
-    ) -> int:
-        """Write ``df`` as a new snapshot; returns the snapshot id.
-
-        mode='append': new snapshot = parent files + new files.
-        mode='overwrite': new snapshot = new files only (the table-state
-        analog used by the checkpoint table).
-        """
-        os.makedirs(self._manifest_dir, exist_ok=True)
-        data_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-        df.write.mode("overwrite").parquet(data_dir)
-        new_files = sorted(
-            p for p in glob.glob(os.path.join(data_dir, "part-*"))
-            if not p.endswith(".crc")
-        )
-        parent = self.current_snapshot()
-        files = list(new_files)
-        if mode == "append" and parent is not None:
-            files = self._manifest(parent)["files"] + files
-        snap_id = (parent or 0) + 1
-        manifest = {
-            "snapshot": snap_id,
-            "parent": parent,
-            "files": files,
-            "added_files": new_files,
-            "schema": df.schema.json(),
-            "lineage": lineage or {},
-        }
-        snap_path = os.path.join(self._manifest_dir, f"snap-{snap_id:08d}.json")
-        try:
-            # CAS: two committers racing from the same parent both target
-            # snap_id — exactly one O_EXCL create wins; the loser must
-            # re-read and retry (or fail), never silently drop the winner.
-            _create_exclusive(snap_path, json.dumps(manifest))
-        except FileExistsError as e:
-            raise ConcurrentCommitError(
-                f"snapshot {snap_id} already committed in {self.root}; "
-                "re-read the table and retry"
-            ) from e
-        self._write_atomic(
-            os.path.join(self._manifest_dir, "CURRENT"), str(snap_id)
-        )
-        return snap_id
-
-    @staticmethod
-    def _write_atomic(path: str, content: str) -> None:
-        tmp = path + f".tmp.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(content)
-        os.replace(tmp, path)  # atomic on POSIX — the commit point
-
-    # ----------------------------------------------------------- read path
-
-    def current_snapshot(self) -> int | None:
-        try:
-            with open(os.path.join(self._manifest_dir, "CURRENT")) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
-
-    def _manifest(self, snap_id: int) -> dict:
-        with open(
-            os.path.join(self._manifest_dir, f"snap-{snap_id:08d}.json")
-        ) as f:
-            return json.load(f)
-
-    def exists(self) -> bool:
-        return self.current_snapshot() is not None
-
-    def read(self, spark: SparkSession, snapshot: int | None = None) -> DataFrame:
-        """Read the table as of ``snapshot`` (default: latest)."""
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        m = self._manifest(snap)
-        return _read_files(spark, m["files"], m["schema"])
-
-    def read_incremental(
-        self, spark: SparkSession, since: int | None
-    ) -> DataFrame | None:
-        """Rows added after snapshot ``since`` (None = everything).
-        Returns None when nothing new."""
-        current = self.current_snapshot()
-        if current is None or (since is not None and current <= since):
-            return None
-        if since is None:
-            return self.read(spark, current)
-        old = set(self._manifest(since)["files"])
-        m = self._manifest(current)
-        files = [f for f in m["files"] if f not in old]
-        if not files:
-            return None
-        return _read_files(spark, files, m["schema"])
-
-    def incremental_files(self, since: int | None) -> list[str]:
-        """The file list ``read_incremental(since)`` would scan — the
-        manifest diff, for metadata-only consumers (lineage)."""
-        current = self.current_snapshot()
-        if current is None or (since is not None and current <= since):
-            return []
-        if since is None:
-            return list(self._manifest(current)["files"])
-        old = set(self._manifest(since)["files"])
-        return [f for f in self._manifest(current)["files"] if f not in old]
-
-    def lineage(self, snapshot: int | None = None) -> dict:
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        return self._manifest(snap)["lineage"] if snap else {}
-
-    # ---------------------------------------------------- maintenance ops
-
-    def compact(
-        self, spark: SparkSession, target_file_mb: int = 128
-    ) -> int:
-        """Small-file compaction (Iceberg's ``rewrite_data_files`` analog):
-        an append-per-run table accumulates one file set per commit, and at
-        scale scan cost is dominated by file COUNT (open/footer/seek per
-        file), not bytes. Rewrite the current row set into
-        ~``target_file_mb``-sized files and commit it as an overwrite
-        snapshot — readers switch atomically; history (and time travel to
-        pre-compaction snapshots) is preserved until ``expire_snapshots``.
-        ``coalesce`` (not ``repartition``) — compaction must not pay a
-        shuffle."""
-        cur = self.current_snapshot()
-        if cur is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        files = self._manifest(cur)["files"]
-        total_bytes = sum(os.path.getsize(f) for f in files)
-        n_out = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-        df = self.read(spark).coalesce(n_out)
-        return self.commit(
-            df, mode="overwrite",
-            lineage={**self.lineage(cur), "compacted_from": cur},
-        )
-
-    def expire_snapshots(
-        self, keep_last: int = 2, orphan_min_age_sec: float = ORPHAN_MIN_AGE_SEC
-    ) -> dict:
-        """Iceberg's ``expire_snapshots`` + ``remove_orphan_files`` pair:
-        drop manifests older than the newest ``keep_last`` snapshots, then
-        delete every data file referenced by NO surviving manifest.
-        CURRENT is untouched (always among the kept). Incremental
-        reads/time travel older than the horizon stop working, exactly as
-        in Iceberg. Returns {'expired': [...], 'deleted_files': n}.
-
-        ``orphan_min_age_sec`` guards the concurrent-committer race
-        (ADVICE r2): a live committer writes its data/<uuid> dirs BEFORE
-        the manifest CAS, so a never-manifested dir younger than the
-        threshold may be an in-flight commit, not a crash orphan — it is
-        skipped (Iceberg's remove_orphan_files defaults to 3 days for
-        exactly this). Dirs referenced only by the manifests being expired
-        were committed and superseded — they delete regardless of age."""
-        cur = self.current_snapshot()
-        if cur is None:
-            return {"expired": [], "deleted_files": 0}
-        keep = set(range(max(1, cur - keep_last + 1), cur + 1))
-        expired = []
-        referenced: set[str] = set()
-        expired_refs: set[str] = set()
-        for path in sorted(glob.glob(os.path.join(self._manifest_dir, "snap-*.json"))):
-            snap_id = int(os.path.basename(path)[5:13])
-            if snap_id in keep:
-                referenced.update(self._manifest(snap_id)["files"])
-            else:
-                expired_refs.update(self._manifest(snap_id)["files"])
-                os.remove(path)
-                expired.append(snap_id)
-        deleted = _gc_data_dir(
-            os.path.join(self.root, "data"), referenced, expired_refs,
-            orphan_min_age_sec,
-        )
-        return {"expired": expired, "deleted_files": deleted}
+def _write_atomic(path: str, content: str) -> None:
+    tmp = path + f".tmp.{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(content)
+    os.replace(tmp, path)  # atomic on POSIX — the commit point
 
 
 def _gc_data_dir(
@@ -480,7 +307,8 @@ class TableGroup:
 
     Manifest layout: ``{"snapshot": N, "parent": P, "tables": {name:
     {"files": [...], "added_files": [...], "schema": ...}}, "lineage":
-    {...}}``; per-member append/overwrite semantics match SnapshotTable;
+    {...}}``; an 'append' member lists its parent's files plus the new
+    ones, an 'overwrite' member only the new ones;
     the snap file is O_EXCL-created (CAS, see ConcurrentCommitError)."""
 
     def __init__(self, root: str) -> None:
@@ -563,9 +391,7 @@ class TableGroup:
                 f"snapshot {snap_id} already committed in {self.root}; "
                 "re-read the group and retry"
             ) from e
-        SnapshotTable._write_atomic(
-            os.path.join(self._manifest_dir, "CURRENT"), str(snap_id)
-        )
+        _write_atomic(os.path.join(self._manifest_dir, "CURRENT"), str(snap_id))
 
     # ----------------------------------------------------------- read path
 
@@ -613,11 +439,16 @@ class TableGroup:
         names: list[str] | None = None,
         target_file_mb: int = 128,
     ) -> int:
-        """Small-file compaction for append-heavy members (the routed and
-        metrics tables gain one file set per run): rewrite each named
-        member's rows into ~target_file_mb files (coalesce, no shuffle) and
-        publish ONE new group snapshot; untouched members carry forward.
-        See SnapshotTable.compact for the rationale."""
+        """Small-file compaction (Iceberg's ``rewrite_data_files`` analog)
+        for append-heavy members (the routed and metrics tables gain one
+        file set per run): at scale scan cost is dominated by file COUNT
+        (open/footer/seek per file), not bytes. Rewrite each named member's
+        rows (default: every member) into ~``target_file_mb``-sized files
+        and publish ONE new snapshot that overwrites them; untouched and
+        empty members carry forward. Readers switch atomically; history
+        (and time travel to pre-compaction snapshots) is preserved until
+        ``expire_snapshots``. ``coalesce`` (not ``repartition``) —
+        compaction must not pay a shuffle."""
         cur = self.current_snapshot()
         if cur is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
@@ -631,20 +462,29 @@ class TableGroup:
             total = sum(os.path.getsize(f) for f in files)
             n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
             dfs[n] = (self.read_member(spark, n).coalesce(n_out), "overwrite")
-        return self.commit(
-            dfs, lineage={**self.lineage(cur), "compacted_from": cur}
+        # the group commit by name: SnapshotTable overrides ``commit`` with
+        # its one-table form
+        return TableGroup.commit(
+            self, dfs, lineage={**self.lineage(cur), "compacted_from": cur}
         )
 
     def expire_snapshots(
-        self, keep_last: int = 2, orphan_min_age_sec: float | None = None
+        self, keep_last: int = 2, orphan_min_age_sec: float = ORPHAN_MIN_AGE_SEC
     ) -> dict:
-        """Expire group manifests older than the newest ``keep_last`` and
-        GC every data dir referenced by no surviving manifest. Crash
-        orphans (never-manifested dirs) are deleted only past the min-age
-        guard — see SnapshotTable.expire_snapshots for the concurrent-
-        committer race this protects."""
-        if orphan_min_age_sec is None:
-            orphan_min_age_sec = ORPHAN_MIN_AGE_SEC
+        """Iceberg's ``expire_snapshots`` + ``remove_orphan_files`` pair:
+        drop manifests older than the newest ``keep_last`` snapshots, then
+        delete every data dir referenced by NO surviving manifest.
+        CURRENT is untouched (always among the kept). Incremental
+        reads/time travel older than the horizon stop working, exactly as
+        in Iceberg. Returns {'expired': [...], 'deleted_files': n}.
+
+        ``orphan_min_age_sec`` guards the concurrent-committer race
+        (ADVICE r2): a live committer writes its data/<uuid> dirs BEFORE
+        the manifest CAS, so a never-manifested dir younger than the
+        threshold may be an in-flight commit, not a crash orphan — it is
+        skipped (Iceberg's remove_orphan_files defaults to 3 days for
+        exactly this). Dirs referenced only by the manifests being expired
+        were committed and superseded — they delete regardless of age."""
         cur = self.current_snapshot()
         if cur is None:
             return {"expired": [], "deleted_files": 0}
@@ -667,6 +507,67 @@ class TableGroup:
             orphan_min_age_sec,
         )
         return {"expired": expired, "deleted_files": deleted}
+
+
+class SnapshotTable(TableGroup):
+    """One table: a :class:`TableGroup` whose manifests hold the single
+    member ``MEMBER``. Commit, publish, compaction and expiry are the
+    group's; this class adds the one-table surface the storage contract
+    suite names (``commit(df, mode, lineage)``, ``exists``, ``read``,
+    ``read_incremental``, ``incremental_files``), shared with
+    ``IcebergTable``."""
+
+    MEMBER = "table"
+
+    def commit(
+        self,
+        df: DataFrame,
+        mode: str = "append",
+        lineage: dict | None = None,
+    ) -> int:
+        """Write ``df`` as a new snapshot; returns the snapshot id.
+
+        mode='append': new snapshot = parent files + new files.
+        mode='overwrite': new snapshot = new files only (the table-state
+        analog used by the checkpoint table).
+        """
+        return super().commit({self.MEMBER: (df, mode)}, lineage)
+
+    def exists(self) -> bool:
+        return self.member_exists(self.MEMBER)
+
+    def read(self, spark: SparkSession, snapshot: int | None = None) -> DataFrame:
+        """Read the table as of ``snapshot`` (default: latest)."""
+        return self.read_member(spark, self.MEMBER, snapshot)
+
+    def read_incremental(
+        self, spark: SparkSession, since: int | None
+    ) -> DataFrame | None:
+        """Rows added after snapshot ``since`` (None = everything).
+        Returns None when nothing new."""
+        entry, files = self._increment(since)
+        return _read_files(spark, files, entry["schema"]) if files else None
+
+    def incremental_files(self, since: int | None) -> list[str]:
+        """The file list ``read_incremental(since)`` would scan, for
+        metadata-only consumers (lineage)."""
+        return self._increment(since)[1]
+
+    def _increment(self, since: int | None) -> tuple[dict, list[str]]:
+        """The current manifest entry and its files that snapshot ``since``
+        did not list — the manifest diff; ({}, []) when nothing is new."""
+        current = self.current_snapshot()
+        if current is None or (since is not None and current <= since):
+            return {}, []
+        entry = self._entry(self.MEMBER, current)
+        if since is None:
+            return entry, list(entry["files"])
+        old = set(self._entry(self.MEMBER, since)["files"])
+        return entry, [f for f in entry["files"] if f not in old]
+
+    def compact(self, spark: SparkSession, target_file_mb: int = 128) -> int:
+        """``TableGroup.compact`` of the one member."""
+        return super().compact(spark, target_file_mb=target_file_mb)
 
 
 # ---------------------------------------------------------- bucketed layout

@@ -546,6 +546,25 @@ def test_concurrent_commit_cas_fails_loudly(spark, tmp_path):
     assert g.table("a").read(spark).count() == 3
 
 
+def test_standalone_table_crash_before_publish(spark, tmp_path, monkeypatch):
+    """A standalone table commits through the group's one publish path:
+    with ``TableGroup._publish`` failing, ``SnapshotTable.commit`` raises
+    and the table still shows its previous snapshot and rows."""
+    from log_aggregator_spark.tableio import TableGroup
+
+    t = SnapshotTable(str(tmp_path / "t"))
+    s1 = t.commit(spark.range(3).select(F.col("id").alias("x")))
+
+    def crash(self, snap_id, manifest):
+        raise RuntimeError("simulated crash before commit point")
+
+    monkeypatch.setattr(TableGroup, "_publish", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        t.commit(spark.range(3, 5).select(F.col("id").alias("x")))
+    assert t.current_snapshot() == s1
+    assert sorted(r["x"] for r in t.read(spark).collect()) == [0, 1, 2]
+
+
 def test_run_job_retries_after_losing_commit_race(spark, tmp_path, monkeypatch):
     """run_job(retries=N): a committer that loses the manifest CAS re-runs
     the pass on the winner's committed state instead of dying. Simulated as
@@ -911,8 +930,9 @@ def test_run_job_leaves_nothing_pinned(spark, tmp_path, monkeypatch):
     def crash(self, snap_id, manifest):
         raise RuntimeError("simulated crash before commit point")
 
-    monkeypatch.setattr(TableGroup, "_publish", crash)
+    # the chunks table commits through the same publish, so it is built first
     ct, routes, state = _small_input(spark, tmp_path / "crash")
+    monkeypatch.setattr(TableGroup, "_publish", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
         run_job(spark, ct, routes, state)
     assert state.group.current_snapshot() is None
@@ -927,8 +947,9 @@ def test_run_job_leaves_nothing_pinned(spark, tmp_path, monkeypatch):
             TableGroup(self.root).commit({"audit": (rival, "append")})
         return real_publish(self, snap_id, manifest)
 
-    monkeypatch.setattr(TableGroup, "_publish", lose_race_once)
+    monkeypatch.setattr(TableGroup, "_publish", real_publish)
     ct, routes, state = _small_input(spark, tmp_path / "race")
+    monkeypatch.setattr(TableGroup, "_publish", lose_race_once)
     assert run_job(spark, ct, routes, state, retries=1)["status"] == "ok"
     assert raced["done"] and state.group.current_snapshot() == 2
     assert _pinned(spark) == before

@@ -37,14 +37,12 @@ def oracle_frames(spark, docs):
     return chunks_pdf, ckpt_pdf, oracle
 
 
-@pytest.mark.parametrize("strategy", ["pandas", "sql", "agg"])
-def test_pipeline_matches_oracle(spark, docs, oracle_frames, strategy):
+def test_pipeline_matches_oracle(spark, docs, oracle_frames):
     _, _, oracle = oracle_frames
     res = run_pipeline(
         chunker.chunks(docs),
         chunker.routes_table(docs),
         chunker.checkpoint_table(docs),
-        strategy=strategy,
     )
     got = res.reassembled.toPandas()
     got["tokens"] = got["tokens"].apply(lambda a: [int(x) for x in a])
@@ -182,10 +180,9 @@ def test_resume_second_run_emits_suffix(spark, docs):
     )
 
 
-def test_split_rejects_both_variants_agree(spark):
-    """Dead-letter split: the Arrow-RE2 and JVM-regexp variants must make
-    identical accept/reject decisions, legit chunks never reject, corrupt
-    envelopes never leak into the ok stream."""
+def test_split_rejects_accepts_valid_rejects_corrupt(spark):
+    """Dead-letter split of the Arrow-RE2 parse: legit chunks never reject,
+    corrupt envelopes never leak into the ok stream."""
     from pyspark.sql import functions as F
 
     from log_aggregator_spark.operators.parse import split_rejects
@@ -197,18 +194,17 @@ def test_split_rejects_both_variants_agree(spark):
          ("a_2_3.pbData.bak", [2], "srcZ")],
         schema="envelope string, chunk_tokens array<int>, source string",
     )
-    # valid envelope whose doc_id group legitimately matches EMPTY — both
-    # variants must accept it (the JVM path once keyed non-match detection
-    # on the doc_id group and rejected this shape; ADVICE r2)
+    # valid envelope whose doc_id group legitimately matches EMPTY — it
+    # must be accepted (a regex parse that keys non-match detection on the
+    # doc_id group would reject it; ADVICE r2)
     empty_doc = spark.createDataFrame(
         [("_3_7.pbData", [9], "srcE")],
         schema="envelope string, chunk_tokens array<int>, source string",
     )
     unioned = chunks.unionByName(corrupt).unionByName(empty_doc)
     n_chunks = chunks.count()
-    for jvm in (False, True):
-        ok, rejects = split_rejects(unioned, jvm=jvm)
-        assert ok.count() == n_chunks + 1
-        assert ok.where(F.col("doc_id") == "").count() == 1
-        got = sorted(r["envelope"] for r in rejects.collect())
-        assert got == ["a_2_3.pbData.bak", "doc_1_nosuffix", "garbage-1"]
+    ok, rejects = split_rejects(unioned)
+    assert ok.count() == n_chunks + 1
+    assert ok.where(F.col("doc_id") == "").count() == 1
+    got = sorted(r["envelope"] for r in rejects.collect())
+    assert got == ["a_2_3.pbData.bak", "doc_1_nosuffix", "garbage-1"]

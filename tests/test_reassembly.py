@@ -2,8 +2,8 @@
 datadecoder has zero unit tests; §5.2 item 3 defines these cases from the
 code semantics of DataPumpDecoderSort.java:142-181 + SequenceTracker.java).
 
-Every case runs through BOTH physical strategies (applyInPandas kernel and the
-pure-SQL window plan) and must match the pure-pandas oracle exactly.
+Every case runs through the batch gate plan (``reassemble_sql``, the pure-SQL
+window plan) and must match the pure-pandas oracle exactly.
 """
 
 from __future__ import annotations
@@ -11,14 +11,7 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from log_aggregator_spark.operators.reassemble import (
-    held_back,
-    reassemble,
-    reassemble_agg,
-    reassemble_sql,
-)
-
-STRATEGIES = {"pandas": reassemble, "sql": reassemble_sql, "agg": reassemble_agg}
+from log_aggregator_spark.operators.reassemble import held_back, reassemble_sql
 from log_aggregator_spark.oracle_pandas import reassemble_oracle
 
 from conftest import chunks_df, make_chunks
@@ -37,8 +30,8 @@ CASES = {
         None,
     ),
     "duplicate_seq_diff_payload": (
-        # survivor among equal seqs = lexicographically-least payload, in
-        # every strategy (deterministic; NOT arrival order, which a shuffle
+        # survivor among equal seqs = lexicographically-least payload
+        # (deterministic; NOT arrival order, which a shuffle
         # destroys). [2,9] loses to [2,10]? no: [2,9] < [2,10] elementwise
         # lexicographic on values → [2,9] wins; [0,7] < [2,9] → [0,7] wins.
         [_chunk("a", 10, 1, [1]), _chunk("a", 10, 2, [2, 9]), _chunk("a", 10, 2, [0, 7]), _chunk("a", 10, 3, [3])],
@@ -118,14 +111,12 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-@pytest.mark.parametrize("strategy", sorted(STRATEGIES))
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_gate_matches_oracle(spark, name, strategy):
+def test_gate_matches_oracle(spark, name):
     rows, ckpt_rows = CASES[name]
     df = chunks_df(spark, rows)
     ckpt = _ckpt_df(spark, ckpt_rows)
-    fn = STRATEGIES[strategy]
-    got = _normalize(fn(df, ckpt).toPandas())
+    got = _normalize(reassemble_sql(df, ckpt).toPandas())
     want = _normalize(
         reassemble_oracle(
             make_chunks(rows),
@@ -137,17 +128,17 @@ def test_gate_matches_oracle(spark, name, strategy):
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_strategies_agree_on_everything(spark):
-    """Union of all cases in one df — cross-strategy equivalence."""
+def test_union_of_cases_matches_oracle(spark):
+    """Union of all cases in one df (no checkpoint) — every stream shares
+    the plan's partitions and sort with the others, and must still match
+    the oracle."""
     all_rows = []
     for i, (rows, _) in enumerate(CASES.values()):
         all_rows += [(f"{d}#{i}", s, q, t, src) for (d, s, q, t, src) in rows]
     df = chunks_df(spark, all_rows)
-    a = _normalize(reassemble(df).toPandas())
-    b = _normalize(reassemble_sql(df).toPandas())
-    c = _normalize(reassemble_agg(df).toPandas())
-    pd.testing.assert_frame_equal(a, b)
-    pd.testing.assert_frame_equal(a, c)
+    got = _normalize(reassemble_sql(df).toPandas())
+    want = _normalize(reassemble_oracle(make_chunks(all_rows), None))
+    pd.testing.assert_frame_equal(got, want)
 
 
 def test_held_back(spark):

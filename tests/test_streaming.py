@@ -391,8 +391,8 @@ def test_state_ttl_kernel_eviction():
 def test_streaming_gate_duplicate_payload_survivor():
     """Kernel-level: duplicate seqs with DIFFERING payloads in one
     micro-batch — the streaming gate must emit the lexicographically-least
-    payload (the engine's survivor rule, shared with all batch
-    strategies), regardless of arrival order."""
+    payload (the engine's survivor rule, shared with the batch gate
+    plan), regardless of arrival order."""
     from log_aggregator_spark.streaming.stream_pipeline import _make_gate
 
     gate = _make_gate(None)

@@ -26,12 +26,12 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
         t.commit(spark.range(i * 10, (i + 1) * 10).repartition(4)
                  .select(F.col("id").alias("x")))
     assert t.current_snapshot() == 5
-    before_files = len(t._manifest(5)["files"])
+    before_files = len(t._manifest(5)["tables"][t.MEMBER]["files"])
     assert before_files >= 20  # 5 commits × 4 files
 
     snap = t.compact(spark)
     assert snap == 6
-    after_files = len(t._manifest(6)["files"])
+    after_files = len(t._manifest(6)["tables"][t.MEMBER]["files"])
     assert after_files < before_files
     assert sorted(r["x"] for r in t.read(spark).collect()) == list(range(50))
     # history preserved until expiry: time travel to pre-compaction works
@@ -63,7 +63,7 @@ def test_expire_snapshots_gc_orphans(spark, tmp_path):
     # current snapshot intact and readable
     assert sorted(r["x"] for r in t.read(spark).collect()) == list(range(20))
     # only the kept snapshot's files remain on disk
-    assert _n_data_files(str(tmp_path / "t")) == len(t._manifest(5)["files"])
+    assert _n_data_files(str(tmp_path / "t")) == len(t._manifest(5)["tables"][t.MEMBER]["files"])
     # time travel past the horizon is gone, loudly
     with pytest.raises(FileNotFoundError):
         t._manifest(2)
