@@ -48,12 +48,15 @@ def test_gate_select_matches_reference_loop(seqs, last):
     assert len(set(map(int, idx))) == len(idx)
 
 
-def test_random_corpus_matches_oracle(spark):
+def test_random_corpus_all_strategies_match_oracle(spark):
     """One seeded random corpus (200 streams × random seq multisets ×
-    random checkpoints) through the batch gate plan (``reassemble_sql``) vs
-    the pure-pandas oracle — the Spark-plan fuzz counterpart of the kernel
-    fuzz above."""
+    random checkpoints) through both gate implementations — the batch plan
+    (``reassemble_sql``) and the streaming path's per-key pandas kernel —
+    vs the pure-pandas oracle: the Spark-plan fuzz counterpart of the
+    kernel fuzz above."""
     import pandas as pd
+
+    from conftest import stream_kernel_reassemble
 
     from log_aggregator_spark.operators.reassemble import reassemble_sql
     from log_aggregator_spark.oracle_pandas import reassemble_oracle
@@ -66,7 +69,7 @@ def test_random_corpus_matches_oracle(spark):
         seqs = rng.integers(0, 8, size=n)
         for s in seqs:
             # duplicate seqs get DIFFERING payloads (random tail element):
-            # the plan and the oracle must settle on the SAME
+            # both gates and the oracle must settle on the SAME
             # lexicographically-least survivor, not an arrival artifact
             rows.append(
                 (doc, sess, int(s),
@@ -102,4 +105,6 @@ def test_random_corpus_matches_oracle(spark):
 
     want = norm(reassemble_oracle(pdf, cdf if len(cdf) else None))
     got = norm(reassemble_sql(sdf, sckpt).toPandas())
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+    got = norm(stream_kernel_reassemble(pdf, cdf if len(cdf) else None))
     pd.testing.assert_frame_equal(got, want, check_dtype=False)

@@ -2,8 +2,10 @@
 datadecoder has zero unit tests; §5.2 item 3 defines these cases from the
 code semantics of DataPumpDecoderSort.java:142-181 + SequenceTracker.java).
 
-Every case runs through the batch gate plan (``reassemble_sql``, the pure-SQL
-window plan) and must match the pure-pandas oracle exactly.
+Every case runs through both gate implementations — the batch plan
+(``reassemble_sql``, the pure-SQL window plan) and the streaming path's
+grouped-pandas kernel (``gate_select`` per key) — and must match the
+pure-pandas oracle exactly.
 """
 
 from __future__ import annotations
@@ -14,7 +16,7 @@ import pytest
 from log_aggregator_spark.operators.reassemble import held_back, reassemble_sql
 from log_aggregator_spark.oracle_pandas import reassemble_oracle
 
-from conftest import chunks_df, make_chunks
+from conftest import chunks_df, make_chunks, stream_kernel_reassemble
 
 
 def _chunk(doc, sess, seq, toks, source="src0"):
@@ -111,34 +113,39 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+@pytest.mark.parametrize("strategy", ["pandas", "sql"])
 @pytest.mark.parametrize("name", sorted(CASES))
-def test_gate_matches_oracle(spark, name):
+def test_gate_matches_oracle(spark, name, strategy):
+    """strategy: ``sql`` is the batch window plan, ``pandas`` the streaming
+    path's per-key kernel."""
     rows, ckpt_rows = CASES[name]
-    df = chunks_df(spark, rows)
-    ckpt = _ckpt_df(spark, ckpt_rows)
-    got = _normalize(reassemble_sql(df, ckpt).toPandas())
-    want = _normalize(
-        reassemble_oracle(
-            make_chunks(rows),
-            pd.DataFrame(ckpt_rows, columns=["doc_id", "session", "last_seq"])
-            if ckpt_rows
-            else None,
-        )
+    ckpt_pdf = (
+        pd.DataFrame(ckpt_rows, columns=["doc_id", "session", "last_seq"])
+        if ckpt_rows
+        else None
     )
-    pd.testing.assert_frame_equal(got, want)
+    if strategy == "sql":
+        df = chunks_df(spark, rows)
+        got = reassemble_sql(df, _ckpt_df(spark, ckpt_rows)).toPandas()
+    else:
+        got = stream_kernel_reassemble(make_chunks(rows), ckpt_pdf)
+    want = _normalize(reassemble_oracle(make_chunks(rows), ckpt_pdf))
+    pd.testing.assert_frame_equal(_normalize(got), want)
 
 
-def test_union_of_cases_matches_oracle(spark):
+def test_strategies_agree_on_everything(spark):
     """Union of all cases in one df (no checkpoint) — every stream shares
-    the plan's partitions and sort with the others, and must still match
-    the oracle."""
+    the batch plan's partitions and sort with the others; the plan, the
+    streaming kernel and the oracle must all agree."""
     all_rows = []
     for i, (rows, _) in enumerate(CASES.values()):
         all_rows += [(f"{d}#{i}", s, q, t, src) for (d, s, q, t, src) in rows]
     df = chunks_df(spark, all_rows)
-    got = _normalize(reassemble_sql(df).toPandas())
+    a = _normalize(reassemble_sql(df).toPandas())
+    b = _normalize(stream_kernel_reassemble(make_chunks(all_rows)))
     want = _normalize(reassemble_oracle(make_chunks(all_rows), None))
-    pd.testing.assert_frame_equal(got, want)
+    pd.testing.assert_frame_equal(a, want)
+    pd.testing.assert_frame_equal(b, want)
 
 
 def test_held_back(spark):
