@@ -20,8 +20,9 @@ from .functions import similarity as fsim
 from .functions import text as ftext
 from .operators.merge import merge_upsert
 from .operators.parse import parse_envelope, split_rejects
-from .operators.reassemble import _gate_flags, held_back, held_from_flags, reassemble_sql
-from .plans.pipeline import run_pipeline
+from .operators.aggregate import source_counts
+from .operators.reassemble import _gate_flags, held_back
+from .plans.pipeline import after_gate, run_pipeline
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -83,11 +84,7 @@ def q_pipeline_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pipeline_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = _pipeline(spark, sf_dir).enriched
-    return e.groupBy("source", "sink").agg(
-        F.count("*").cast("long").alias("n_rows"),
-        F.sum("n_tok").cast("long").alias("sum_n_tok"),
-    )
+    return source_counts(_pipeline(spark, sf_dir).enriched)
 
 
 def q_pipeline_held_back(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -128,7 +125,7 @@ def q_pipeline_rejects(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pipeline_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run-splitting invariance as a first-class gated query: the corpus is
     processed as TWO checkpointed passes (phase 1 = seqs ≤ 2, phase 2 =
-    the rest + phase 1's held cache, against the merged checkpoint) and
+    the rest + phase 1's held cache, against phase 1's next checkpoint) and
     the per-stream concatenation of the two runs' segments must equal the
     ORACLE, which is the ordinary single-pass reassembly SQL. This is
     job.py's resume contract (reference invariant README.md:93-104)
@@ -138,19 +135,17 @@ def q_pipeline_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = chunker.load_documents(spark, sf_dir)
     parsed = parse_envelope(chunker.chunks(docs))
     ckpt0 = chunker.checkpoint_table(docs)
+    routes = chunker.routes_table(docs)
 
-    p1 = parsed.where(F.col("seq") <= 2)
-    p2 = parsed.where(F.col("seq") > 2)
+    def run(batch: DataFrame, ckpt: DataFrame):
+        return after_gate(_gate_flags(batch, ckpt), routes, ckpt)
 
-    r1 = reassemble_sql(p1, ckpt0)
-    held1 = held_from_flags(_gate_flags(p1, ckpt0))
-    ck1 = r1.selectExpr("doc_id", "session", "cast(last_seq_out as long) as last_seq")
-    ckpt1 = ck1.unionByName(
-        ckpt0.join(ck1.select("doc_id", "session"), ["doc_id", "session"], "left_anti")
+    run1 = run(parsed.where(F.col("seq") <= 2), ckpt0)
+    run2 = run(parsed.where(F.col("seq") > 2).unionByName(run1.held), run1.checkpoint_out)
+
+    seg = run1.reassembled.withColumn("run", F.lit(1)).unionByName(
+        run2.reassembled.withColumn("run", F.lit(2))
     )
-    r2 = reassemble_sql(p2.unionByName(held1), ckpt1)
-
-    seg = r1.withColumn("run", F.lit(1)).unionByName(r2.withColumn("run", F.lit(2)))
     return (
         seg.groupBy("doc_id", "session")
         .agg(

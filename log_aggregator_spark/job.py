@@ -11,9 +11,10 @@ Each invocation is one "directory pass" of the reference decoder
    input and the ``rejects`` member read, then run the gate against the
    persisted checkpoint table (``SequenceTracker`` analog) and MATERIALIZE
    its decision once, as an eager local checkpoint in executor storage,
-3. derive routed output, new checkpoint (one max-merge aggregate over the
-   accepted seqs and the old checkpoint), new held cache, rejects and
-   metrics from that one materialized result, and commit them all in ONE
+3. derive reassembly, routed output, new checkpoint and held cache from
+   that one materialized result (``plans.pipeline.after_gate``, the
+   composition ``run_pipeline`` runs on a lazy gate), stamp the run id and
+   the held chunks' ages, and commit them with rejects and metrics in ONE
    atomic TableGroup manifest swap,
 4. release the cached parse and the checkpoint, and return the per-sink
    counts and the rejects/held row counts read with pyarrow from the files
@@ -65,15 +66,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import lineage_from_files
-from .operators.enrich import enrich
 from .operators.parse import split_tagged, tag_envelopes
-from .operators.reassemble import (
-    _gate_flags,
-    held_from_flags,
-    reassemble_from_flags,
-)
+from .operators.reassemble import _gate_flags
+from .plans.pipeline import after_gate
 from .session import persistent_rdd_ids, unpersist_rdds
-from .tableio import ConcurrentCommitError, SnapshotTable, TableGroup
+from .tableio import ConcurrentCommitError, SnapshotTable, TableGroup, file_rows
 
 
 class JobState:
@@ -157,10 +154,8 @@ def _run_job_once(
     try:
         # the new files' parquet footers, read once: they size the parse
         # below and are the lineage rows' counts
-        new_files = (
-            chunks_table.incremental_files(last_processed) if new_chunks is not None else []
-        )
-        new_file_rows = _file_rows(new_files)
+        new_files = chunks_table.incremental_files(last_processed)
+        new_file_rows = file_rows(new_files)
         parsed = None
         rejects = None
         if new_chunks is not None:
@@ -200,20 +195,16 @@ def _run_job_once(
 
         # ---- the ONE computation: gate decision, materialized ------------
         flagged = _gate_flags(parsed, ckpt_df).localCheckpoint(eager=True)
-
-        reassembled = reassemble_from_flags(flagged)
-        enriched = enrich(reassembled, routes).withColumn(
-            "run_id", F.lit(run_id).cast("long")
-        )
+        out = after_gate(flagged, routes, ckpt_df)
+        enriched = out.enriched.withColumn("run_id", F.lit(run_id).cast("long"))
 
         # held cache with age tracking: a chunk held before keeps its
         # original first_held_run (in group-pass units), carried through the
         # gate; a newly-held one is stamped with this pass.
-        held_full = held_from_flags(flagged)
         first_held = F.lit(pass_id)
-        if "first_held_run" in held_full.columns:
+        if "first_held_run" in out.held.columns:
             first_held = F.coalesce(F.col("first_held_run"), first_held)
-        held_full = held_full.withColumn("first_held_run", first_held.cast("long"))
+        held_full = out.held.withColumn("first_held_run", first_held.cast("long"))
         quarantined = None
         if held_max_age_runs is not None:
             too_old = F.col("first_held_run") <= F.lit(pass_id - held_max_age_runs)
@@ -222,21 +213,6 @@ def _run_job_once(
             )
             held_full = held_full.where(~too_old)
 
-        # checkpoint merge in one aggregate: an accepted seq is above its
-        # stream's last_seq (or is the seq-0 init with last_seq 0), so the
-        # max over the accepted seqs and the old row advances a stream that
-        # emitted, keeps an idle one and starts a new one.
-        new_ckpt = flagged.where("accepted").select(
-            "doc_id", "session", F.col("seq").alias("last_seq")
-        )
-        if ckpt_df is not None:
-            new_ckpt = new_ckpt.unionByName(
-                ckpt_df.select("doc_id", "session", "last_seq")
-            )
-        new_ckpt = new_ckpt.groupBy("doc_id", "session").agg(
-            F.max("last_seq").cast("long").alias("last_seq")
-        )
-
         wall = time.perf_counter() - t_start
         # one metrics file per pass: a few lineage rows need no more tasks
         summary_df = lin.withColumn("run_id", F.lit(run_id).cast("long")).coalesce(1)
@@ -244,7 +220,7 @@ def _run_job_once(
         # ---- ONE atomic commit covering all state tables -----------------
         tables = {
             "routed": (enriched, "append"),
-            "checkpoint": (new_ckpt, "overwrite"),
+            "checkpoint": (out.checkpoint_out, "overwrite"),
             "held": (held_full, "overwrite"),
             "metrics": (summary_df, "append"),
         }
@@ -275,10 +251,10 @@ def _run_job_once(
         "wall_sec": round(time.perf_counter() - t_start, 3),
         "sink_counts": _committed_sink_counts(state.routed.added_files(snap)),
         "rejects": (
-            sum(_file_rows(state.rejects.added_files(snap)))
+            sum(file_rows(state.rejects.added_files(snap)))
             if rejects is not None else 0
         ),
-        "held": sum(_file_rows(state.held.added_files(snap))),
+        "held": sum(file_rows(state.held.added_files(snap))),
     }
 
 
@@ -293,13 +269,6 @@ def _committed_sink_counts(files: list[str]) -> dict:
     sinks = ds.dataset(files, format="parquet").to_table(columns=["sink"])["sink"]
     vc = pc.value_counts(sinks)
     return dict(zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()))
-
-
-def _file_rows(files: list[str]) -> list[int]:
-    """Rows in each parquet file of ``files``, read from its footer."""
-    import pyarrow.parquet as pq
-
-    return [pq.read_metadata(f).num_rows for f in files]
 
 
 def _parse_tasks(spark: SparkSession, rows: int) -> int:

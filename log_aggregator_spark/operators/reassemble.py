@@ -15,9 +15,9 @@ Reproduces the reference decoder's semantics (SURVEY.md §2 S10–S13):
 
 One batch plan, ``reassemble_sql``: pure built-in window/aggregate
 operators (the gap cut is ``seq`` minus the running count of distinct
-seqs), whole-stage codegen, no Python. ``job.py`` runs its two halves
-(``_gate_flags``, then ``reassemble_from_flags``/``held_from_flags``)
-around one materialization. The streaming path runs the same decision per
+seqs), whole-stage codegen, no Python. ``plans.pipeline.after_gate``
+runs its halves: ``_gate_flags``, lazy or materialized, then the
+``*_from_flags`` derivations. The streaming path runs the same decision per
 key in numpy (``gate_select``); ``oracle_pandas.reassemble_oracle`` is the
 test reference both are checked against.
 
@@ -232,12 +232,9 @@ def reassemble_sql(parsed: DataFrame, checkpoint: DataFrame | None = None) -> Da
 
 
 def reassemble_from_flags(flagged: DataFrame) -> DataFrame:
-    """The aggregate half of ``reassemble_sql``, split out so a caller that
-    MATERIALIZES the gate decision once (job.py holds ``_gate_flags``
-    output as an eager local checkpoint) can derive reassembly, held state
-    and checkpoint from the same physical rows — one computation observed
-    by every commit, instead of N independent recomputations that task
-    retries could silently diverge."""
+    """The aggregate half of ``reassemble_sql``: the segment each stream
+    emits, from a ``_gate_flags`` output (see the module docstring and
+    ``job.py``'s consistency argument for why the halves are split)."""
     kept = flagged.where(F.col("accepted")).drop("_first")
     return (
         kept.groupBy("doc_id", "session")
@@ -262,10 +259,9 @@ def reassemble_from_flags(flagged: DataFrame) -> DataFrame:
 
 
 def held_from_flags(flagged: DataFrame) -> DataFrame:
-    """Held chunks (full payloads) from a materialized ``_gate_flags``
-    output — see ``reassemble_from_flags``; what ``job.py`` persists as the
-    carry-over cache between runs. Keeps ``first_held_run`` when the gate
-    input carried it."""
+    """Held chunks (full payloads) from a ``_gate_flags`` output — what
+    ``job.py`` persists as the carry-over cache between runs. Keeps
+    ``first_held_run`` when the gate input carried it."""
     cols = ["doc_id", "session", "seq", "chunk_tokens", "source"]
     if "first_held_run" in flagged.columns:
         cols.append("first_held_run")

@@ -46,8 +46,3 @@ def route_write(
             n_partitions, F.col("sink"), (F.xxhash64("doc_id") % n_salts)
         )
     df.write.mode(mode).partitionBy("sink").parquet(out_dir)
-
-
-def read_sink(spark_df_reader, out_dir: str, sink: str) -> DataFrame:
-    """Partition-pruned read of one sink's table."""
-    return spark_df_reader.parquet(out_dir).where(F.col("sink") == sink)

@@ -157,9 +157,17 @@ FROM enriched GROUP BY source, sink
     + """
 SELECT doc_id, session, seq FROM flagged WHERE NOT accepted
 """,
+    # the next run's state: the max over the accepted seqs and the old
+    # checkpoint, so a stream that did not advance keeps its row
     "pipeline_checkpoint_out": PRELUDE
     + """
-SELECT doc_id, session, last_seq_out AS last_seq FROM reassembled
+SELECT doc_id, session, CAST(max(last_seq) AS BIGINT) AS last_seq
+FROM (
+  SELECT doc_id, session, seq AS last_seq FROM flagged WHERE accepted
+  UNION ALL
+  SELECT doc_id, session, last_seq FROM ckpt
+)
+GROUP BY doc_id, session
 """,
 }
 

@@ -26,7 +26,7 @@ only sees this module's API.
 
 Layout::
 
-    <root>/data/<uuid>/part-*.parquet          (one dir per member write)
+    <root>/data/<uuid>/part-*.parquet          (one dir per member write with rows)
     <root>/manifests/snap-00000001.json        (member file lists + lineage)
     <root>/manifests/CURRENT                   (atomic pointer file)
 
@@ -39,6 +39,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import shutil
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
@@ -79,23 +80,19 @@ def _gc_data_dir(
     expired_refs: set[str] = frozenset(),
     orphan_min_age_sec: float = ORPHAN_MIN_AGE_SEC,
 ) -> int:
-    """Delete whole unreferenced commit dirs under ``data_root`` (every
-    commit wrote exactly one ``data/<uuid>`` dir, so orphan granularity is
-    the dir). A dir referenced only by expired manifests is settled history
-    — deleted immediately; a dir referenced by NO manifest ever is deleted
-    only past ``orphan_min_age_sec`` (it may belong to an in-flight
-    concurrent commit — see expire_snapshots). Driver-side metadata-only
-    walk."""
-    import shutil
+    """Delete whole unreferenced commit dirs under ``data_root`` (a member
+    write leaves one ``data/<uuid>`` dir, none when it wrote no rows, so
+    orphan granularity is the dir). A dir referenced only by expired
+    manifests is settled history — deleted immediately; a dir referenced by
+    NO manifest ever is deleted only past ``orphan_min_age_sec`` (it may
+    belong to an in-flight concurrent commit — see expire_snapshots).
+    Driver-side metadata-only walk."""
     import time as _time
 
     cutoff = _time.time() - orphan_min_age_sec
     deleted = 0
     for d in glob.glob(os.path.join(data_root, "*")):
-        parts = [
-            p for p in glob.glob(os.path.join(d, "part-*"))
-            if not p.endswith(".crc")
-        ]
+        parts = glob.glob(os.path.join(d, "part-*"))  # checksums are ".part-*"
         if parts and any(p in referenced for p in parts):
             continue
         was_manifested = any(p in expired_refs for p in parts)
@@ -108,6 +105,33 @@ def _gc_data_dir(
         deleted += len(parts)
         shutil.rmtree(d, ignore_errors=True)
     return deleted
+
+
+def file_rows(files: list[str]) -> list[int]:
+    """Rows in each parquet file of ``files``, read from its footer."""
+    import pyarrow.parquet as pq
+
+    return [pq.read_metadata(f).num_rows for f in files]
+
+
+def _keep_files_with_rows(data_dir: str) -> list[str]:
+    """The data files a member write left in ``data_dir`` that hold rows,
+    sorted. Spark's writer writes task 0's file even when its partition is
+    empty; those files are deleted here (with their checksums), and so is
+    the whole dir when no file has rows, so that what a manifest lists is
+    what is on disk and a reader never opens an empty file."""
+    parts = sorted(glob.glob(os.path.join(data_dir, "part-*")))
+    rows = file_rows(parts)
+    for p, n in zip(parts, rows):
+        if not n:
+            os.remove(p)
+            crc = os.path.join(data_dir, f".{os.path.basename(p)}.crc")
+            if os.path.exists(crc):
+                os.remove(crc)
+    kept = [p for p, n in zip(parts, rows) if n]
+    if not kept:
+        shutil.rmtree(data_dir, ignore_errors=True)
+    return kept
 
 
 def _schema_from_json(schema_json: str):
@@ -341,10 +365,7 @@ class TableGroup:
             name, (df, mode) = item
             data_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
             df.write.mode("overwrite").parquet(data_dir)
-            new_files = sorted(
-                p for p in glob.glob(os.path.join(data_dir, "part-*"))
-                if not p.endswith(".crc")
-            )
+            new_files = _keep_files_with_rows(data_dir)
             files = list(new_files)
             if mode == "append" and name in parent_tables:
                 files = parent_tables[name]["files"] + files

@@ -256,7 +256,7 @@ def test_two_pass_job_equals_single_run(spark, docs, tmp_path):
 
     # held state: same streams/seqs as the one-shot held set
     held = state.held.read(spark).select("doc_id", "session", "seq")
-    want_held = run_pipeline(chunks, routes).held
+    want_held = run_pipeline(chunks, routes).held.select("doc_id", "session", "seq")
     assert sorted(map(tuple, held.collect())) == sorted(
         map(tuple, want_held.collect())
     )

@@ -139,13 +139,7 @@ def test_resume_second_run_emits_suffix(spark, docs):
     routes = chunker.routes_table(docs)
     ckpt0 = chunker.checkpoint_table(docs)
     run1 = run_pipeline(run1_chunks, routes, ckpt0)
-
-    # next-run checkpoint = run-1 output state ∪ old entries for blocked streams
-    ckpt1 = (
-        ckpt0.join(run1.checkpoint_out, ["doc_id", "session"], "left_anti")
-        .unionByName(run1.checkpoint_out)
-    )
-    run2 = run_pipeline(all_chunks, routes, ckpt1)
+    run2 = run_pipeline(all_chunks, routes, run1.checkpoint_out)
     out2 = run2.reassembled.toPandas()
     out2["tokens"] = out2["tokens"].apply(lambda a: [int(x) for x in a])
     assert len(out2) > 0  # gap/blocked streams emit on run 2
@@ -178,6 +172,34 @@ def test_resume_second_run_emits_suffix(spark, docs):
         got[["doc_id", "session", "tokens", "n_tok", "last_seq_out"]],
         want[["doc_id", "session", "tokens", "n_tok", "last_seq_out"]],
     )
+
+
+def test_blocked_stream_keeps_its_checkpoint(spark):
+    """A stream that did not advance keeps its checkpoint row
+    (``SequenceTracker.java:132-154``): resumed at last_seq 1 and blocked
+    on the missing seq 2, stream ``d`` is still at 1 in ``checkpoint_out``,
+    so the next run, fed that checkpoint alone, still holds seqs 3 and 4
+    back. Re-initialised instead, it would emit [3, 4] with seq 2 missing."""
+    from log_aggregator_spark.operators.parse import encode_envelope
+
+    def chunks(seqs):
+        return encode_envelope(spark.createDataFrame(
+            [("d", 10, q, [q], "src1") for q in seqs],
+            schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+        )).select("envelope", "chunk_tokens", "source")
+
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ckpt0 = spark.createDataFrame(
+        [("d", 10, 1)], schema="doc_id string, session long, last_seq long"
+    )
+    run1 = run_pipeline(chunks([3]), routes, ckpt0)
+    run2 = run_pipeline(chunks([3, 4]), routes, run1.checkpoint_out)
+    emitted = run2.reassembled.where("doc_id = 'd'").collect()
+    assert [list(r["tokens"]) for r in emitted] == []
+    assert [tuple(r) for r in run1.checkpoint_out.collect()] == [("d", 10, 1)]
+    assert sorted(r["seq"] for r in run2.held.collect()) == [3, 4]
 
 
 def test_split_rejects_accepts_valid_rejects_corrupt(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 import glob
 import os
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,6 +19,30 @@ def _n_data_files(root):
         p for p in glob.glob(os.path.join(root, "data", "*", "part-*"))
         if not p.endswith(".crc")
     ])
+
+
+def test_commit_keeps_only_files_with_rows(spark, tmp_path):
+    """Spark's writer writes task 0's file even when its partition is
+    empty. A commit lists, and leaves on disk, only the files that hold
+    rows: 3 rows over 4 partitions (the first one empty) give 3 files, and
+    an all-empty overwrite gives none and reads back empty under its
+    schema. Expiry then deletes exactly the files history listed."""
+    root = str(tmp_path / "t")
+    t = SnapshotTable(root)
+    three = spark.range(3, numPartitions=4)
+    t.commit(three)
+    files = t._manifest(1)["tables"][t.MEMBER]["files"]
+    assert [pq.read_metadata(f).num_rows for f in files] == [1, 1, 1]
+    assert _n_data_files(root) == 3
+
+    t.commit(three.where("id < 0"), mode="overwrite")
+    assert t._manifest(2)["tables"][t.MEMBER]["files"] == []
+    empty = t.read(spark)
+    assert empty.columns == ["id"] and empty.count() == 0
+    assert _n_data_files(root) == 3
+
+    assert t.expire_snapshots(keep_last=1)["deleted_files"] == 3
+    assert _n_data_files(root) == 0
 
 
 def test_compact_reduces_files_preserves_rows(spark, tmp_path):
