@@ -36,7 +36,9 @@ A warm pass over new chunks starts 12 Spark jobs on perfbench's
 writes. It runs the parse UDF in one of them, in one Python task per
 Arrow batch of new rows (``maxRecordsPerBatch``, counted from the new
 files' footers), not one per input file: a Python UDF task costs about
-0.2 CPU-s before it reads a row. The held chunks' ages ride through the
+0.03 CPU-s of Python-worker time before it reads a row (0.14 when the
+workers import pyspark from Spark's zips, see ``worker_daemon``; measured
+on a 4-vCPU VM). The held chunks' ages ride through the
 gate, so no join brings them back. Every read names the schema its
 manifest recorded, so none starts a parquet schema-inference job, and the
 lineage rows reach the JVM as Arrow and are written as one file.
@@ -165,7 +167,7 @@ def _run_job_once(
             # instead (the reference logs-and-skips; parse.py:85-). Cached,
             # so the gate input and the rejects member read one evaluation
             # of the parse UDF. Sized by rows, not files: a Python task
-            # costs a fixed ~0.2 CPU-s before its first row, so the new
+            # costs a fixed ~0.03 CPU-s before its first row, so the new
             # chunks are parsed in one task per Arrow batch of rows.
             # ``coalesce`` never splits, so a large input keeps its splits.
             tagged = tag_envelopes(

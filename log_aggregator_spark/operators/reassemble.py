@@ -13,9 +13,9 @@ Reproduces the reference decoder's semantics (SURVEY.md §2 S10–S13):
 * resume: per-(doc_id, session) ``last_seq`` checkpoint
   (``/root/reference/datadecoder/.../SequenceTracker.java:105-113`` — absent ⇒ 0)
 
-One batch plan, ``reassemble_sql``: pure built-in window/aggregate
-operators (the gap cut is ``seq`` minus the running count of distinct
-seqs), whole-stage codegen, no Python. ``plans.pipeline.after_gate``
+One batch plan, ``reassemble_sql``: one built-in ``Window`` operator (the
+gap cut is ``seq`` minus its dense rank) and one aggregate, whole-stage
+codegen, no lambda functions, no Python. ``plans.pipeline.after_gate``
 runs its halves: ``_gate_flags``, lazy or materialized, then the
 ``*_from_flags`` derivations. The streaming path runs the same decision per
 key in numpy (``gate_select``); ``oracle_pandas.reassemble_oracle`` is the
@@ -136,69 +136,75 @@ def gate_select(
 
 def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
     """Deduped live chunks with an ``accepted`` flag — pure built-ins,
-    ONE shuffle.
+    ONE shuffle, ONE ``Window`` operator.
 
     Everything (dedupe, gap cut, init rule, zero rule) is computed from
     window functions over a single ``partitionBy(doc_id, session)
     .orderBy(seq)`` sort — one exchange, one sort, then the downstream
     groupBy(doc_id, session) reuses the partitioning (no second exchange).
     At 10^12 rows this is the irreducible minimum: reassembly IS a per-stream
-    total order.
+    total order. Every window column is computed from the input rows in one
+    projection, so Catalyst evaluates all of them in one ``WindowExec``:
+    the rows and their token arrays are buffered once, not once per
+    window column that reads another.
 
     Mechanics: among live chunks (``seq > last_seq``, plus the ``seq==0 &&
-    last_seq==0`` init special case), ``_dr`` — the running count of
-    first-occurrence rows — equals the dense rank of the row's seq among
-    distinct seqs, so for the contiguous run starting at the anchor (first
-    live positive seq) ``seq - _dr`` is the constant ``anchor -
-    anchor_rank``; the first gap breaks the constant. Duplicate rows are
-    dropped by keeping only the first occurrence per seq (``lag(seq) !=
-    seq`` — the reference detects exactly this on insert,
-    PBLogFileCollector.java:67-70). The survivor row's payload is then
-    replaced by the peer-group minimum (``min(chunk_tokens) RANGE BETWEEN
-    CURRENT ROW AND CURRENT ROW`` — the frame is exactly the equal-seq
-    rows), so the emitted payload is the lexicographically-least among
-    equal seqs — the engine's deterministic survivor rule (see
-    ``gate_select``) — WITHOUT putting the token array into the sort key:
-    a single long sort key keeps SortExec on the radix path, and the
-    array comparator runs only inside the (corruption-rare) multi-row
-    peer frames. A seq==0 chunk with last_seq==0 is emitted but does NOT
-    anchor the run: the reference writes last=0 after it, so the init
-    rule re-fires for the next chunk (DataPumpDecoderSort.java:166-174).
+    last_seq==0`` init special case), ``_dr`` — ``dense_rank()``, the rank
+    of the row's seq among distinct seqs — makes ``seq - _dr`` the
+    constant ``anchor - anchor_rank`` along the contiguous run starting at
+    the anchor (first live positive seq); the first gap breaks the
+    constant. Duplicate rows are dropped by keeping only the first row per
+    seq (``row_number() == rank()`` — the reference detects exactly this on
+    insert, PBLogFileCollector.java:67-70). The survivor row's payload is
+    the peer-group minimum (``min(chunk_tokens) RANGE BETWEEN CURRENT ROW
+    AND CURRENT ROW`` — the frame is exactly the equal-seq rows), so the
+    emitted payload is the lexicographically-least among equal seqs — the
+    engine's deterministic survivor rule (see ``gate_select``) — WITHOUT
+    putting the token array into the sort key: a single long sort key
+    keeps SortExec on the radix path, keeps equal seqs peers for the
+    ranks, and runs the array comparator only inside the
+    (corruption-rare) multi-row peer frames. A seq==0 chunk with
+    last_seq==0 is emitted but does NOT anchor the run: the reference
+    writes last=0 after it, so the init rule re-fires for the next chunk
+    (DataPumpDecoderSort.java:166-174).
     """
     w = Window.partitionBy("doc_id", "session").orderBy("seq")
-    # Running frame (unbounded preceding → current row): with rows sorted by
-    # seq, the stream anchor (first positive live seq) and the zero-chunk
-    # flag (zero sorts first) are RUNNING aggregates — same (partition,
-    # order) spec as lag/dense_rank, so Catalyst evaluates everything in ONE
-    # WindowExec pass with a streaming frame (no whole-partition buffering,
-    # no second Window materialization of 10^12 rows).
+    # Running frame (unbounded preceding → current row), the ranks' own
+    # frame: with rows sorted by seq, the stream anchor (first positive
+    # live seq) and the zero-chunk flag (zero sorts first) are running
+    # aggregates, evaluated as a stream (no whole-partition buffering).
     w_run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     # peer frame: all rows sharing the current row's seq (RANGE with both
-    # bounds at CURRENT ROW = the SQL-standard peer group) — used to pick
-    # the deterministic survivor payload among duplicate seqs. Same
-    # (partition, order) spec as every other frame here → same WindowExec,
-    # no extra exchange or sort.
+    # bounds at CURRENT ROW = the SQL-standard peer group) — picks the
+    # deterministic survivor payload and held age among duplicate seqs.
     w_peer = w.rangeBetween(Window.currentRow, Window.currentRow)
     live = _with_last_seq(parsed, checkpoint).where(
         (F.col("seq") > F.col("last_seq"))
         | ((F.col("seq") == 0) & (F.col("last_seq") == 0))
     )
     zero = (F.col("seq") == 0) & (F.col("last_seq") == 0)
-    anchor = F.first(F.when(F.col("seq") > 0, F.col("seq")), ignorenulls=True).over(w_run)
-    anchor_rank = F.lit(1) + F.max(F.when(zero, 1).otherwise(0)).over(w_run)
-    flags = (
-        live.withColumn("_first", F.lag("seq").over(w).isNull() | (F.lag("seq").over(w) != F.col("seq")))
+    windows = {
+        # the first row of its seq, from ranks, not ``lag``: an offset
+        # function's key in Spark's frame map holds expression ids, so
+        # beside it the generated window code changed from one pass to the
+        # next on the same input, and a repeated pass recompiled it
+        "_first": F.row_number().over(w) == F.rank().over(w),
+        "_dr": F.dense_rank().over(w),
+        "_anchor": F.first(F.when(F.col("seq") > 0, F.col("seq")), ignorenulls=True).over(w_run),
+        "_anchor_rank": F.lit(1) + F.max(F.when(zero, 1).otherwise(0)).over(w_run),
         # deterministic survivor payload: least among equal seqs (peer
         # frames are size 1 except for duplicate seqs, so the array
         # comparator is off the hot path)
-        .withColumn("chunk_tokens", F.min("chunk_tokens").over(w_peer))
-        # running count of first-occurrences == dense rank of seq among
-        # distinct seqs; computed as a second window expr over the SAME
-        # (partition, order) spec, so no extra exchange or sort — the input
-        # is already partitioned and ordered for it. (dense_rank itself
-        # would split equal seqs with differing payloads once the payload
-        # joins the sort key.)
-        .withColumn("_dr", F.sum(F.col("_first").cast("long")).over(w_run))
+        "chunk_tokens": F.min("chunk_tokens").over(w_peer),
+    }
+    if "first_held_run" in live.columns:
+        # a held chunk that arrives again (as a new duplicate) keeps the
+        # pass that first held it: the least among equal seqs, nulls (never
+        # held) ignored
+        windows["first_held_run"] = F.min("first_held_run").over(w_peer)
+    anchor, anchor_rank = F.col("_anchor"), F.col("_anchor_rank")
+    return (
+        live.withColumns(windows)
         .withColumn(
             "accepted",
             F.col("_first")
@@ -210,18 +216,8 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
                 )
             ),
         )
-        .drop("_dr")
+        .drop("_dr", "_anchor", "_anchor_rank")
     )
-    if "first_held_run" in live.columns:
-        # a held chunk that arrives again (as a new duplicate) keeps the
-        # pass that first held it: the least among equal seqs, nulls (never
-        # held) ignored. Added last, so it joins the anchor's WindowExec
-        # (aggregate frames only): beside the lag's frame, whose key in
-        # Spark's frame map holds expression ids, the generated window code
-        # changed from one pass to the next on the same input, and a
-        # repeated pass recompiled it.
-        flags = flags.withColumn("first_held_run", F.min("first_held_run").over(w_peer))
-    return flags
 
 
 def reassemble_sql(parsed: DataFrame, checkpoint: DataFrame | None = None) -> DataFrame:
@@ -239,20 +235,15 @@ def reassemble_from_flags(flagged: DataFrame) -> DataFrame:
     return (
         kept.groupBy("doc_id", "session")
         .agg(
+            # sort_array orders the structs by seq (unique among accepted
+            # rows); no lambda, so the projection is code-generated
             F.flatten(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seq", "chunk_tokens"))),
-                    lambda s: s["chunk_tokens"],
-                )
+                F.sort_array(F.collect_list(F.struct("seq", "chunk_tokens")))
+                .getField("chunk_tokens")
             ).alias("tokens"),
             F.sum(F.size("chunk_tokens")).cast("long").alias("n_tok"),
             F.first("source").alias("source"),
             F.max("seq").cast("long").alias("last_seq_out"),
-        )
-        .withColumn(
-            # a stream that emitted only seq 0 keeps last_seq_out = 0
-            "last_seq_out",
-            F.when(F.col("last_seq_out") < 0, F.lit(0)).otherwise(F.col("last_seq_out")),
         )
         .select("doc_id", "session", "tokens", "n_tok", "source", "last_seq_out")
     )

@@ -27,7 +27,7 @@ C = spec.CHUNK
 SB = spec.SESSION_BASE
 SS = spec.SESSION_STEP
 
-_ENV_RE = r"(.*)_(\d+)_(\d+)\.pbData$"  # end-anchored, mirrors spec.ENVELOPE_REGEX
+_ENV_RE = r"(.*)_(\d+)_(\d+)\.pbData$"  # end-anchored; spec.ENVELOPE_REGEX also anchors ^
 
 # ---------------------------------------------------------------- prelude
 # Mirrors chunker.chunks(perturb=True) + checkpoint_table + routes_table +

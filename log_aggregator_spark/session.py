@@ -23,6 +23,23 @@ from pyspark.sql import SparkSession
 _LOCALE_PIN = "-Duser.language=en -Duser.country=US"
 
 
+def _worker_daemon_conf(master: str, extra_conf: dict[str, str]) -> dict[str, str]:
+    """Confs that start the Python workers through ``worker_daemon``, which
+    imports pyspark from site-packages (see that module). Only for a local
+    master with the package imported from a directory: the daemon starts
+    before any ``--py-files`` archive reaches the worker's path, so it must
+    find the package on ``spark.executorEnv.PYTHONPATH``, and only a local
+    executor shares this directory."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isdir(root) or not (master == "local" or master.startswith(("local[", "local-cluster["))):
+        return {}
+    path = [root] + [p for p in [extra_conf.get("spark.executorEnv.PYTHONPATH")] if p]
+    return {
+        "spark.python.daemon.module": "log_aggregator_spark.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(path),
+    }
+
+
 def get_spark(
     app_name: str = "log_aggregator_spark",
     cores: int | str | None = None,
@@ -69,8 +86,10 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # big Arrow batches: the parse UDF ships only a string column per
         # row — 64k rows ≈ 2.5 MB per batch, and fewer Python round-trips
-        # matter more than batch memory here. run_job also parses its new
-        # chunks in one Python task per this many rows (job._parse_tasks)...
+        # matter more than batch memory here (a round trip costs a fixed
+        # ~0.03 CPU-s before its first row, see worker_daemon). run_job
+        # also parses its new chunks in one Python task per this many rows
+        # (job._parse_tasks)...
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # ...but the row cap alone is wrong for WIDE rows: 64k rows of 64 KB
         # media payloads would be a ~4 GiB Arrow batch. The byte cap closes
@@ -105,7 +124,8 @@ def get_spark(
         # Claim the worker's whole grant for the executor heap.
         mem_mb = int(master.rstrip("]").split(",")[2])
         builder = builder.config("spark.executor.memory", f"{mem_mb}m")
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    for k, v in {**extra_conf, **_worker_daemon_conf(master, extra_conf)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # The locale pin above is launch-time-only config: getOrCreate

@@ -50,19 +50,14 @@ N_PRIORITIES = 3
 # {id}_{session}_{seq}.pbData and its parse regex
 # (/root/reference/datadecoder/.../PBLogFile.java:17-27).
 ENVELOPE_FMT = "%s_%d_%d.pbData"
-# end-anchored: the reference full-matches (Matcher.matches()), while
-# regexp_extract (Spark AND DuckDB) substring-matches — without the $ a
-# 'x_1_2.pbData.bak' envelope would silently parse
-ENVELOPE_REGEX = r"(.*)_(\d+)_(\d+)\.pbData$"
+# anchored at both ends: the reference full-matches (Matcher.matches()),
+# while regex kernels (RE2, Spark, DuckDB) substring-match — without the $
+# a 'x_1_2.pbData.bak' envelope would silently parse, and without the ^ a
+# doc_id holding a newline would parse as its last line
+ENVELOPE_REGEX = r"^(.*)_(\d+)_(\d+)\.pbData$"
 
 DOC_ID_FMT = "doc%08d"
 
 
 def expected_chunk_count(n_tok: int) -> int:
     return (n_tok + CHUNK - 1) // CHUNK
-# named-group form for pyarrow.compute.extract_regex (RE2). RE2 has no
-# backtracking: ``.*`` before ``_`` must not swallow the numeric suffix, so
-# the groups are anchored the same way the reference's greedy Java regex
-# resolves (PBLogFile.java:17-27): id = everything up to the LAST two _num
-# groups.
-ENVELOPE_REGEX_NAMED = r"^(?P<doc_id>.*)_(?P<session>\d+)_(?P<seq>\d+)\.pbData$"

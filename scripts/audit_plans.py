@@ -7,6 +7,8 @@ plan properties that matter at 100 TB:
 * the chunks scan's ReadSchema carries only (envelope, chunk_tokens, source),
 * exactly ONE Exchange feeds the reassembly (plus the tiny aggregate
   exchange) — the irreducible per-stream total order,
+* the gate is ONE Window operator and the reassembly aggregate has no
+  lambda function (interpreted evaluation),
 * sink_counts is a partial hash aggregate (map-side combine before its
   one-row-per-sink exchange),
 * the documents scan under text/dedup queries prunes to the referenced
@@ -43,6 +45,12 @@ def exchange_inputs(plan: str) -> list[str]:
     return out
 
 
+def detail_blocks(plan: str) -> list[str]:
+    """The detail block of every node of a formatted plan, each starting
+    with the node's name."""
+    return re.split(r"^\(\d+\) ", plan, flags=re.MULTILINE)[1:]
+
+
 def main() -> None:
     from log_aggregator_spark import chunker
     from log_aggregator_spark.entry_queries import QUERIES
@@ -75,6 +83,16 @@ def main() -> None:
     check("single heavy exchange", n_exchange == 1,
           f"{n_exchange} shuffle Exchange nodes in enriched plan "
           "(reassembly only)")
+    n_window = len(re.findall(r"\(\d+\) Window\b", plan))
+    check("single gate window", n_window == 1,
+          f"{n_window} Window nodes in enriched plan — every gate column "
+          "must come from one WindowExec over the chunk rows")
+    gate_agg = [b for b in detail_blocks(plan)
+                if b.startswith(("Window", "ObjectHashAggregate", "HashAggregate"))]
+    check("no lambda in gate or reassembly",
+          bool(gate_agg) and not any("lambdafunction" in b for b in gate_agg),
+          "the reassembly aggregate must be code-generated (sort_array + "
+          "field extraction, not array_sort/transform lambdas)")
     m = re.search(r"ReadSchema: struct<(.*)$", plan, re.MULTILINE)
     line = m.group(1) if m else ""
     cols = sorted(re.findall(r"(?:^|,)(\w+):", line))
@@ -84,6 +102,7 @@ def main() -> None:
         "pipeline_enriched (scan → parse → gate/reassemble → broadcast enrich)",
         plan,
         ["one Exchange on (doc_id, session) — the irreducible reassembly shuffle",
+         "one Window: every gate column from one WindowExec",
          "BroadcastHashJoin for routes — no join shuffle",
          "ReadSchema pruned to (envelope, chunk_tokens, source)"],
     ))

@@ -4,6 +4,8 @@ pass → cached chunk parses back with exact payload, id, session, seq)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 from log_aggregator_spark import chunker, spec
@@ -82,3 +84,39 @@ def test_perturbations_present(spark, docs):
     routes = chunker.routes_table(docs).toPandas()
     assert set(routes["sink"]) <= {f"sink{i}" for i in range(spec.N_SINKS)}
     assert routes["source"].is_unique
+
+
+_INT64_MAX = 2**63 - 1
+
+
+@pytest.mark.parametrize(
+    "envelope",
+    [
+        "_3_7.pbData",                        # empty doc_id
+        "a_1_2_3.pbData",                     # the last two _num groups fix the split
+        "x_1_2.pbData.bak",                   # not end-anchored → reject
+        "x__2.pbData",                        # empty session
+        "a\nb_1_2.pbData",                    # newline in doc_id
+        "x_\u0661_2.pbData",                  # non-ASCII digit
+        "x_007_0010.pbData",                  # leading zeros
+        "x_9223372036854775807_9223372036854775807.pbData",
+        "x_00009223372036854775807_1.pbData",
+        None,
+        "x_99999999999999999999_1.pbData",    # overflows int64 → reject
+        "x_1_9223372036854775808.pbData",
+    ],
+)
+def test_parse_envelope_matches_python_reference(spark, envelope):
+    """The Arrow parse kernel against the full-match Python reference: a
+    row parses iff ``spec.ENVELOPE_REGEX`` full-matches with ASCII digits
+    and both numbers fit in int64; anything else gets null fields."""
+    m = envelope is not None and re.fullmatch(spec.ENVELOPE_REGEX, envelope, re.ASCII)
+    want = (None, None, None)
+    if m and int(m.group(2)) <= _INT64_MAX and int(m.group(3)) <= _INT64_MAX:
+        want = (m.group(1), int(m.group(2)), int(m.group(3)))
+    df = spark.createDataFrame(
+        [(envelope, [1], "s")],
+        schema="envelope string, chunk_tokens array<int>, source string",
+    )
+    (row,) = parse_envelope(df).collect()
+    assert (row["doc_id"], row["session"], row["seq"]) == want

@@ -910,6 +910,22 @@ def test_job_routes_malformed_envelopes_to_rejects(spark, tmp_path):
     assert state.rejects.read(spark).count() == 2
 
 
+def test_job_rejects_overflowing_digits(spark, tmp_path):
+    """An envelope whose seq does not fit in int64 is a reject: the pass
+    commits, and its ``rejects`` count holds the row."""
+    ct, routes, state = _small_input(spark, tmp_path)
+    ct.commit(spark.createDataFrame(
+        [("d_10_99999999999999999999.pbData", [3], "src1")],
+        schema="envelope string, chunk_tokens array<int>, source string",
+    ))
+    summary = run_job(spark, ct, routes, state)
+    assert summary["status"] == "ok" and summary["rejects"] == 2
+    assert sorted(r["envelope"] for r in state.rejects.read(spark).collect()) == [
+        "d_10_99999999999999999999.pbData", "totally-garbage",
+    ]
+    assert [list(r["tokens"]) for r in state.routed.read(spark).collect()] == [[1, 2]]
+
+
 def test_run_job_leaves_nothing_pinned(spark, tmp_path, monkeypatch):
     """A pass caches its parse and local-checkpoints its gate decision;
     both are released whether the pass commits, crashes before the commit

@@ -230,3 +230,18 @@ def test_split_rejects_accepts_valid_rejects_corrupt(spark):
     assert ok.where(F.col("doc_id") == "").count() == 1
     got = sorted(r["envelope"] for r in rejects.collect())
     assert got == ["a_2_3.pbData.bak", "doc_1_nosuffix", "garbage-1"]
+
+
+def test_split_rejects_overflowing_digits(spark):
+    """An envelope whose session or seq does not fit in int64 passes the
+    regex; the parse must reject it, not fail the task on the int64 cast."""
+    from log_aggregator_spark.operators.parse import split_rejects
+
+    over = ["x_99999999999999999999_1.pbData", "x_1_99999999999999999999.pbData"]
+    chunks = spark.createDataFrame(
+        [(e, [1], "s") for e in over] + [("x_1_2.pbData", [2], "s")],
+        schema="envelope string, chunk_tokens array<int>, source string",
+    )
+    ok, rejects = split_rejects(chunks)
+    assert [tuple(r) for r in ok.select("doc_id", "session", "seq").collect()] == [("x", 1, 2)]
+    assert sorted(r["envelope"] for r in rejects.collect()) == sorted(over)

@@ -148,6 +148,24 @@ def test_strategies_agree_on_everything(spark):
     pd.testing.assert_frame_equal(b, want)
 
 
+def test_gate_plan_is_one_window_and_codegen_aggregate(spark):
+    """The executed plan of ``reassemble_sql`` has one ``Window`` operator,
+    which buffers each chunk row and its token array once, and no lambda
+    function, which would run the aggregate's result in interpreted mode."""
+    import re
+
+    all_rows = []
+    for i, (rows, _) in enumerate(CASES.values()):
+        all_rows += [(f"{d}#{i}", s, q, t, src) for (d, s, q, t, src) in rows]
+    out = reassemble_sql(chunks_df(spark, all_rows), _ckpt_df(spark, [("a#0", 10, 1)]))
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    plan = plan.split("== Initial Plan ==")[0]
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    assert "lambdafunction" not in plan.lower(), plan
+
+
 def test_held_back(spark):
     rows, _ = CASES["gap_holds_suffix"]
     df = chunks_df(spark, rows)
