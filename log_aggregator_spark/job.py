@@ -15,7 +15,7 @@ Each invocation is one "directory pass" of the reference decoder
    that one materialized result (``plans.pipeline.after_gate``, the
    composition ``run_pipeline`` runs on a lazy gate), stamp the run id and
    the held chunks' ages, and commit them with rejects and metrics in ONE
-   atomic TableGroup manifest swap,
+   atomic TableGroup manifest, against the state snapshot step 1 read,
 4. release the cached parse and the checkpoint, and return the per-sink
    counts and the rejects/held row counts read with pyarrow from the files
    that commit added — exactly what was published, at no Spark job.
@@ -28,7 +28,11 @@ checkpoint, held and metrics all observe the SAME physical rows. A local
 checkpoint is not recomputed from its lineage: a lost block fails the pass
 before the CAS, and the retry starts over from the committed state. The
 cached parse under it may be recomputed after a lost block, which is safe
-because the UDF is a pure function of the envelope.
+because the UDF is a pure function of the envelope. The pass reads
+checkpoint, held and lineage at one state snapshot and commits against that
+snapshot, so the CAS covers its whole read-to-commit window: a rival commit
+that lands while the pass computes fails the pass instead of being stacked
+on.
 
 Cost: at small inputs a pass is bound by fixed per-job and per-task cost.
 A warm pass over new chunks starts 12 Spark jobs on perfbench's
@@ -44,14 +48,14 @@ manifest recorded, so none starts a parquet schema-inference job, and the
 lineage rows reach the JVM as Arrow and are written as one file.
 
 Crash safety: the single TableGroup commit has NO duplicate-append window —
-either the CURRENT swap happened (all tables advanced together) or it
-didn't (previous state fully visible; the retry reprocesses the same chunks
-snapshot once; orphaned data dirs are inert). The reference's own
-documented window between payload append and ``.lastSeq`` write
-(``DataPumpDecoderSort.java:48-51``) is thereby closed, not just made
-detectable. Concurrent committers are excluded by the manifest CAS
-(``tableio.ConcurrentCommitError``); the run_id column (= chunks snapshot
-processed) remains as the audit/idempotency key.
+either its manifest was linked in (all tables advanced together; the retry
+finds that input processed) or it wasn't (previous state fully visible; the
+retry reprocesses the same chunks snapshot once; orphaned data dirs are
+inert). The reference's own documented window between payload append and
+``.lastSeq`` write (``DataPumpDecoderSort.java:48-51``) is thereby closed,
+not just made detectable. Concurrent passes are excluded by the manifest
+CAS (``tableio.ConcurrentCommitError``); the run_id column (= chunks
+snapshot processed) remains as the audit/idempotency key.
 
 Output invariant (tested in tests/test_job_resume.py): for every
 (doc_id, session), the concatenation of routed token segments in run order
@@ -136,15 +140,18 @@ def _run_job_once(
     Lineage rows come from metadata alone (the manifest diff and the new
     files' parquet footers), so they cost no second scan of the input."""
     t_start = time.perf_counter()
+    # the pass reads the state at one snapshot and commits against it
+    read_snap = state.group.current_snapshot()
     last_processed = None
     ckpt_df = None
-    if state.checkpoint.exists():
-        last_processed = state.checkpoint.lineage().get("chunks_snapshot")
-        ckpt_df = state.checkpoint.read(spark)
+    if state.checkpoint.exists(read_snap):
+        last_processed = state.checkpoint.lineage(read_snap).get("chunks_snapshot")
+        ckpt_df = state.checkpoint.read(spark, read_snap)
+    has_held = state.held.exists(read_snap)
 
     current_snap = chunks_table.current_snapshot()
     new_chunks = chunks_table.read_incremental(spark, last_processed)
-    if new_chunks is None and not state.held.exists():
+    if new_chunks is None and not has_held:
         return {"run_id": None, "status": "no_new_data"}
 
     # Everything this pass pins in executor storage (the cached parse and the
@@ -174,10 +181,10 @@ def _run_job_once(
                 new_chunks.coalesce(_parse_tasks(spark, sum(new_file_rows)))
             ).cache()
             parsed, rejects = split_tagged(tagged)
-        if state.held.exists():
+        if has_held:
             # held chunks carry ``first_held_run`` into the gate, which keeps
             # the least one among equal seqs; new chunks carry none
-            held = state.held.read(spark)
+            held = state.held.read(spark, read_snap)
             parsed = (
                 held if parsed is None
                 else parsed.unionByName(held, allowMissingColumns=True)
@@ -193,7 +200,7 @@ def _run_job_once(
         # commit per pass ⇒ +1 per run_job), NOT the chunks snapshot id —
         # multiple chunk-table commits between passes would otherwise age a
         # held chunk several "runs" in one pass (ADVICE r2).
-        pass_id = (state.group.current_snapshot() or 0) + 1
+        pass_id = (read_snap or 0) + 1
 
         # ---- the ONE computation: gate decision, materialized ------------
         flagged = _gate_flags(parsed, ckpt_df).localCheckpoint(eager=True)
@@ -241,6 +248,7 @@ def _run_job_once(
                 "pass_id": pass_id,
                 "wall_sec": wall,
             },
+            parent=read_snap,
         )
     finally:
         if tagged is not None:
@@ -287,24 +295,25 @@ def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     shipped, or the source was re-exported). One atomic TableGroup commit:
     held gains the rows (age reset to the current pass so they don't
     instantly re-quarantine), quarantine empties. Returns rows moved."""
-    if not state.quarantine.exists():
+    read_snap = state.group.current_snapshot()
+    if not state.quarantine.exists(read_snap):
         return 0
-    q = state.quarantine.read(spark)
+    q = state.quarantine.read(spark, read_snap)
     n = q.count()
     if n == 0:
         return 0
-    pass_id = (state.group.current_snapshot() or 0) + 1
+    pass_id = read_snap + 1
     requeued = q.select(
         "doc_id", "session", "seq", "chunk_tokens", "source"
     ).withColumn("first_held_run", F.lit(pass_id).cast("long"))
-    if state.held.exists():
-        requeued = state.held.read(spark).select(*requeued.columns).unionByName(
-            requeued
-        )
+    if state.held.exists(read_snap):
+        held = state.held.read(spark, read_snap)
+        requeued = held.select(*requeued.columns).unionByName(requeued)
     empty_q = spark.createDataFrame([], schema=q.schema)
     state.group.commit(
         {"held": (requeued, "overwrite"), "quarantine": (empty_q, "overwrite")},
         lineage={"requeued_quarantine_rows": n, "pass_id": pass_id},
+        parent=read_snap,
     )
     return n
 

@@ -165,14 +165,16 @@ def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
     return spark.createDataFrame([], schema=schema)
 
 
-def read_clusters(spark: SparkSession, group: TableGroup) -> DataFrame:
+def read_clusters(
+    spark: SparkSession, group: TableGroup, snapshot: int | None = None
+) -> DataFrame:
     """The resolved duplicate-clusters view: append-only base labels
     resolved through the consolidated remap (single-hop by construction).
     Remap is merge-event-sized — broadcast under AQE in the common case;
     past broadcast size the join degrades gracefully to a shuffle join and
-    ``compact_clusters`` resets it."""
-    base = group.read_member(spark, CLUSTERS_BASE)
-    remap = group.read_member(spark, LABEL_REMAP)
+    ``compact_clusters`` resets it. ``snapshot``: default latest."""
+    base = group.read_member(spark, CLUSTERS_BASE, snapshot)
+    remap = group.read_member(spark, LABEL_REMAP, snapshot)
     return (
         base.join(remap, base["cluster_id"] == remap["old_label"], "left")
         .select(
@@ -190,17 +192,21 @@ def compact_clusters(spark: SparkSession, group: TableGroup) -> int:
     """Fold the remap into the base (ONE amortized corpus-sized rewrite)
     and empty it — run when the remap outgrows broadcast size, exactly like
     Iceberg table compaction. Atomic: readers see either the old
-    base+remap or the new base+empty, never a half state."""
-    resolved = read_clusters(spark, group).select("doc_id", "cluster_id")
+    base+remap or the new base+empty, never a half state. Committed against
+    the snapshot it read, so a fold that lands meanwhile fails it with
+    ConcurrentCommitError instead of being overwritten."""
+    snap = group.current_snapshot()
+    resolved = read_clusters(spark, group, snap).select("doc_id", "cluster_id")
     return group.commit(
         {
             CLUSTERS_BASE: (resolved, "overwrite"),
             LABEL_REMAP: (_empty(spark, _REMAP_SCHEMA), "overwrite"),
         },
         lineage={
-            "batch_id": int(group.lineage().get("batch_id", -1)),
+            "batch_id": int(group.lineage(snap).get("batch_id", -1)),
             "compaction": True,
         },
+        parent=snap,
     )
 
 
@@ -258,6 +264,7 @@ def _fold_batch(
     batch_id: int,
     stop_shingles: DataFrame | None = None,
 ) -> int | None:
+    # every state read below is at this snapshot; the commit is against it
     snap = group.current_snapshot()
 
     # At-least-once upstream: collapse intra-batch re-deliveries, drop docs
@@ -265,11 +272,11 @@ def _fold_batch(
     # append-only base — membership needs no remap resolution).
     batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
     if snap is not None:
-        base = group.read_member(spark, CLUSTERS_BASE)
-        old_remap = group.read_member(spark, LABEL_REMAP)
-        stored = read_clusters(spark, group)
-        fp_tbl = group.read_member(spark, FINGERPRINTS)
-        key_tbl = group.read_member(spark, BAND_KEYS)
+        base = group.read_member(spark, CLUSTERS_BASE, snap)
+        old_remap = group.read_member(spark, LABEL_REMAP, snap)
+        stored = read_clusters(spark, group, snap)
+        fp_tbl = group.read_member(spark, FINGERPRINTS, snap)
+        key_tbl = group.read_member(spark, BAND_KEYS, snap)
         batch = batch.join(base.select("doc_id"), "doc_id", "left_anti")
     else:
         old_remap = _empty(spark, _REMAP_SCHEMA)
@@ -409,6 +416,7 @@ def _fold_batch(
             DECISIONS: (decisions, "append"),
         },
         lineage={"batch_id": int(batch_id), "n_docs": int(n_docs)},
+        parent=snap,
     )
 
 

@@ -5,11 +5,12 @@ Iceberg runtime jar (network blocked), so ``TableGroup`` reproduces the
 two Iceberg properties the pipeline actually relies on, over plain parquet:
 
 * **atomic snapshot commit** — data files land first, then a manifest JSON
-  naming exactly those files is O_EXCL-created and the CURRENT pointer is
-  swapped via tmp-file + ``os.replace`` (atomic on POSIX). Readers resolve
-  the latest manifest; a crash mid-write leaves no partially-visible data.
-  This is the table-level analog of the reference's ``.tmp`` +
-  ``ATOMIC_MOVE`` per chunk
+  naming exactly those files is written whole under a temp name and
+  hard-linked to ``snap-N.json``: one atomic put-if-absent, the commit
+  point. The highest ``snap-N.json`` is the current snapshot, so a crash
+  anywhere leaves either no new manifest or a complete one, and never
+  partially-visible data. This is the table-level analog of the
+  reference's ``.tmp`` + ``ATOMIC_MOVE`` per chunk
   (``/root/reference/agent/.../DataPumpImpl.java:55-61``,
   ``/root/reference/server/.../LogServerController.java:122-128``).
 * **incremental reads** — each manifest records its parent; the diff of two
@@ -28,7 +29,6 @@ Layout::
 
     <root>/data/<uuid>/part-*.parquet          (one dir per member write with rows)
     <root>/manifests/snap-00000001.json        (member file lists + lineage)
-    <root>/manifests/CURRENT                   (atomic pointer file)
 
 Driver-side filesystem ops only (a commit is O(#files) metadata, never
 data movement); executors touch parquet exclusively.
@@ -40,6 +40,7 @@ import glob
 import json
 import os
 import shutil
+import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
@@ -54,24 +55,13 @@ ORPHAN_MIN_AGE_SEC: float = 3 * 24 * 3600
 class ConcurrentCommitError(RuntimeError):
     """Another committer already published this snapshot id. Iceberg's
     commit is an atomic compare-and-swap on the metadata pointer; the
-    stand-in gets the same guarantee from O_CREAT|O_EXCL on the snapshot
-    manifest — the LOSING writer fails loudly instead of silently
-    clobbering the winner's snapshot (lost update)."""
+    stand-in gets the same guarantee from linking the manifest to its
+    ``snap-N.json`` name, which fails when the name exists — the LOSING
+    writer fails loudly instead of silently clobbering the winner's
+    snapshot (lost update)."""
 
 
-def _create_exclusive(path: str, content: str) -> None:
-    fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY, 0o644)
-    try:
-        os.write(fd, content.encode())
-    finally:
-        os.close(fd)
-
-
-def _write_atomic(path: str, content: str) -> None:
-    tmp = path + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        f.write(content)
-    os.replace(tmp, path)  # atomic on POSIX — the commit point
+_AT_CALL = object()  # ``TableGroup.commit``'s default parent
 
 
 def _gc_data_dir(
@@ -87,9 +77,7 @@ def _gc_data_dir(
     NO manifest ever is deleted only past ``orphan_min_age_sec`` (it may
     belong to an in-flight concurrent commit — see expire_snapshots).
     Driver-side metadata-only walk."""
-    import time as _time
-
-    cutoff = _time.time() - orphan_min_age_sec
+    cutoff = time.time() - orphan_min_age_sec
     deleted = 0
     for d in glob.glob(os.path.join(data_root, "*")):
         parts = glob.glob(os.path.join(d, "part-*"))  # checksums are ".part-*"
@@ -308,8 +296,8 @@ class GroupMember:
         member; [] when that commit carried the member forward."""
         return self._group._entry(self.name, snapshot)["added_files"]
 
-    def exists(self) -> bool:
-        return self._group.member_exists(self.name)
+    def exists(self, snapshot: int | None = None) -> bool:
+        return self._group.member_exists(self.name, snapshot)
 
     def lineage(self, snapshot: int | None = None) -> dict:
         return self._group.lineage(snapshot)
@@ -317,14 +305,14 @@ class GroupMember:
 
 class TableGroup:
     """Atomic MULTI-table commit: one manifest names the complete file
-    lists of every member table, one CURRENT pointer swap makes them all
+    lists of every member table, and its one atomic link makes them all
     visible together.
 
     This closes the duplicate-append crash window the per-table design had
     (routed appended, then crash before the checkpoint overwrite → retry
     re-appends; the reference has the same window between payload append
     and its ``.lastSeq`` write, ``DataPumpDecoderSort.java:48-51``). With
-    one commit there IS no between: a crash anywhere before the swap
+    one commit there IS no between: a crash anywhere before the link
     leaves the previous snapshot fully visible (orphaned data dirs are
     inert garbage — exactly Iceberg's orphan-file model), and the retry
     reprocesses the same input once.
@@ -332,8 +320,8 @@ class TableGroup:
     Manifest layout: ``{"snapshot": N, "parent": P, "tables": {name:
     {"files": [...], "added_files": [...], "schema": ...}}, "lineage":
     {...}}``; an 'append' member lists its parent's files plus the new
-    ones, an 'overwrite' member only the new ones;
-    the snap file is O_EXCL-created (CAS, see ConcurrentCommitError)."""
+    ones, an 'overwrite' member only the new ones; the snap file is
+    created once, by ``_publish`` (CAS, see ConcurrentCommitError)."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -345,13 +333,18 @@ class TableGroup:
         self,
         tables: dict[str, tuple[DataFrame, str]],
         lineage: dict | None = None,
+        parent=_AT_CALL,
     ) -> int:
         """tables: name → (df, mode) with mode in {'append', 'overwrite'}.
         Members absent from ``tables`` carry forward unchanged. Returns the
-        new snapshot id; nothing is visible until the single CURRENT swap
-        at the end."""
+        new snapshot id, visible once ``_publish`` links the manifest.
+        ``parent`` is the snapshot the inputs were read at (None: the empty
+        group) and the CAS's expected value: if another commit has landed
+        since, this one raises ConcurrentCommitError. The default, the
+        snapshot current at the call, suits a blind append."""
         os.makedirs(self._manifest_dir, exist_ok=True)
-        parent = self.current_snapshot()
+        if parent is _AT_CALL:
+            parent = self.current_snapshot()
         parent_tables = self._manifest(parent)["tables"] if parent else {}
 
         # Member writes are independent Spark jobs over disjoint data dirs;
@@ -360,7 +353,7 @@ class TableGroup:
         # the dominant per-micro-batch floor in the streaming dedup fold).
         # The manifest is assembled after ALL writes complete, in the
         # caller's member order, so concurrency never reaches visibility:
-        # the single CURRENT swap below still publishes all-or-nothing.
+        # the single link in ``_publish`` still publishes all-or-nothing.
         def _write(item: tuple[str, tuple[DataFrame, str]]) -> tuple[str, dict]:
             name, (df, mode) = item
             data_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
@@ -376,13 +369,8 @@ class TableGroup:
             }
 
         items = list(tables.items())
-        if not items:
-            # Carry-forward-only commit (e.g. compact() found every named
-            # member empty): still publish a snapshot, like the serial loop
-            # this threaded form replaced — ThreadPoolExecutor(0) would raise.
-            entries: dict[str, dict] = {}
-        elif len(items) == 1:
-            entries = dict([_write(items[0])])
+        if len(items) < 2:  # one member, or none (a carry-forward commit)
+            entries = dict(map(_write, items))
         else:
             with ThreadPoolExecutor(max_workers=len(items)) as pool:
                 entries = dict(pool.map(_write, items))
@@ -401,39 +389,47 @@ class TableGroup:
         return snap_id
 
     def _publish(self, snap_id: int, manifest: dict) -> None:
-        """The commit point: CAS-create the snap manifest, then swap
-        CURRENT. Split out so crash-injection tests can kill the job right
-        before visibility."""
-        snap_path = os.path.join(self._manifest_dir, f"snap-{snap_id:08d}.json")
+        """The commit point: write the manifest whole under a temp name that
+        never matches ``snap-*.json``, then hard-link it to its snap name —
+        atomic, and failing when the name exists (the CAS). Split out so
+        crash-injection tests can kill the job right before visibility."""
+        tmp = os.path.join(self._manifest_dir, f".tmp-{uuid.uuid4().hex}")
+        with open(tmp, "w") as f:
+            json.dump(manifest, f)
         try:
-            _create_exclusive(snap_path, json.dumps(manifest))
+            os.link(tmp, self._snap_path(snap_id))
         except FileExistsError as e:
             raise ConcurrentCommitError(
                 f"snapshot {snap_id} already committed in {self.root}; "
                 "re-read the group and retry"
             ) from e
-        _write_atomic(os.path.join(self._manifest_dir, "CURRENT"), str(snap_id))
+        finally:
+            os.remove(tmp)
 
     # ----------------------------------------------------------- read path
 
     def table(self, name: str) -> GroupMember:
         return GroupMember(self, name)
 
+    def _snap_path(self, snap_id: int) -> str:
+        return os.path.join(self._manifest_dir, f"snap-{snap_id:08d}.json")
+
+    def _snapshot_ids(self) -> list[int]:
+        """The committed snapshot ids, ascending: one per ``snap-N.json``."""
+        paths = glob.glob(os.path.join(self._manifest_dir, "snap-*.json"))
+        return sorted(int(os.path.basename(p)[5:-5]) for p in paths)
+
     def current_snapshot(self) -> int | None:
-        try:
-            with open(os.path.join(self._manifest_dir, "CURRENT")) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return None
+        """The latest committed snapshot: the highest manifest id."""
+        ids = self._snapshot_ids()
+        return ids[-1] if ids else None
 
     def _manifest(self, snap_id: int) -> dict:
-        with open(
-            os.path.join(self._manifest_dir, f"snap-{snap_id:08d}.json")
-        ) as f:
+        with open(self._snap_path(snap_id)) as f:
             return json.load(f)
 
-    def member_exists(self, name: str) -> bool:
-        snap = self.current_snapshot()
+    def member_exists(self, name: str, snapshot: int | None = None) -> bool:
+        snap = snapshot if snapshot is not None else self.current_snapshot()
         return snap is not None and name in self._manifest(snap)["tables"]
 
     def read_member(
@@ -469,7 +465,10 @@ class TableGroup:
         empty members carry forward. Readers switch atomically; history
         (and time travel to pre-compaction snapshots) is preserved until
         ``expire_snapshots``. ``coalesce`` (not ``repartition``) —
-        compaction must not pay a shuffle."""
+        compaction must not pay a shuffle. The commit is against the
+        snapshot compaction read, so an append that lands meanwhile fails
+        it with ConcurrentCommitError instead of being dropped by the
+        overwrite."""
         cur = self.current_snapshot()
         if cur is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
@@ -482,11 +481,12 @@ class TableGroup:
                 continue
             total = sum(os.path.getsize(f) for f in files)
             n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
-            dfs[n] = (self.read_member(spark, n).coalesce(n_out), "overwrite")
+            dfs[n] = (self.read_member(spark, n, cur).coalesce(n_out), "overwrite")
         # the group commit by name: SnapshotTable overrides ``commit`` with
         # its one-table form
         return TableGroup.commit(
-            self, dfs, lineage={**self.lineage(cur), "compacted_from": cur}
+            self, dfs, lineage={**self.lineage(cur), "compacted_from": cur},
+            parent=cur,
         )
 
     def expire_snapshots(
@@ -495,7 +495,7 @@ class TableGroup:
         """Iceberg's ``expire_snapshots`` + ``remove_orphan_files`` pair:
         drop manifests older than the newest ``keep_last`` snapshots, then
         delete every data dir referenced by NO surviving manifest.
-        CURRENT is untouched (always among the kept). Incremental
+        The current snapshot is always among the kept. Incremental
         reads/time travel older than the horizon stop working, exactly as
         in Iceberg. Returns {'expired': [...], 'deleted_files': n}.
 
@@ -506,28 +506,21 @@ class TableGroup:
         skipped (Iceberg's remove_orphan_files defaults to 3 days for
         exactly this). Dirs referenced only by the manifests being expired
         were committed and superseded — they delete regardless of age."""
-        cur = self.current_snapshot()
-        if cur is None:
-            return {"expired": [], "deleted_files": 0}
-        keep = set(range(max(1, cur - keep_last + 1), cur + 1))
-        expired = []
+        ids = self._snapshot_ids()
+        cut = max(0, len(ids) - max(1, keep_last))  # ids[:cut] expire
         referenced: set[str] = set()
         expired_refs: set[str] = set()
-        for path in sorted(glob.glob(os.path.join(self._manifest_dir, "snap-*.json"))):
-            snap_id = int(os.path.basename(path)[5:13])
-            if snap_id in keep:
-                for entry in self._manifest(snap_id)["tables"].values():
-                    referenced.update(entry["files"])
-            else:
-                for entry in self._manifest(snap_id)["tables"].values():
-                    expired_refs.update(entry["files"])
-                os.remove(path)
-                expired.append(snap_id)
+        for i, snap_id in enumerate(ids):
+            refs = expired_refs if i < cut else referenced
+            for entry in self._manifest(snap_id)["tables"].values():
+                refs.update(entry["files"])
+        for snap_id in ids[:cut]:
+            os.remove(self._snap_path(snap_id))
         deleted = _gc_data_dir(
             os.path.join(self.root, "data"), referenced, expired_refs,
             orphan_min_age_sec,
         )
-        return {"expired": expired, "deleted_files": deleted}
+        return {"expired": ids[:cut], "deleted_files": deleted}
 
 
 class SnapshotTable(TableGroup):
@@ -585,10 +578,6 @@ class SnapshotTable(TableGroup):
             return entry, list(entry["files"])
         old = set(self._entry(self.MEMBER, since)["files"])
         return entry, [f for f in entry["files"] if f not in old]
-
-    def compact(self, spark: SparkSession, target_file_mb: int = 128) -> int:
-        """``TableGroup.compact`` of the one member."""
-        return super().compact(spark, target_file_mb=target_file_mb)
 
 
 # ---------------------------------------------------------- bucketed layout

@@ -8,6 +8,8 @@ reassembly of all chunks — and the final checkpoint/held state matches.
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -473,7 +475,7 @@ def test_midstream_init_across_runs(spark, tmp_path):
 
 
 def test_crash_before_publish_leaves_no_partial_state(spark, tmp_path, monkeypatch):
-    """Kill the job right before the TableGroup CURRENT swap: NOTHING is
+    """Kill the job right before the TableGroup commit point: NOTHING is
     visible (no routed rows, no checkpoint advance); the retry processes
     the same chunks snapshot exactly once — no duplicate appends, no
     replayed run_id."""
@@ -569,7 +571,7 @@ def test_run_job_retries_after_losing_commit_race(spark, tmp_path, monkeypatch):
     """run_job(retries=N): a committer that loses the manifest CAS re-runs
     the pass on the winner's committed state instead of dying. Simulated as
     a GENUINE race: a rival TableGroup commits from the same parent in the
-    window between the loser's manifest build and its CURRENT swap."""
+    window between the loser's manifest build and its commit point."""
     from log_aggregator_spark.tableio import ConcurrentCommitError, TableGroup
 
     good = spark.createDataFrame(
@@ -610,6 +612,92 @@ def test_run_job_retries_after_losing_commit_race(spark, tmp_path, monkeypatch):
     # the rival's commit survived (snapshot 1) and the pass landed on top (2)
     assert state.group.current_snapshot() == 2
     assert state.group.table("audit").read(spark).count() == 1
+
+
+def _one_stream(spark, seqs):
+    """Envelopes of stream ``d`` session 10, chunk ``i`` holding ``[i]``."""
+    rows = [("d", 10, i, [i], "src1") for i in seqs]
+    return encode_envelope(spark.createDataFrame(
+        rows,
+        schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+    )).select("envelope", "chunk_tokens", "source")
+
+
+def test_crash_after_commit_point_next_pass_commits(spark, tmp_path, monkeypatch):
+    """Kill the pass right after its manifest is linked in, before the
+    commit returns. The linked manifest IS the commit: the group shows the
+    pass, the next pass commits on top of it, and the routed rows equal the
+    single-run reassembly with nothing duplicated or lost."""
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2]))
+    run_job(spark, ct, routes, state)
+    ct.commit(_one_stream(spark, [3, 4]))
+
+    real_link = os.link
+
+    def link_then_crash(src, dst):
+        real_link(src, dst)
+        raise RuntimeError("simulated crash after the commit point")
+
+    monkeypatch.setattr(os, "link", link_then_crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        run_job(spark, ct, routes, state)
+    monkeypatch.setattr(os, "link", real_link)
+    assert state.group.current_snapshot() == 2
+    assert state.checkpoint.read(spark).collect()[0]["last_seq"] == 4
+
+    ct.commit(_one_stream(spark, [5]))
+    assert run_job(spark, ct, routes, state)["status"] == "ok"
+    routed = state.routed.read(spark).toPandas()
+    assert not routed.duplicated(["doc_id", "session", "run_id"]).any()
+    assert [list(t) for t in _segments(state, spark)["tokens"]] == [[1, 2, 3, 4, 5]]
+    assert all(
+        n.startswith("snap-") for n in os.listdir(tmp_path / "state" / "group" / "manifests")
+    )
+
+
+def test_rival_pass_during_compute_loses_the_cas(spark, tmp_path, monkeypatch):
+    """A rival pass over the same state commits while this pass computes,
+    after its reads and before its commit. The pass commits against the
+    snapshot it read, so it loses the CAS instead of stacking a second copy
+    of the rival's routed rows; with ``retries=1`` it re-reads the rival's
+    state and routes nothing twice."""
+    from log_aggregator_spark.tableio import ConcurrentCommitError, TableGroup
+
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    ct.commit(_one_stream(spark, [1, 2]))
+
+    real_commit = TableGroup.commit
+    rival = {"state": None}
+
+    def rival_first(self, tables, lineage=None, **kwargs):
+        st, rival["state"] = rival["state"], None
+        if st is not None:
+            run_job(spark, ct, routes, JobState(st))
+        return real_commit(self, tables, lineage, **kwargs)
+
+    monkeypatch.setattr(TableGroup, "commit", rival_first)
+
+    # retries=0 (default): the loss propagates; the rival's rows stand
+    rival["state"] = str(tmp_path / "state0")
+    state0 = JobState(rival["state"])
+    with pytest.raises(ConcurrentCommitError):
+        run_job(spark, ct, routes, state0)
+    assert [list(r["tokens"]) for r in state0.routed.read(spark).collect()] == [[1, 2]]
+
+    # retries=1: the re-run stands on the rival's snapshot
+    rival["state"] = str(tmp_path / "state")
+    state = JobState(rival["state"])
+    assert run_job(spark, ct, routes, state, retries=1)["status"] == "ok"
+    assert [list(r["tokens"]) for r in state.routed.read(spark).collect()] == [[1, 2]]
+    assert state.group.current_snapshot() == 2
 
 
 def test_requeue_quarantine_backfills_held(spark, tmp_path):

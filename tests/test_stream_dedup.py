@@ -8,6 +8,7 @@ from __future__ import annotations
 import random
 
 import pandas as pd
+import pytest
 
 from log_aggregator_spark.functions import dedup as fdedup
 from log_aggregator_spark.functions.text import shingles
@@ -22,7 +23,7 @@ from log_aggregator_spark.streaming.stream_dedup import (
     compact_clusters,
     read_clusters,
 )
-from log_aggregator_spark.tableio import TableGroup
+from log_aggregator_spark.tableio import ConcurrentCommitError, TableGroup
 
 _WORDS = [f"tok{i}" for i in range(40)]
 
@@ -369,3 +370,33 @@ def test_auto_compact_keeps_remap_bounded_and_view_identical(spark, tmp_path):
         is None
     )
     assert auto.current_snapshot() == snap
+
+
+def test_compact_clusters_fails_on_fold_landing_after_its_read(
+    spark, tmp_path, monkeypatch
+):
+    """compact_clusters commits against the snapshot it read: a fold that
+    lands between its read and its commit fails it with
+    ConcurrentCommitError, where its base overwrite would drop the folded
+    docs. A retry compacts them in."""
+    pdf = _corpus(12)
+    g = TableGroup(str(tmp_path / "g"))
+    apply_dedup_batch(spark, g, _docs_df(spark, pdf.iloc[:6]), 0)
+    real_commit = TableGroup.commit
+    fold = {"batch": _docs_df(spark, pdf.iloc[6:])}
+
+    def fold_first(self, tables, lineage=None, **kwargs):
+        batch, fold["batch"] = fold["batch"], None
+        if batch is not None:
+            apply_dedup_batch(spark, g, batch, 1)
+        return real_commit(self, tables, lineage, **kwargs)
+
+    monkeypatch.setattr(TableGroup, "commit", fold_first)
+    with pytest.raises(ConcurrentCommitError):
+        compact_clusters(spark, g)
+    assert read_clusters(spark, g).count() == len(pdf)
+    compact_clusters(spark, g)
+    assert g.read_member(spark, LABEL_REMAP).count() == 0
+    pd.testing.assert_frame_equal(
+        _stored_clusters(spark, g), _full_recompute(spark, pdf), check_dtype=False
+    )

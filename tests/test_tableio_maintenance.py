@@ -118,6 +118,39 @@ def test_group_compact_and_expire(spark, tmp_path):
     assert g.table("ckpt").read(spark).count() == 5
 
 
+def test_compact_fails_on_append_landing_after_its_read(spark, tmp_path, monkeypatch):
+    """compact commits against the snapshot it read: an append that lands
+    between its read and its commit fails it with ConcurrentCommitError,
+    where an overwrite of the read file list would silently drop the
+    appended rows. A retry compacts them in."""
+    from log_aggregator_spark.tableio import ConcurrentCommitError
+
+    g = TableGroup(str(tmp_path / "g"))
+    for i in range(2):
+        g.commit({"routed": (
+            spark.range(i * 10, (i + 1) * 10).repartition(3)
+            .select(F.col("id").alias("x")), "append"
+        )})
+    real_commit = TableGroup.commit
+    late = {"df": spark.range(20, 25).select(F.col("id").alias("x"))}
+
+    def append_first(self, tables, lineage=None, **kwargs):
+        df, late["df"] = late["df"], None
+        if df is not None:
+            real_commit(self, {"routed": (df, "append")})
+        return real_commit(self, tables, lineage, **kwargs)
+
+    def rows():
+        return sorted(r["x"] for r in g.table("routed").read(spark).collect())
+
+    monkeypatch.setattr(TableGroup, "commit", append_first)
+    with pytest.raises(ConcurrentCommitError):
+        g.compact(spark, names=["routed"])
+    assert rows() == list(range(25))
+    assert g.compact(spark, names=["routed"]) == 4
+    assert rows() == list(range(25))
+
+
 def test_group_empty_commit_is_carry_forward(spark, tmp_path):
     """commit({}) publishes a snapshot with every member carried forward —
     reachable via compact() when every named member is empty (e.g. right
