@@ -4,9 +4,11 @@ to the snapshot-table storage layer.
 Each invocation is one "directory pass" of the reference decoder
 (``DataPumpDecoderSort.java:103-181``), promoted to a cluster batch job:
 
-1. read NEW chunk rows (incremental scan of the chunks table since the last
-   processed snapshot) plus the HELD cache (chunks previous runs could not
-   consume — the reference's "cache grows" files, ``datadecoder/README.md:13-15``),
+1. read NEW chunk rows (what the chunks table's appends added after the
+   lineage's ``chunks_snapshot``, resolved once, so each chunk is parsed
+   once, ``DataPumpDecoderSort.java:55-85``) plus the HELD cache (chunks
+   previous runs could not consume — the reference's "cache grows" files,
+   ``datadecoder/README.md:13-15``),
 2. parse the new envelopes ONCE into a cached frame that both the gate
    input and the ``rejects`` member read, then run the gate against the
    persisted checkpoint table (``SequenceTracker`` analog) and MATERIALIZE
@@ -76,7 +78,7 @@ from .operators.parse import split_tagged, tag_envelopes
 from .operators.reassemble import _gate_flags
 from .plans.pipeline import after_gate
 from .session import persistent_rdd_ids, unpersist_rdds
-from .tableio import ConcurrentCommitError, SnapshotTable, TableGroup, file_rows
+from .tableio import ConcurrentCommitError, SnapshotTable, TableGroup, file_rows, read_files
 
 
 class JobState:
@@ -137,21 +139,21 @@ def _run_job_once(
     being re-gated forever — the batch counterpart of the streaming state
     TTL. None (default) = keep forever (reference-faithful).
 
-    Lineage rows come from metadata alone (the manifest diff and the new
-    files' parquet footers), so they cost no second scan of the input."""
+    The pass reads, stamps (``run_id``) and records the one chunks snapshot
+    ``increment`` resolved. Lineage rows come from metadata alone (the
+    manifests and the new files' parquet footers), so they cost no second
+    scan of the input."""
     t_start = time.perf_counter()
     # the pass reads the state at one snapshot and commits against it
     read_snap = state.group.current_snapshot()
-    last_processed = None
     ckpt_df = None
     if state.checkpoint.exists(read_snap):
-        last_processed = state.checkpoint.lineage(read_snap).get("chunks_snapshot")
         ckpt_df = state.checkpoint.read(spark, read_snap)
     has_held = state.held.exists(read_snap)
-
-    current_snap = chunks_table.current_snapshot()
-    new_chunks = chunks_table.read_incremental(spark, last_processed)
-    if new_chunks is None and not has_held:
+    chunks_snap, new_files, schema = chunks_table.increment(
+        state.group.lineage(read_snap).get("chunks_snapshot")
+    )
+    if not new_files and not has_held:
         return {"run_id": None, "status": "no_new_data"}
 
     # Everything this pass pins in executor storage (the cached parse and the
@@ -163,11 +165,10 @@ def _run_job_once(
     try:
         # the new files' parquet footers, read once: they size the parse
         # below and are the lineage rows' counts
-        new_files = chunks_table.incremental_files(last_processed)
         new_file_rows = file_rows(new_files)
         parsed = None
         rejects = None
-        if new_chunks is not None:
+        if new_files:
             # dead-letter split: a malformed envelope parses to null fields
             # and the gate's null-evaluating predicates would silently drop
             # it — the reject stream makes corrupt input first-class data
@@ -177,9 +178,9 @@ def _run_job_once(
             # costs a fixed ~0.03 CPU-s before its first row, so the new
             # chunks are parsed in one task per Arrow batch of rows.
             # ``coalesce`` never splits, so a large input keeps its splits.
-            tagged = tag_envelopes(
-                new_chunks.coalesce(_parse_tasks(spark, sum(new_file_rows)))
-            ).cache()
+            tagged = tag_envelopes(read_files(spark, new_files, schema).coalesce(
+                _parse_tasks(spark, sum(new_file_rows))
+            )).cache()
             parsed, rejects = split_tagged(tagged)
         if has_held:
             # held chunks carry ``first_held_run`` into the gate, which keeps
@@ -191,11 +192,11 @@ def _run_job_once(
             )
 
         # lineage over this pass's *new* input, from parquet footers and
-        # the manifest diff — no second data scan (at 100 TB a lineage scan
+        # the manifests — no second data scan (at 100 TB a lineage scan
         # doubles read I/O)
         lin = lineage_from_files(spark, new_files, new_file_rows)
 
-        run_id = current_snap or 0
+        run_id = chunks_snap or 0
         # age unit for the held cache: the group's own pass counter (one
         # commit per pass ⇒ +1 per run_job), NOT the chunks snapshot id —
         # multiple chunk-table commits between passes would otherwise age a
@@ -205,7 +206,8 @@ def _run_job_once(
         # ---- the ONE computation: gate decision, materialized ------------
         flagged = _gate_flags(parsed, ckpt_df).localCheckpoint(eager=True)
         out = after_gate(flagged, routes, ckpt_df)
-        enriched = out.enriched.withColumn("run_id", F.lit(run_id).cast("long"))
+        stamp = F.lit(run_id).cast("long")
+        enriched = out.enriched.withColumn("run_id", stamp)
 
         # held cache with age tracking: a chunk held before keeps its
         # original first_held_run (in group-pass units), carried through the
@@ -224,7 +226,7 @@ def _run_job_once(
 
         wall = time.perf_counter() - t_start
         # one metrics file per pass: a few lineage rows need no more tasks
-        summary_df = lin.withColumn("run_id", F.lit(run_id).cast("long")).coalesce(1)
+        summary_df = lin.withColumn("run_id", stamp).coalesce(1)
 
         # ---- ONE atomic commit covering all state tables -----------------
         tables = {
@@ -234,20 +236,12 @@ def _run_job_once(
             "metrics": (summary_df, "append"),
         }
         if rejects is not None:
-            tables["rejects"] = (
-                rejects.withColumn("run_id", F.lit(run_id).cast("long")),
-                "append",
-            )
+            tables["rejects"] = (rejects.withColumn("run_id", stamp), "append")
         if quarantined is not None:
             tables["quarantine"] = (quarantined, "append")
         snap = state.group.commit(
             tables,
-            lineage={
-                "chunks_snapshot": current_snap,
-                "run_id": run_id,
-                "pass_id": pass_id,
-                "wall_sec": wall,
-            },
+            lineage={"chunks_snapshot": chunks_snap, "wall_sec": wall},
             parent=read_snap,
         )
     finally:
@@ -294,7 +288,8 @@ def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     root cause of a permanent gap is fixed (the missing chunks finally
     shipped, or the source was re-exported). One atomic TableGroup commit:
     held gains the rows (age reset to the current pass so they don't
-    instantly re-quarantine), quarantine empties. Returns rows moved."""
+    instantly re-quarantine), quarantine empties; the lineage carries the
+    last pass's ``chunks_snapshot`` forward. Returns rows moved."""
     read_snap = state.group.current_snapshot()
     if not state.quarantine.exists(read_snap):
         return 0
@@ -312,7 +307,7 @@ def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     empty_q = spark.createDataFrame([], schema=q.schema)
     state.group.commit(
         {"held": (requeued, "overwrite"), "quarantine": (empty_q, "overwrite")},
-        lineage={"requeued_quarantine_rows": n, "pass_id": pass_id},
+        lineage={"requeued_quarantine_rows": n},
         parent=read_snap,
     )
     return n

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
+from .tableio import file_rows
+
 LINEAGE_SCHEMA = StructType([
     StructField("partition_id", IntegerType()),
     StructField("input_file", StringType()),
@@ -108,16 +110,13 @@ def lineage_from_files(
     import os
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
 
     table = pa.table(
         {
             "partition_id": [-1] * len(files),
             "input_file": files,
-            "n_rows": (
-                rows if rows is not None else [pq.read_metadata(f).num_rows for f in files]
-            ),
+            "n_rows": rows if rows is not None else file_rows(files),
             "n_bytes": [os.path.getsize(f) for f in files],
             "wall_ms": [0] * len(files),
         },

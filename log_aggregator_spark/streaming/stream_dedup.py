@@ -202,10 +202,7 @@ def compact_clusters(spark: SparkSession, group: TableGroup) -> int:
             CLUSTERS_BASE: (resolved, "overwrite"),
             LABEL_REMAP: (_empty(spark, _REMAP_SCHEMA), "overwrite"),
         },
-        lineage={
-            "batch_id": int(group.lineage(snap).get("batch_id", -1)),
-            "compaction": True,
-        },
+        lineage={"compacted_from": snap},
         parent=snap,
     )
 

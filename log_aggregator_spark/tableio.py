@@ -13,9 +13,10 @@ two Iceberg properties the pipeline actually relies on, over plain parquet:
   reference's ``.tmp`` + ``ATOMIC_MOVE`` per chunk
   (``/root/reference/agent/.../DataPumpImpl.java:55-61``,
   ``/root/reference/server/.../LogServerController.java:122-128``).
-* **incremental reads** — each manifest records its parent; the diff of two
-  manifests' file lists is the set of files added between snapshots (the
-  analog of the reference's directory watch / Iceberg's incremental scan).
+* **incremental reads** — the rows added after a snapshot are the files the
+  later ``append`` commits added; a compaction adds none (Iceberg's
+  incremental scan; the reference's directory watch). Lineage carries
+  forward through every commit, as Iceberg's table properties do.
 
 A group commits several member tables in one manifest. A standalone
 ``SnapshotTable`` is a group of one member, so there is one write, publish,
@@ -28,7 +29,7 @@ only sees this module's API.
 Layout::
 
     <root>/data/<uuid>/part-*.parquet          (one dir per member write with rows)
-    <root>/manifests/snap-00000001.json        (member file lists + lineage)
+    <root>/manifests/snap-00000001.json        (member modes and file lists + lineage)
 
 Driver-side filesystem ops only (a commit is O(#files) metadata, never
 data movement); executors touch parquet exclusively.
@@ -53,12 +54,16 @@ ORPHAN_MIN_AGE_SEC: float = 3 * 24 * 3600
 
 
 class ConcurrentCommitError(RuntimeError):
-    """Another committer already published this snapshot id. Iceberg's
-    commit is an atomic compare-and-swap on the metadata pointer; the
-    stand-in gets the same guarantee from linking the manifest to its
-    ``snap-N.json`` name, which fails when the name exists — the LOSING
-    writer fails loudly instead of silently clobbering the winner's
+    """Another committer already published this snapshot id or a later
+    one. Iceberg's commit is an atomic compare-and-swap on the metadata
+    pointer; the stand-in gets the same guarantee from linking the manifest
+    to its ``snap-N.json`` name, which fails when the name exists — the
+    LOSING writer fails loudly instead of silently clobbering the winner's
     snapshot (lost update)."""
+
+
+class SnapshotExpiredError(LookupError):
+    """An incremental read's ``since`` has expired: what came after it is unknown."""
 
 
 _AT_CALL = object()  # ``TableGroup.commit``'s default parent
@@ -128,7 +133,7 @@ def _schema_from_json(schema_json: str):
     return StructType.fromJson(json.loads(schema_json))
 
 
-def _read_files(spark: SparkSession, files: list[str], schema_json: str) -> DataFrame:
+def read_files(spark: SparkSession, files: list[str], schema_json: str) -> DataFrame:
     """Scan ``files`` under the schema their manifest recorded. Naming the
     schema skips Spark's parquet footer-inference job (one per read), and
     older files that lack a column added later read it as null."""
@@ -224,15 +229,9 @@ class IcebergTable:
         )
 
     def lineage(self, snapshot: int | None = None) -> dict:
-        props = {
-            r["key"]: r["value"]
-            for r in self.spark.sql(f"SHOW TBLPROPERTIES {self.name}").collect()
-        }
-        return {
-            k[len("lineage."):]: v
-            for k, v in props.items()
-            if k.startswith("lineage.")
-        }
+        rows = self.spark.sql(f"SHOW TBLPROPERTIES {self.name}").collect()
+        p = "lineage."
+        return {r["key"][len(p):]: r["value"] for r in rows if r["key"].startswith(p)}
 
     # ------------------------------------------------------ maintenance ops
     # Same surface as SnapshotTable.compact/expire_snapshots so the
@@ -318,10 +317,11 @@ class TableGroup:
     reprocesses the same input once.
 
     Manifest layout: ``{"snapshot": N, "parent": P, "tables": {name:
-    {"files": [...], "added_files": [...], "schema": ...}}, "lineage":
-    {...}}``; an 'append' member lists its parent's files plus the new
-    ones, an 'overwrite' member only the new ones; the snap file is
-    created once, by ``_publish`` (CAS, see ConcurrentCommitError)."""
+    {"mode": ..., "files": [...], "added_files": [...], "schema": ...}},
+    "lineage": {...}}``; an 'append' member lists its parent's files plus
+    the new ones, an 'overwrite' member only the new ones, an unnamed one is
+    an append of nothing; lineage is the parent's updated with the commit's;
+    the snap file is created once, by ``_publish`` (CAS)."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -345,7 +345,7 @@ class TableGroup:
         os.makedirs(self._manifest_dir, exist_ok=True)
         if parent is _AT_CALL:
             parent = self.current_snapshot()
-        parent_tables = self._manifest(parent)["tables"] if parent else {}
+        base = self._manifest(parent) if parent else {"tables": {}, "lineage": {}}
 
         # Member writes are independent Spark jobs over disjoint data dirs;
         # submit them from driver threads so the scheduler overlaps them
@@ -360,9 +360,10 @@ class TableGroup:
             df.write.mode("overwrite").parquet(data_dir)
             new_files = _keep_files_with_rows(data_dir)
             files = list(new_files)
-            if mode == "append" and name in parent_tables:
-                files = parent_tables[name]["files"] + files
+            if mode == "append" and name in base["tables"]:
+                files = base["tables"][name]["files"] + files
             return name, {
+                "mode": mode,
                 "files": files,
                 "added_files": new_files,
                 "schema": df.schema.json(),
@@ -374,16 +375,16 @@ class TableGroup:
         else:
             with ThreadPoolExecutor(max_workers=len(items)) as pool:
                 entries = dict(pool.map(_write, items))
-        for name, t in parent_tables.items():
+        for name, t in base["tables"].items():
             if name not in entries:
-                entries[name] = {**t, "added_files": []}
+                entries[name] = {**t, "mode": "append", "added_files": []}
 
         snap_id = (parent or 0) + 1
         manifest = {
             "snapshot": snap_id,
             "parent": parent,
             "tables": entries,
-            "lineage": lineage or {},
+            "lineage": {**base["lineage"], **(lineage or {})},
         }
         self._publish(snap_id, manifest)
         return snap_id
@@ -392,15 +393,20 @@ class TableGroup:
         """The commit point: write the manifest whole under a temp name that
         never matches ``snap-*.json``, then hard-link it to its snap name —
         atomic, and failing when the name exists (the CAS). Split out so
-        crash-injection tests can kill the job right before visibility."""
+        crash-injection tests can kill the job right before visibility. A
+        snapshot above the parent fails it too: expiry may have freed
+        ``snap_id`` after a rival took it, and no reader would see a link to
+        it. Rivals and an expiry that land between check and link still can."""
         tmp = os.path.join(self._manifest_dir, f".tmp-{uuid.uuid4().hex}")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
         try:
+            if (self.current_snapshot() or 0) >= snap_id:
+                raise FileExistsError(self._snap_path(snap_id))
             os.link(tmp, self._snap_path(snap_id))
         except FileExistsError as e:
             raise ConcurrentCommitError(
-                f"snapshot {snap_id} already committed in {self.root}; "
+                f"snapshot {snap_id} or a later one committed in {self.root}; "
                 "re-read the group and retry"
             ) from e
         finally:
@@ -436,7 +442,7 @@ class TableGroup:
         self, spark: SparkSession, name: str, snapshot: int | None = None
     ) -> DataFrame:
         entry = self._entry(name, snapshot)
-        return _read_files(spark, entry["files"], entry["schema"])
+        return read_files(spark, entry["files"], entry["schema"])
 
     def _entry(self, name: str, snapshot: int | None) -> dict:
         snap = snapshot if snapshot is not None else self.current_snapshot()
@@ -484,10 +490,7 @@ class TableGroup:
             dfs[n] = (self.read_member(spark, n, cur).coalesce(n_out), "overwrite")
         # the group commit by name: SnapshotTable overrides ``commit`` with
         # its one-table form
-        return TableGroup.commit(
-            self, dfs, lineage={**self.lineage(cur), "compacted_from": cur},
-            parent=cur,
-        )
+        return TableGroup.commit(self, dfs, {"compacted_from": cur}, parent=cur)
 
     def expire_snapshots(
         self, keep_last: int = 2, orphan_min_age_sec: float = ORPHAN_MIN_AGE_SEC
@@ -539,12 +542,8 @@ class SnapshotTable(TableGroup):
         mode: str = "append",
         lineage: dict | None = None,
     ) -> int:
-        """Write ``df`` as a new snapshot; returns the snapshot id.
-
-        mode='append': new snapshot = parent files + new files.
-        mode='overwrite': new snapshot = new files only (the table-state
-        analog used by the checkpoint table).
-        """
+        """Write ``df`` as a new snapshot, in a ``TableGroup.commit`` mode;
+        returns the snapshot id."""
         return super().commit({self.MEMBER: (df, mode)}, lineage)
 
     def exists(self) -> bool:
@@ -559,25 +558,31 @@ class SnapshotTable(TableGroup):
     ) -> DataFrame | None:
         """Rows added after snapshot ``since`` (None = everything).
         Returns None when nothing new."""
-        entry, files = self._increment(since)
-        return _read_files(spark, files, entry["schema"]) if files else None
+        _, files, schema = self.increment(since)
+        return read_files(spark, files, schema) if files else None
 
     def incremental_files(self, since: int | None) -> list[str]:
         """The file list ``read_incremental(since)`` would scan, for
         metadata-only consumers (lineage)."""
-        return self._increment(since)[1]
+        return self.increment(since)[1]
 
-    def _increment(self, since: int | None) -> tuple[dict, list[str]]:
-        """The current manifest entry and its files that snapshot ``since``
-        did not list — the manifest diff; ({}, []) when nothing is new."""
-        current = self.current_snapshot()
-        if current is None or (since is not None and current <= since):
-            return {}, []
-        entry = self._entry(self.MEMBER, current)
+    def increment(self, since: int | None) -> tuple[int | None, list, str | None]:
+        """``(snapshot, files, schema)``: the current snapshot, resolved once,
+        and the files added after ``since`` up to it — all when None, else
+        those the ``append`` commits added (a compaction rewrites older rows)
+        — with their schema. Raises SnapshotExpiredError when ``since`` has
+        expired; expiry takes the oldest snapshots, so all later ones exist."""
+        ids = self._snapshot_ids()
+        if not ids:
+            return None, [], None
         if since is None:
-            return entry, list(entry["files"])
-        old = set(self._entry(self.MEMBER, since)["files"])
-        return entry, [f for f in entry["files"] if f not in old]
+            entry = self._entry(self.MEMBER, ids[-1])
+            return ids[-1], list(entry["files"]), entry["schema"]
+        if since < ids[0]:
+            raise SnapshotExpiredError(f"snapshot {since} of {self.root} has expired")
+        later = [self._entry(self.MEMBER, s) for s in ids if s > since]
+        files = [f for e in later if e["mode"] == "append" for f in e["added_files"]]
+        return ids[-1], files, later[-1]["schema"] if later else None
 
 
 # ---------------------------------------------------------- bucketed layout

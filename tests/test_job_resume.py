@@ -762,6 +762,117 @@ def test_requeue_quarantine_backfills_held(spark, tmp_path):
     assert state.group.current_snapshot() == snap_before
 
 
+def _garbage(spark, envelope):
+    """One malformed envelope: a chunk the parse rejects."""
+    return spark.createDataFrame(
+        [(envelope, [7], "src1")],
+        schema="envelope string, chunk_tokens array<int>, source string",
+    )
+
+
+def _added(ct: SnapshotTable, *snaps) -> list[str]:
+    """The data files the chunk commits ``snaps`` added."""
+    return [f for s in snaps for f in ct._manifest(s)["tables"][ct.MEMBER]["added_files"]]
+
+
+def _input_files(state: JobState, spark, run_id) -> list[str]:
+    """The input files the ``metrics`` rows of pass ``run_id`` list."""
+    rows = state.metrics.read(spark).where(F.col("run_id") == run_id).collect()
+    return sorted(r["input_file"] for r in rows)
+
+
+def test_pass_after_requeue_reads_only_new_chunks(spark, tmp_path):
+    """A backfill (``requeue_quarantine``) commits to the state group
+    between passes. The chunks snapshot the last pass processed carries
+    forward through that commit, so the next pass reads only the chunk
+    files appended since: the malformed envelope is rejected once, and the
+    pass's ``metrics`` rows list only the new files. When the backfill's
+    commit dropped it, the next pass re-read the whole chunks table."""
+    from log_aggregator_spark.job import requeue_quarantine
+
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    s1 = ct.commit(_one_stream(spark, [1, 2, 5]).unionByName(_garbage(spark, "bad")))
+    run_job(spark, ct, routes, state, held_max_age_runs=1)
+    run_job(spark, ct, routes, state, held_max_age_runs=1)  # seq 5 ages out
+    assert requeue_quarantine(spark, state) == 1
+    requeue_snap = state.group.current_snapshot()
+
+    s2 = ct.commit(_one_stream(spark, [3, 4]))
+    r = run_job(spark, ct, routes, state, held_max_age_runs=1)
+    assert r["rejects"] == 0 and state.rejects.read(spark).count() == 1
+    assert _input_files(state, spark, r["run_id"]) == sorted(_added(ct, s2))
+    assert state.group.lineage(requeue_snap)["chunks_snapshot"] == s1
+    assert [list(t) for t in _segments(state, spark)["tokens"]] == [[1, 2, 3, 4, 5]]
+
+
+def test_pass_after_chunks_compaction_reads_only_new_chunks(spark, tmp_path):
+    """A compaction rewrites the chunks table between passes. The rows it
+    rewrote were appended before, so the next pass reads only the files
+    that appends added after the snapshot it last processed, before and
+    after the compaction: the malformed envelope is rejected once. When
+    every rewritten file counted as new, the next pass re-parsed the whole
+    table."""
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2]).unionByName(_garbage(spark, "bad")))
+    run_job(spark, ct, routes, state)
+    s2 = ct.commit(_one_stream(spark, [3]))
+    ct.compact(spark)
+    s4 = ct.commit(_one_stream(spark, [4]))
+
+    r = run_job(spark, ct, routes, state)
+    assert r["rejects"] == 0 and state.rejects.read(spark).count() == 1
+    assert _input_files(state, spark, r["run_id"]) == sorted(_added(ct, s2, s4))
+    assert sorted(ct.incremental_files(1)) == sorted(_added(ct, s2, s4))
+    assert [list(t) for t in _segments(state, spark)["tokens"]] == [[1, 2, 3, 4]]
+
+
+def test_chunk_commit_during_resolution_is_parsed_once(spark, tmp_path, monkeypatch):
+    """A chunk commit lands right after the pass resolves the chunks table.
+    The pass reads, records and stamps the one snapshot it resolved, so the
+    next pass parses the late commit once: each malformed envelope is
+    rejected once, and the ``metrics`` rows, one per input file per pass,
+    number the chunk files. When the pass resolved the table three times,
+    it parsed the late commit and the next pass parsed it again."""
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2]).unionByName(_garbage(spark, "bad-1")))
+
+    real_ids = ct._snapshot_ids
+    late = {"pending": True}
+
+    def ids_then_late_commit():
+        ids = real_ids()
+        if late.pop("pending", False):
+            ct.commit(_one_stream(spark, [3]).unionByName(_garbage(spark, "bad-2")))
+        return ids
+
+    monkeypatch.setattr(ct, "_snapshot_ids", ids_then_late_commit)
+    r1 = run_job(spark, ct, routes, state)
+    assert not late and ct.current_snapshot() == 2
+    assert r1["run_id"] == 1 and r1["rejects"] == 1
+    r2 = run_job(spark, ct, routes, state)
+    assert r2["run_id"] == 2 and r2["rejects"] == 1
+
+    metrics = state.metrics.read(spark).toPandas()
+    assert len(metrics) == len(ct._manifest(2)["tables"][ct.MEMBER]["files"])
+    assert metrics["n_rows"].sum() == ct.read(spark).count() == 5
+    assert sorted(r["envelope"] for r in state.rejects.read(spark).collect()) == [
+        "bad-1", "bad-2",
+    ]
+    assert [list(t) for t in _segments(state, spark)["tokens"]] == [[1, 2, 3]]
+
+
 def test_session_restart_across_runs(spark, tmp_path):
     """Truncation/rotation mid-corpus across a checkpointed run boundary
     (reference ``LogTail.java:60-82`` MOVED/TRUNCATED + ``PathProvider.

@@ -245,3 +245,35 @@ def test_split_rejects_overflowing_digits(spark):
     ok, rejects = split_rejects(chunks)
     assert [tuple(r) for r in ok.select("doc_id", "session", "seq").collect()] == [("x", 1, 2)]
     assert sorted(r["envelope"] for r in rejects.collect()) == sorted(over)
+
+
+def test_salted_layout_holds_one_sink_per_file(spark, docs, tmp_path):
+    """``route_write(cluster_by_sink=True)``, the salted layout that spreads
+    a hot sink over several writer tasks: every file it writes holds one
+    sink, and its rows and tokens equal those of the default layout."""
+    from pyspark.sql import functions as F
+
+    from log_aggregator_spark.operators.route import route_write
+
+    enriched = run_pipeline(chunker.chunks(docs), chunker.routes_table(docs)).enriched
+    route_write(enriched, str(tmp_path / "default"))
+    route_write(enriched, str(tmp_path / "salted"), cluster_by_sink=True)
+
+    def rows(layout):
+        df = spark.read.parquet(str(tmp_path / layout))
+        return sorted(
+            (r["doc_id"], r["session"], r["sink"], r["source"], list(r["tokens"]))
+            for r in df.collect()
+        )
+
+    per_file = (
+        spark.read.parquet(str(tmp_path / "salted"))
+        .groupBy(F.input_file_name().alias("file"))
+        .agg(F.countDistinct("sink").alias("sinks"), F.first("sink").alias("sink"))
+        .collect()
+    )
+    assert per_file
+    for r in per_file:
+        assert r["sinks"] == 1 and f"/sink={r['sink']}/" in r["file"], r
+    want = rows("default")
+    assert want and rows("salted") == want

@@ -13,9 +13,12 @@ compaction/expiry — run against every backend that implements it:
 The contract is deliberately the INTERSECTION both backends promise:
 snapshot ids are compared by identity/ordering of commits, never by
 arithmetic (Iceberg ids are random longs, SnapshotTable's are sequential);
-lineage is checked as a superset (Iceberg accumulates table properties);
-CAS-conflict and crash-injection semantics stay in the backend-specific
-suites (test_tableio_maintenance, test_job_resume) because the engines
+lineage carries forward: a commit's lineage holds every key of its
+parent's with this commit's keys on top, which Iceberg's table properties
+do by nature; an incremental read returns the rows that appends added
+after ``since``, never the rows a compaction rewrote; CAS-conflict and
+crash-injection semantics stay in the backend-specific suites
+(test_tableio_maintenance, test_job_resume) because the engines
 legitimately differ there (Iceberg retries optimistically inside commit).
 
 Known divergence, unexercised while the jar is absent: ``IcebergTable.
@@ -25,14 +28,17 @@ and snapshots younger than that survive beyond ``keep_last`` — unlike
 ``SnapshotTable``, which expires every snapshot older than the newest
 ``keep_last``. ``remove_orphan_files`` also refuses an ``older_than`` within
 24 h of now, so ``test_expire_snapshots_keeps_current_readable``'s
-``orphan_min_age_sec=0`` call would fail on a real Iceberg deployment.
+``orphan_min_age_sec=0`` call would fail on a real Iceberg deployment, and so
+would ``test_read_incremental_since_expired_raises``: its ``since`` survives
+there, and an expired one raises Iceberg's own error, not
+``SnapshotExpiredError``.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from log_aggregator_spark.tableio import IcebergTable, SnapshotTable
+from log_aggregator_spark.tableio import IcebergTable, SnapshotExpiredError, SnapshotTable
 
 BACKENDS = ["snapshot", "iceberg"]
 
@@ -118,6 +124,45 @@ def test_lineage_roundtrip(spark, make_table):
     got = t.lineage()
     assert got.get("input_files") == "7"
     assert got.get("rows") == "2"
+
+
+def test_lineage_carries_forward(spark, make_table):
+    t = make_table("t_lin_fwd")
+    k = spark.range(2).withColumnRenamed("id", "k")
+    t.commit(k, lineage={"source": "a", "rows": "2"})
+    t.commit(k, lineage={"rows": "4"})
+    assert (t.lineage().get("source"), t.lineage().get("rows")) == ("a", "4")
+    t.compact(spark)
+    assert (t.lineage().get("source"), t.lineage().get("rows")) == ("a", "4")
+
+
+def _k(spark, lo, hi):
+    return spark.range(lo, hi).withColumnRenamed("id", "k")
+
+
+def test_read_incremental_after_compaction(spark, make_table):
+    """A compaction rewrites rows that were appended before it, so an
+    incremental read across it returns only the rows appended after
+    ``since``, on either side of the compaction."""
+    t = make_table("t_inc_cmp")
+    s1 = t.commit(_k(spark, 0, 3).repartition(2))
+    t.commit(_k(spark, 3, 5))
+    t.compact(spark)
+    t.commit(_k(spark, 5, 6))
+    assert _rows(t.read_incremental(spark, s1)) == [(3,), (4,), (5,)]
+    assert _rows(t.read(spark)) == [(i,) for i in range(6)]
+
+
+def test_read_incremental_since_expired_raises(spark, make_table):
+    """Once ``since`` has expired, the appends after it are unknown: the
+    incremental read raises instead of guessing."""
+    t = make_table("t_inc_exp")
+    s1 = t.commit(_k(spark, 0, 2))
+    t.commit(_k(spark, 2, 4))
+    t.commit(_k(spark, 4, 6))
+    t.expire_snapshots(keep_last=1, orphan_min_age_sec=0)
+    with pytest.raises(SnapshotExpiredError):
+        t.read_incremental(spark, s1)
 
 
 def test_compaction_preserves_rows_and_history(spark, make_table):

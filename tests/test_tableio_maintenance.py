@@ -170,3 +170,33 @@ def test_group_empty_commit_is_carry_forward(spark, tmp_path):
     assert g.read_member(spark, "remap").count() == 0
     assert g.commit({}) == 3  # pure carry-forward commit
     assert g.table("labels").read(spark).count() == 5
+
+
+def test_commit_against_expired_parent_raises(spark, tmp_path, monkeypatch):
+    """A commit read snapshot 1; while it writes its members, three rival
+    commits land and ``expire_snapshots(keep_last=1)`` removes snapshots 1
+    to 3. Its id, 2, is then free again, but a snapshot newer than its
+    parent exists, so it raises ConcurrentCommitError. Linked anyway, it
+    reported success for a snapshot that no reader sees: the current
+    snapshot stays 4."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from log_aggregator_spark.tableio import ConcurrentCommitError
+
+    g = TableGroup(str(tmp_path / "g"))
+    df = spark.range(3).select(F.col("id").alias("x"))
+    g.commit({"m": (df, "append")})
+    real_parquet = DataFrameWriter.parquet
+
+    def rivals_then_write(self, path, *args, **kwargs):
+        monkeypatch.setattr(DataFrameWriter, "parquet", real_parquet)
+        for i in range(3):
+            g.commit({}, lineage={"rival": i})
+        assert g.expire_snapshots(keep_last=1)["expired"] == [1, 2, 3]
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", rivals_then_write)
+    with pytest.raises(ConcurrentCommitError):
+        g.commit({"m": (df, "append")}, parent=1)
+    assert g._snapshot_ids() == [4]
+    assert g.table("m").read(spark).count() == 3
