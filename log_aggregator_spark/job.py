@@ -9,18 +9,20 @@ Each invocation is one "directory pass" of the reference decoder
    once, ``DataPumpDecoderSort.java:55-85``) plus the HELD cache (chunks
    previous runs could not consume — the reference's "cache grows" files,
    ``datadecoder/README.md:13-15``),
-2. parse the new envelopes ONCE into a cached frame that both the gate
-   input and the ``rejects`` member read, then run the gate against the
-   persisted checkpoint table (``SequenceTracker`` analog) and MATERIALIZE
-   its decision once, as an eager local checkpoint in executor storage,
+2. split the new envelopes into parsed chunks and rejects
+   (``split_rejects``, the parse entry of every pipeline), then run the
+   gate against the persisted checkpoint table (``SequenceTracker``
+   analog) and MATERIALIZE its decision once, as an eager local
+   checkpoint in executor storage,
 3. derive reassembly, routed output, new checkpoint and held cache from
    that one materialized result (``plans.pipeline.after_gate``, the
-   composition ``run_pipeline`` runs on a lazy gate), stamp the run id and
-   the held chunks' ages, and commit them with rejects and metrics in ONE
-   atomic TableGroup manifest, against the state snapshot step 1 read,
-4. release the cached parse and the checkpoint, and return the per-sink
-   counts and the rejects/held row counts read with pyarrow from the files
-   that commit added — exactly what was published, at no Spark job.
+   composition ``run_pipeline`` runs on a lazy gate), stamp the run id (the
+   group's pass counter + 1) and the held chunks' ages, and commit them
+   with rejects and metrics in ONE atomic TableGroup manifest, against the
+   state snapshot step 1 read,
+4. release the checkpoint, and return the per-sink counts and the
+   rejects/held row counts read with pyarrow from the files that commit
+   added — exactly what was published, at no Spark job.
 
 Consistency: the gate plan contains an ``asNondeterministic`` Arrow UDF and
 order-sensitive tie-breaks, so deriving each state table from its own
@@ -28,24 +30,25 @@ recomputation would let task retries/speculation hand different inputs to
 different commits. Materializing ``_gate_flags`` once means routed,
 checkpoint, held and metrics all observe the SAME physical rows. A local
 checkpoint is not recomputed from its lineage: a lost block fails the pass
-before the CAS, and the retry starts over from the committed state. The
-cached parse under it may be recomputed after a lost block, which is safe
-because the UDF is a pure function of the envelope. The pass reads
-checkpoint, held and lineage at one state snapshot and commits against that
-snapshot, so the CAS covers its whole read-to-commit window: a rival commit
-that lands while the pass computes fails the pass instead of being stacked
-on.
+before the CAS, and the retry starts over from the committed state. No
+parse is cached: the gate and the ``rejects`` write each evaluate the UDF,
+and both evaluations are pure functions of the same new files, so an
+envelope the gate skips as malformed is exactly one the rejects member
+records. The pass reads checkpoint, held and lineage at one state snapshot
+and commits against that snapshot, so the CAS covers its whole
+read-to-commit window: a rival commit that lands while the pass computes
+fails the pass instead of being stacked on.
 
 Cost: at small inputs a pass is bound by fixed per-job and per-task cost.
-A warm pass over new chunks starts 12 Spark jobs on perfbench's
+A warm pass over new chunks starts 11 Spark jobs on perfbench's
 ``resume_two_pass`` input: the gate's checkpoint and the commit's member
-writes. It runs the parse UDF in one of them, in one Python task per
-Arrow batch of new rows (``maxRecordsPerBatch``, counted from the new
-files' footers), not one per input file: a Python UDF task costs about
-0.03 CPU-s of Python-worker time before it reads a row (0.14 when the
-workers import pyspark from Spark's zips, see ``worker_daemon``; measured
-on a 4-vCPU VM). The held chunks' ages ride through the
-gate, so no join brings them back. Every read names the schema its
+writes. It runs the parse UDF in two of them, the gate's and the
+``rejects`` write's, each in one Python task per Arrow batch of new rows
+(``maxRecordsPerBatch``, counted from the new files' footers), not one per
+input file: a Python UDF task costs about 0.03 CPU-s of Python-worker time
+before it reads a row (0.14 when the workers import pyspark from Spark's
+zips, see ``worker_daemon``; measured on a 4-vCPU VM). The held chunks'
+ages ride through the gate, so no join brings them back. Every read names the schema its
 manifest recorded, so none starts a parquet schema-inference job, and the
 lineage rows reach the JVM as Arrow and are written as one file.
 
@@ -56,13 +59,15 @@ retry reprocesses the same chunks snapshot once; orphaned data dirs are
 inert). The reference's own documented window between payload append and
 ``.lastSeq`` write (``DataPumpDecoderSort.java:48-51``) is thereby closed,
 not just made detectable. Concurrent passes are excluded by the manifest
-CAS (``tableio.ConcurrentCommitError``); the run_id column (= chunks
-snapshot processed) remains as the audit/idempotency key.
+CAS (``tableio.ConcurrentCommitError``); the run_id column (= the group's
+pass counter, carried unchanged through compactions and requeues) remains
+as the audit/idempotency key.
 
 Output invariant (tested in tests/test_job_resume.py): for every
 (doc_id, session), the concatenation of routed token segments in run order
-equals the single-run reassembly of all chunks — byte-exact (the system
-invariant of the reference's end-to-end test, ``README.md:93-104``).
+(ascending ``run_id``, a distinct value per pass) equals the single-run
+reassembly of all chunks — byte-exact (the system invariant of the
+reference's end-to-end test, ``README.md:93-104``).
 """
 
 from __future__ import annotations
@@ -74,7 +79,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .lineage import lineage_from_files
-from .operators.parse import split_tagged, tag_envelopes
+from .operators.parse import split_rejects
 from .operators.reassemble import _gate_flags
 from .plans.pipeline import after_gate
 from .session import persistent_rdd_ids, unpersist_rdds
@@ -139,10 +144,10 @@ def _run_job_once(
     being re-gated forever — the batch counterpart of the streaming state
     TTL. None (default) = keep forever (reference-faithful).
 
-    The pass reads, stamps (``run_id``) and records the one chunks snapshot
-    ``increment`` resolved. Lineage rows come from metadata alone (the
-    manifests and the new files' parquet footers), so they cost no second
-    scan of the input."""
+    The pass reads and records the one chunks snapshot ``increment``
+    resolved, and stamps the next value of the group's pass counter as its
+    ``run_id``. Lineage rows come from metadata alone (the manifests and the
+    new files' parquet footers), so they cost no second scan of the input."""
     t_start = time.perf_counter()
     # the pass reads the state at one snapshot and commits against it
     read_snap = state.group.current_snapshot()
@@ -150,18 +155,21 @@ def _run_job_once(
     if state.checkpoint.exists(read_snap):
         ckpt_df = state.checkpoint.read(spark, read_snap)
     has_held = state.held.exists(read_snap)
-    chunks_snap, new_files, schema = chunks_table.increment(
-        state.group.lineage(read_snap).get("chunks_snapshot")
-    )
+    lineage = state.group.lineage(read_snap)
+    chunks_snap, new_files, schema = chunks_table.increment(lineage.get("chunks_snapshot"))
     if not new_files and not has_held:
         return {"run_id": None, "status": "no_new_data"}
+    # the group's pass counter, +1 per pass and carried unchanged through
+    # compactions and requeues: routed segments sort in run order by it, and
+    # held chunks age by passes — not by chunk commits (several may land
+    # between passes, ADVICE r2) nor by state commits
+    run_id = lineage.get("run_id", 0) + 1
 
-    # Everything this pass pins in executor storage (the cached parse and the
-    # gate's local checkpoint) is released in the ``finally`` below, on
-    # success, crash or lost CAS alike. Scoped by RDD id: pins that predate
-    # the pass survive; a session runs one pass at a time.
+    # The gate's local checkpoint, the one thing this pass pins in executor
+    # storage, is released in the ``finally`` below, on success, crash or
+    # lost CAS alike. Scoped by RDD id: pins that predate the pass survive;
+    # a session runs one pass at a time.
     pinned_before = persistent_rdd_ids(spark)
-    tagged = None
     try:
         # the new files' parquet footers, read once: they size the parse
         # below and are the lineage rows' counts
@@ -172,16 +180,15 @@ def _run_job_once(
             # dead-letter split: a malformed envelope parses to null fields
             # and the gate's null-evaluating predicates would silently drop
             # it — the reject stream makes corrupt input first-class data
-            # instead (the reference logs-and-skips; parse.py:85-). Cached,
-            # so the gate input and the rejects member read one evaluation
-            # of the parse UDF. Sized by rows, not files: a Python task
+            # instead (the reference logs-and-skips; parse.py:85-). The gate
+            # and the rejects write each run the UDF, the latter over the
+            # envelope column alone. Sized by rows, not files: a Python task
             # costs a fixed ~0.03 CPU-s before its first row, so the new
             # chunks are parsed in one task per Arrow batch of rows.
             # ``coalesce`` never splits, so a large input keeps its splits.
-            tagged = tag_envelopes(read_files(spark, new_files, schema).coalesce(
+            parsed, rejects = split_rejects(read_files(spark, new_files, schema).coalesce(
                 _parse_tasks(spark, sum(new_file_rows))
-            )).cache()
-            parsed, rejects = split_tagged(tagged)
+            ))
         if has_held:
             # held chunks carry ``first_held_run`` into the gate, which keeps
             # the least one among equal seqs; new chunks carry none
@@ -196,13 +203,6 @@ def _run_job_once(
         # doubles read I/O)
         lin = lineage_from_files(spark, new_files, new_file_rows)
 
-        run_id = chunks_snap or 0
-        # age unit for the held cache: the group's own pass counter (one
-        # commit per pass ⇒ +1 per run_job), NOT the chunks snapshot id —
-        # multiple chunk-table commits between passes would otherwise age a
-        # held chunk several "runs" in one pass (ADVICE r2).
-        pass_id = (read_snap or 0) + 1
-
         # ---- the ONE computation: gate decision, materialized ------------
         flagged = _gate_flags(parsed, ckpt_df).localCheckpoint(eager=True)
         out = after_gate(flagged, routes, ckpt_df)
@@ -210,18 +210,16 @@ def _run_job_once(
         enriched = out.enriched.withColumn("run_id", stamp)
 
         # held cache with age tracking: a chunk held before keeps its
-        # original first_held_run (in group-pass units), carried through the
-        # gate; a newly-held one is stamped with this pass.
-        first_held = F.lit(pass_id)
+        # original first_held_run, carried through the gate; a newly-held
+        # one is stamped with this pass.
+        first_held = stamp
         if "first_held_run" in out.held.columns:
             first_held = F.coalesce(F.col("first_held_run"), first_held)
-        held_full = out.held.withColumn("first_held_run", first_held.cast("long"))
+        held_full = out.held.withColumn("first_held_run", first_held)
         quarantined = None
         if held_max_age_runs is not None:
-            too_old = F.col("first_held_run") <= F.lit(pass_id - held_max_age_runs)
-            quarantined = held_full.where(too_old).withColumn(
-                "quarantined_run", F.lit(pass_id).cast("long")
-            )
+            too_old = F.col("first_held_run") <= F.lit(run_id - held_max_age_runs)
+            quarantined = held_full.where(too_old).withColumn("quarantined_run", stamp)
             held_full = held_full.where(~too_old)
 
         wall = time.perf_counter() - t_start
@@ -241,12 +239,10 @@ def _run_job_once(
             tables["quarantine"] = (quarantined, "append")
         snap = state.group.commit(
             tables,
-            lineage={"chunks_snapshot": chunks_snap, "wall_sec": wall},
+            lineage={"run_id": run_id, "chunks_snapshot": chunks_snap, "wall_sec": wall},
             parent=read_snap,
         )
     finally:
-        if tagged is not None:
-            tagged.unpersist()
         unpersist_rdds(spark, exclude=pinned_before)
 
     return {
@@ -287,9 +283,10 @@ def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     the next pass re-gates it — the operator a deployment runs after the
     root cause of a permanent gap is fixed (the missing chunks finally
     shipped, or the source was re-exported). One atomic TableGroup commit:
-    held gains the rows (age reset to the current pass so they don't
+    held gains the rows (their age reset to the next pass, so they don't
     instantly re-quarantine), quarantine empties; the lineage carries the
-    last pass's ``chunks_snapshot`` forward. Returns rows moved."""
+    last pass's ``run_id`` and ``chunks_snapshot`` forward. Returns rows
+    moved."""
     read_snap = state.group.current_snapshot()
     if not state.quarantine.exists(read_snap):
         return 0
@@ -297,10 +294,10 @@ def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     n = q.count()
     if n == 0:
         return 0
-    pass_id = read_snap + 1
+    next_run = state.group.lineage(read_snap)["run_id"] + 1
     requeued = q.select(
         "doc_id", "session", "seq", "chunk_tokens", "source"
-    ).withColumn("first_held_run", F.lit(pass_id).cast("long"))
+    ).withColumn("first_held_run", F.lit(next_run).cast("long"))
     if state.held.exists(read_snap):
         held = state.held.read(spark, read_snap)
         requeued = held.select(*requeued.columns).unionByName(requeued)

@@ -11,6 +11,12 @@ captures, so RE2 stays on its DFA, and splits the fields with a right
 split: 0.026 CPU-s per 105k envelopes on a 4-vCPU VM, against 0.105 for a
 capturing ``extract_regex``. A row whose numbers do not fit in int64 is a
 reject, like a row that does not match.
+
+``split_rejects`` is the one parse entry of ``run_pipeline``,
+``job.run_job`` and ``stream_pipeline``. Its two streams are two plans, so
+a caller that runs both evaluates the UDF twice; no caller caches the
+parse, since the rejects plan reads one string column and a Python task
+costs about 0.03 CPU-s.
 """
 
 from __future__ import annotations
@@ -78,35 +84,11 @@ _parse_envelope_udf = _parse_envelope_udf.asNondeterministic()
 
 def parse_envelope(chunks: DataFrame) -> DataFrame:
     """chunks(envelope, chunk_tokens, source) →
-    (doc_id, session, seq, chunk_tokens, source)."""
-    return tag_envelopes(chunks).select(
-        F.col("_p.doc_id").alias("doc_id"),
-        F.col("_p.session").alias("session"),
-        F.col("_p.seq").alias("seq"),
-        "chunk_tokens",
-        "source",
+    (doc_id, session, seq, chunk_tokens, source); a malformed envelope
+    keeps its row, with null fields."""
+    return chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope"))).select(
+        "_p.*", "chunk_tokens", "source"
     )
-
-
-def tag_envelopes(chunks: DataFrame) -> DataFrame:
-    """chunks plus ``_p``, the parsed (doc_id, session, seq) struct. An
-    envelope that fails the regex gets a null ``_p.doc_id``. The one parse
-    evaluation that ``split_tagged`` derives both streams from — a caller
-    that caches this frame parses each envelope once."""
-    return chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope")))
-
-
-def split_tagged(tagged: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """(parsed_ok, rejects) from a ``tag_envelopes`` output."""
-    ok = tagged.where(F.col("_p.doc_id").isNotNull()).select(
-        F.col("_p.doc_id").alias("doc_id"),
-        F.col("_p.session").alias("session"),
-        F.col("_p.seq").alias("seq"),
-        "chunk_tokens",
-        "source",
-    )
-    rejects = tagged.where(F.col("_p.doc_id").isNull()).select("envelope", "source")
-    return ok, rejects
 
 
 def split_rejects(chunks: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -114,11 +96,16 @@ def split_rejects(chunks: DataFrame) -> tuple[DataFrame, DataFrame]:
     regex, or whose numbers overflow int64, parses to null fields; at 100
     TB silently dropping (or crashing on) malformed input is not an
     option — the reject stream keeps the original envelope + source for
-    quarantine/audit, the ok stream carries parsed keys only. One pass over
-    the parse output, no second regex evaluation (the reference
-    logs-and-skips unparseable cached files; here the skipped set is
-    first-class data)."""
-    return split_tagged(tag_envelopes(chunks))
+    quarantine/audit, the ok stream carries parsed keys only. Each stream
+    evaluates the UDF in its own plan; the rejects plan reads only
+    ``envelope`` and ``source`` (the reference logs-and-skips unparseable
+    cached files; here the skipped set is first-class data)."""
+    tagged = chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope")))
+    ok = tagged.where(F.col("_p.doc_id").isNotNull()).select(
+        "_p.*", "chunk_tokens", "source"
+    )
+    rejects = tagged.where(F.col("_p.doc_id").isNull()).select("envelope", "source")
+    return ok, rejects
 
 
 def encode_envelope(df: DataFrame) -> DataFrame:

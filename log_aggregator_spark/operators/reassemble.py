@@ -155,15 +155,16 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
     the anchor (first live positive seq); the first gap breaks the
     constant. Duplicate rows are dropped by keeping only the first row per
     seq (``row_number() == rank()`` — the reference detects exactly this on
-    insert, PBLogFileCollector.java:67-70). The survivor row's payload is
-    the peer-group minimum (``min(chunk_tokens) RANGE BETWEEN CURRENT ROW
-    AND CURRENT ROW`` — the frame is exactly the equal-seq rows), so the
-    emitted payload is the lexicographically-least among equal seqs — the
-    engine's deterministic survivor rule (see ``gate_select``) — WITHOUT
-    putting the token array into the sort key: a single long sort key
-    keeps SortExec on the radix path, keeps equal seqs peers for the
-    ranks, and runs the array comparator only inside the
-    (corruption-rare) multi-row peer frames. A seq==0 chunk with
+    insert, PBLogFileCollector.java:67-70). The survivor row's payload and
+    source are the peer-group minimum (``min(struct(chunk_tokens, source))
+    RANGE BETWEEN CURRENT ROW AND CURRENT ROW`` — the frame is exactly the
+    equal-seq rows), so the emitted payload is the lexicographically-least
+    among equal seqs, with its own source, in whatever order the rows
+    arrived — the engine's deterministic survivor rule (see
+    ``gate_select``) — WITHOUT putting the token array into the sort key:
+    a single long sort key keeps SortExec on the radix path, keeps equal
+    seqs peers for the ranks, and runs the array comparator only inside
+    the (corruption-rare) multi-row peer frames. A seq==0 chunk with
     last_seq==0 is emitted but does NOT anchor the run: the reference
     writes last=0 after it, so the init rule re-fires for the next chunk
     (DataPumpDecoderSort.java:166-174).
@@ -192,10 +193,10 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
         "_dr": F.dense_rank().over(w),
         "_anchor": F.first(F.when(F.col("seq") > 0, F.col("seq")), ignorenulls=True).over(w_run),
         "_anchor_rank": F.lit(1) + F.max(F.when(zero, 1).otherwise(0)).over(w_run),
-        # deterministic survivor payload: least among equal seqs (peer
-        # frames are size 1 except for duplicate seqs, so the array
-        # comparator is off the hot path)
-        "chunk_tokens": F.min("chunk_tokens").over(w_peer),
+        # deterministic survivor: the least payload among equal seqs, with
+        # its own source (peer frames are size 1 except for duplicate seqs,
+        # so the array comparator is off the hot path)
+        "_survivor": F.min(F.struct("chunk_tokens", "source")).over(w_peer),
     }
     if "first_held_run" in live.columns:
         # a held chunk that arrives again (as a new duplicate) keeps the
@@ -205,6 +206,7 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
     anchor, anchor_rank = F.col("_anchor"), F.col("_anchor_rank")
     return (
         live.withColumns(windows)
+        .withColumns({c: F.col(f"_survivor.{c}") for c in ("chunk_tokens", "source")})
         .withColumn(
             "accepted",
             F.col("_first")
@@ -216,7 +218,7 @@ def _gate_flags(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
                 )
             ),
         )
-        .drop("_dr", "_anchor", "_anchor_rank")
+        .drop("_dr", "_anchor", "_anchor_rank", "_survivor")
     )
 
 
@@ -242,7 +244,9 @@ def reassemble_from_flags(flagged: DataFrame) -> DataFrame:
                 .getField("chunk_tokens")
             ).alias("tokens"),
             F.sum(F.size("chunk_tokens")).cast("long").alias("n_tok"),
-            F.first("source").alias("source"),
+            # the survivor source of the stream's least accepted seq, not
+            # that of whichever row the aggregate met first
+            F.min_by("source", "seq").alias("source"),
             F.max("seq").cast("long").alias("last_seq_out"),
         )
         .select("doc_id", "session", "tokens", "n_tok", "source", "last_seq_out")

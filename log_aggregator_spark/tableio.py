@@ -45,6 +45,7 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 # Never-manifested data dirs younger than this survive orphan GC — they may
@@ -351,13 +352,18 @@ class TableGroup:
         # submit them from driver threads so the scheduler overlaps them
         # (a group commit otherwise pays #members × job latency serially —
         # the dominant per-micro-batch floor in the streaming dedup fold).
-        # The manifest is assembled after ALL writes complete, in the
-        # caller's member order, so concurrency never reaches visibility:
-        # the single link in ``_publish`` still publishes all-or-nothing.
-        def _write(item: tuple[str, tuple[DataFrame, str]]) -> tuple[str, dict]:
-            name, (df, mode) = item
+        # Each thread runs with a copy of the caller's local properties (job
+        # group, tags, description), so cancelling the caller's group or tag
+        # stops its member writes too. The manifest is assembled after ALL
+        # writes complete, in the caller's member order, so concurrency
+        # never reaches visibility: the single link in ``_publish`` still
+        # publishes all-or-nothing. No ``_SUCCESS`` marker is written: the
+        # manifest is the commit point, and nothing reads the marker.
+        def _write(name: str, df: DataFrame, mode: str) -> tuple[str, dict]:
             data_dir = os.path.join(self.root, "data", uuid.uuid4().hex)
-            df.write.mode("overwrite").parquet(data_dir)
+            df.write.option(
+                "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+            ).mode("overwrite").parquet(data_dir)
             new_files = _keep_files_with_rows(data_dir)
             files = list(new_files)
             if mode == "append" and name in base["tables"]:
@@ -369,12 +375,13 @@ class TableGroup:
                 "schema": df.schema.json(),
             }
 
-        items = list(tables.items())
-        if len(items) < 2:  # one member, or none (a carry-forward commit)
-            entries = dict(map(_write, items))
-        else:
-            with ThreadPoolExecutor(max_workers=len(items)) as pool:
-                entries = dict(pool.map(_write, items))
+        # a zero-member (carry-forward) commit still needs one worker
+        with ThreadPoolExecutor(max_workers=max(1, len(tables))) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(df.sparkSession)(_write), name, df, mode)
+                for name, (df, mode) in tables.items()
+            ]
+            entries = dict(f.result() for f in futures)
         for name, t in base["tables"].items():
             if name not in entries:
                 entries[name] = {**t, "mode": "append", "added_files": []}

@@ -98,9 +98,9 @@ def _parse_executions(spark, since: set[int]) -> list[int]:
 
 def _parse_stage_tasks(spark, eid: int) -> dict[int, int]:
     """Tasks per stage of SQL execution ``eid`` that ran the parse UDF: a
-    stage whose RDD graph holds an ``ArrowEvalPython`` scope and no
-    ``InMemoryTableScan`` one. (A stage that reads the cached parse shows
-    the UDF's scope under the scan, but takes its rows from storage.)"""
+    stage whose RDD graph holds an ``ArrowEvalPython`` scope and that was
+    not skipped. (A later job of the execution lists the shuffle-map stage
+    that parsed again, as skipped.)"""
     app = spark.sparkContext._jsc.sc().statusStore()
     store = spark._jsparkSession.sharedState().statusStore()
 
@@ -117,8 +117,9 @@ def _parse_stage_tasks(spark, eid: int) -> dict[int, int]:
     while it.hasNext():
         sid = it.next()
         names = scopes(app.operationGraphForStage(sid).rootCluster())
-        if "ArrowEvalPython" in names and "InMemoryTableScan" not in names:
-            tasks[sid] = app.lastStageAttempt(sid).numCompleteTasks()
+        stage = app.lastStageAttempt(sid)
+        if "ArrowEvalPython" in names and stage.status().toString() != "SKIPPED":
+            tasks[sid] = stage.numCompleteTasks()
     return tasks
 
 
@@ -273,9 +274,10 @@ def test_resume_pass_job_budget(spark, docs, tmp_path):
     the gate held in a local checkpoint instead of a parquet staging copy,
     and the checkpoint member merged in one aggregate, it started 14. With
     the held chunks' ages carried through the gate instead of joined back
-    in their own broadcast job, it starts 13. A change that brings back a
-    recount, an inferred read, a second reassembly aggregate or a held-age
-    join fails here."""
+    in their own broadcast job, it started 13. With the parse no longer
+    cached (the rejects write parses the envelopes again), it starts 12.
+    A change that brings back a recount, an inferred read, a second
+    reassembly aggregate or a held-age join fails here."""
     chunks = chunker.chunks(docs)
     routes = _routes(docs)
     seq = F.regexp_extract("envelope", r"_(\d+)\.pbData$", 1).cast("long")
@@ -289,19 +291,33 @@ def test_resume_pass_job_budget(spark, docs, tmp_path):
     r = run_job(spark, ct, routes, state)
     n_jobs = len(_job_ids(spark) - before)
     assert r["status"] == "ok" and r["sink_counts"]
-    assert n_jobs <= 13, f"second pass started {n_jobs} Spark jobs"
+    assert n_jobs <= 12, f"second pass started {n_jobs} Spark jobs"
+
+
+def _plan_text(spark, eid: int) -> str:
+    """The physical plan of SQL execution ``eid``, as the status store keeps it."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    return store.execution(eid).get().physicalPlanDescription()
 
 
 def test_resume_pass_parses_once(spark, tmp_path):
-    """One pass evaluates the parse UDF in one Spark execution: the gate
-    input and the rejects member read the same cached parse. Evaluated in
-    the gate's materialization and again in the rejects write, the UDF
-    cost two rounds of Python-worker tasks per pass."""
+    """One pass evaluates the parse UDF in exactly two Spark executions:
+    the gate's materialization and the ``rejects`` write, which reads the
+    envelopes alone. No other member write runs it: routed, checkpoint and
+    held read the materialized gate. While the parse was cached it ran in
+    one execution, but the cache held every new chunk with its payload to
+    save one Python task of about 0.03 CPU-s."""
     ct, routes, state = _small_input(spark, tmp_path)
     before = _execution_ids(spark)
     assert run_job(spark, ct, routes, state)["status"] == "ok"
     hits = _parse_executions(spark, before)
-    assert len(hits) == 1, f"parse UDF ran in executions {hits}"
+    assert len(hits) == 2, f"parse UDF ran in executions {hits}"
+    (rejects_file,) = state.rejects.added_files()
+    plans = [_plan_text(spark, eid) for eid in hits]
+    writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
+    assert len(writes) == 1 and os.path.dirname(rejects_file) in writes[0]
+    (gate,) = [p for p in plans if p not in writes]
+    assert "Window" in gate
     assert state.rejects.read(spark).count() == 1
 
 
@@ -309,15 +325,19 @@ def test_resume_pass_parses_in_one_task(spark, tmp_path):
     """The new chunks are parsed in one Python task per Arrow batch of
     rows, not one per input file: a Python UDF task costs about 0.2 CPU-s
     before its first row. The three chunk rows here sit in four files
-    (one of them empty), which gave four parse tasks. The pass also writes
-    its lineage rows as one ``metrics`` file, not one per input file."""
+    (one of them empty), which gave four parse tasks. Each of the two
+    executions that parse (the gate's and the rejects write's) runs one
+    task. The pass also writes its lineage rows as one ``metrics`` file,
+    not one per input file."""
     ct, routes, state = _small_input(spark, tmp_path)
     assert len(ct.incremental_files(None)) > 1
     before = _execution_ids(spark)
     assert run_job(spark, ct, routes, state)["status"] == "ok"
-    (eid,) = _parse_executions(spark, before)
-    tasks = _parse_stage_tasks(spark, eid)
-    assert list(tasks.values()) == [1], f"parse tasks per stage: {tasks}"
+    hits = _parse_executions(spark, before)
+    assert len(hits) == 2
+    for eid in hits:
+        tasks = _parse_stage_tasks(spark, eid)
+        assert list(tasks.values()) == [1], f"parse tasks per stage: {tasks}"
     assert len(state.metrics.added_files()) == 1
     assert state.metrics.read(spark).count() == len(ct.incremental_files(None))
 
@@ -739,8 +759,8 @@ def test_requeue_quarantine_backfills_held(spark, tmp_path):
     assert state.quarantine.read(spark).count() == 0
     held = state.held.read(spark).collect()
     assert len(held) == 1 and held[0]["seq"] == 5
-    # age was reset: first_held_run == the requeue pass, not the original
-    assert held[0]["first_held_run"] == state.group.current_snapshot()
+    # age was reset to the next pass (run 4), not the original run 1
+    assert held[0]["first_held_run"] == 4
 
     # the missing chunks finally ship → one pass emits the suffix once
     ct.commit(encode_envelope(spark.createDataFrame(
@@ -748,6 +768,7 @@ def test_requeue_quarantine_backfills_held(spark, tmp_path):
         schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
     )).select("envelope", "chunk_tokens", "source"))
     r = run_job(spark, ct, routes, state, held_max_age_runs=2)
+    assert r["run_id"] == 4
     seg = state.routed.read(spark).where(
         (F.col("doc_id") == "d") & (F.col("run_id") == r["run_id"])
     ).collect()
@@ -1066,6 +1087,59 @@ def test_redelivered_held_chunk_keeps_its_age(spark, tmp_path):
     ]
 
 
+def test_regate_pass_after_requeue_gets_a_new_run_id(spark, tmp_path):
+    """Every pass stamps a run id above all earlier ones, also a pass that
+    only re-gates held chunks: after a requeue, such a pass routes the
+    requeued suffix in a later run than the segment before it, so "run
+    order" orders a stream's segments. When the run id was the chunks
+    snapshot, both of these passes reused the previous pass's run id."""
+    from log_aggregator_spark.job import requeue_quarantine
+
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2, 5]))
+    ids = [run_job(spark, ct, routes, state, held_max_age_runs=1)["run_id"]]
+    # no new chunks: re-gates seq 5 and quarantines it
+    ids.append(run_job(spark, ct, routes, state, held_max_age_runs=1)["run_id"])
+    assert state.quarantine.read(spark).count() == 1
+    ct.commit(_one_stream(spark, [3, 4]))
+    ids.append(run_job(spark, ct, routes, state, held_max_age_runs=1)["run_id"])
+    assert requeue_quarantine(spark, state) == 1
+    ids.append(run_job(spark, ct, routes, state, held_max_age_runs=1)["run_id"])
+    assert ids == sorted(set(ids)), f"run ids per pass: {ids}"
+
+    routed = state.routed.read(spark).toPandas().sort_values("run_id")
+    assert [list(t) for t in routed["tokens"]] == [[1, 2], [3, 4], [5]]
+    assert routed["run_id"].is_unique
+
+
+def test_compaction_between_passes_does_not_age_held_chunks(spark, tmp_path):
+    """Held chunks age by passes, not by state commits: a compaction of the
+    state group between passes leaves the pass at which a held chunk is
+    quarantined unchanged — the third, with ``held_max_age_runs=2``. When
+    ages were counted in group snapshots, one compaction quarantined it at
+    the second pass."""
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2, 5]))
+    run_job(spark, ct, routes, state, held_max_age_runs=2)  # pass 1 holds seq 5
+    state.group.compact(spark, ["routed"])
+    run_job(spark, ct, routes, state, held_max_age_runs=2)
+    assert state.held.read(spark).count() == 1
+    assert state.quarantine.read(spark).count() == 0
+
+    run_job(spark, ct, routes, state, held_max_age_runs=2)
+    assert state.held.read(spark).count() == 0
+    q = state.quarantine.read(spark).collect()
+    assert [(r["seq"], r["first_held_run"], r["quarantined_run"]) for r in q] == [(5, 1, 3)]
+
+
 def test_job_routes_malformed_envelopes_to_rejects(spark, tmp_path):
     """Dead-letter wiring in the PRODUCTION path (VERDICT r2 #1): a corrupt
     envelope fed through run_job must land in the rejects member of the
@@ -1126,9 +1200,9 @@ def test_job_rejects_overflowing_digits(spark, tmp_path):
 
 
 def test_run_job_leaves_nothing_pinned(spark, tmp_path, monkeypatch):
-    """A pass caches its parse and local-checkpoints its gate decision;
-    both are released whether the pass commits, crashes before the commit
-    point, or loses the manifest CAS and retries. Pinned blocks left
+    """A pass local-checkpoints its gate decision; the checkpoint is
+    released whether the pass commits, crashes before the commit point, or
+    loses the manifest CAS and retries. Pinned blocks left
     behind would fill executor storage one pass at a time."""
     from log_aggregator_spark.tableio import TableGroup
 
@@ -1196,9 +1270,9 @@ def test_lineage_metrics_recorded(spark, docs, tmp_path):
 
 def test_lineage_metadata_matches_scan(spark, docs, tmp_path):
     """The metadata-only lineage (parquet footers, zero extra data I/O —
-    the run_job default) must agree with the mapInPandas scan variant on
+    what run_job records) must agree with Spark's own scan of the table on
     per-file row counts; files and totals identical."""
-    from log_aggregator_spark.lineage import lineage_from_files, lineage_records
+    from log_aggregator_spark.lineage import lineage_from_files
 
     chunks = chunker.chunks(docs)
     ct = SnapshotTable(str(tmp_path / "chunks"))
@@ -1206,13 +1280,10 @@ def test_lineage_metadata_matches_scan(spark, docs, tmp_path):
     files = ct.incremental_files(None)
     assert files
     meta = lineage_from_files(spark, files).toPandas()
-    scan = (
-        lineage_records(ct.read(spark)).toPandas()
-        .groupby("input_file", as_index=False)["n_rows"].sum()
-    )
+    scan = ct.read(spark).groupBy(F.input_file_name().alias("f")).count().collect()
     meta_counts = dict(zip(meta["input_file"], meta["n_rows"]))
-    # scan's input_file_name() is URI-form (file://...); compare by suffix
-    scan_counts = {f.replace("file://", ""): n for f, n in zip(scan["input_file"], scan["n_rows"])}
+    # input_file_name() is URI-form (file://...); compare by suffix
+    scan_counts = {r["f"].replace("file://", ""): r["count"] for r in scan}
     assert meta_counts == scan_counts
     assert (meta["n_bytes"] > 0).all()
 

@@ -166,6 +166,41 @@ def test_gate_plan_is_one_window_and_codegen_aggregate(spark):
     assert "lambdafunction" not in plan.lower(), plan
 
 
+def test_survivor_source_does_not_depend_on_partitioning(spark):
+    """A seq sent twice, with different payloads and sources, in two input
+    partitions: the survivor keeps the least payload with that row's own
+    source, so the reassembled and held frames are identical whichever
+    partition comes first, and the source is the oracle's. When the source
+    came from whichever duplicate the sort met first, swapping the
+    partitions swapped it."""
+    from log_aggregator_spark.operators.reassemble import _gate_flags, held_from_flags
+
+    a = [_chunk("d", 1, 1, [9], "late"), _chunk("d", 1, 2, [2], "src"),
+         _chunk("d", 1, 4, [8], "late")]
+    b = [_chunk("d", 1, 1, [5], "early"), _chunk("d", 1, 4, [3], "early"),
+         _chunk("e", 1, 1, [7], "other")]
+    frames = []
+    for first, second in ((a, b), (b, a)):
+        # two slices of equal length: partition 0 is ``first``, 1 ``second``
+        parsed = spark.createDataFrame(
+            spark.sparkContext.parallelize(first + second, 2),
+            schema="doc_id string, session long, seq long, chunk_tokens array<int>, source string",
+        )
+        assert parsed.rdd.glom().map(len).collect() == [3, 3]
+        held = held_from_flags(_gate_flags(parsed, None)).toPandas()
+        frames.append((
+            _normalize(reassemble_sql(parsed).toPandas()),
+            held.assign(chunk_tokens=held["chunk_tokens"].map(list)),
+        ))
+    pd.testing.assert_frame_equal(frames[0][0], frames[1][0])
+    pd.testing.assert_frame_equal(frames[0][1], frames[1][1])
+    want = _normalize(reassemble_oracle(make_chunks(a + b)))
+    pd.testing.assert_frame_equal(frames[0][0], want)
+    assert list(want["source"]) == ["early", "other"]
+    assert frames[0][1][["seq", "source"]].values.tolist() == [[4, "early"]]
+    assert list(frames[0][1]["chunk_tokens"].iloc[0]) == [3]
+
+
 def test_held_back(spark):
     rows, _ = CASES["gap_holds_suffix"]
     df = chunks_df(spark, rows)

@@ -200,3 +200,46 @@ def test_commit_against_expired_parent_raises(spark, tmp_path, monkeypatch):
         g.commit({"m": (df, "append")}, parent=1)
     assert g._snapshot_ids() == [4]
     assert g.table("m").read(spark).count() == 3
+
+
+def test_commit_writes_run_in_callers_job_group(spark, tmp_path):
+    """A group commit writes its members on driver threads. Each write runs
+    with the caller's local properties, so every Spark job of the commit
+    belongs to the caller's job group, and cancelling the group stops the
+    writes. Threads that did not inherit them put none of a two-member
+    commit's jobs in the group."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids() -> set[int]:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return {jobs.apply(i).jobId() for i in range(jobs.size())}
+
+    g = TableGroup(str(tmp_path / "g"))
+    before = job_ids()
+    sc.setJobGroup("commit-group", "a two-member commit")
+    try:
+        g.commit({"a": (spark.range(3), "append"), "b": (spark.range(2), "overwrite")})
+    finally:
+        sc._jsc.clearJobGroup()
+    new = job_ids() - before
+    in_group = set(sc.statusTracker().getJobIdsForGroup("commit-group"))
+    assert len(new) >= 2 and new == in_group, (new, in_group)
+
+
+def test_member_dirs_hold_only_data_files(spark, tmp_path):
+    """A committed member dir holds its parquet files and their checksums,
+    and no ``_SUCCESS`` marker: the manifest is the commit point."""
+    g = TableGroup(str(tmp_path / "g"))
+    g.commit({"a": (spark.range(3), "append"), "b": (spark.range(2), "overwrite")})
+    t = SnapshotTable(str(tmp_path / "t"))
+    t.commit(spark.range(4))
+    dirs = glob.glob(str(tmp_path / "*" / "data" / "*"))
+    assert len(dirs) == 3
+    for d in dirs:
+        names = os.listdir(d)
+        assert names and all(
+            n.startswith("part-") or (n.startswith(".part-") and n.endswith(".crc"))
+            for n in names
+        ), names
