@@ -369,7 +369,7 @@ def run_stream_dedup_job(
         )
         .collect()[0]
     )
-    n_remap = group.read_member(spark, "label_remap").count()
+    n_remap = group.table("label_remap").read(spark).count()
     unpersist_rdds(spark, exclude=pinned_before)
     return {
         "sec": t1 - t0,

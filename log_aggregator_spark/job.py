@@ -4,11 +4,11 @@ to the snapshot-table storage layer.
 Each invocation is one "directory pass" of the reference decoder
 (``DataPumpDecoderSort.java:103-181``), promoted to a cluster batch job:
 
-1. read NEW chunk rows (what the chunks table's appends added after the
-   lineage's ``chunks_snapshot``, resolved once, so each chunk is parsed
-   once, ``DataPumpDecoderSort.java:55-85``) plus the HELD cache (chunks
-   previous runs could not consume — the reference's "cache grows" files,
-   ``datadecoder/README.md:13-15``),
+1. read lineage, checkpoint and HELD cache (chunks previous runs could not
+   consume — the reference's "cache grows" files, ``datadecoder/README.md:13-15``)
+   through one view of the state group, then the NEW chunk rows (what the
+   chunks table's appends added after the lineage's ``chunks_snapshot``,
+   resolved once, so each chunk is parsed once, ``DataPumpDecoderSort.java:55-85``),
 2. split the new envelopes into parsed chunks and rejects
    (``split_rejects``, the parse entry of every pipeline), then run the
    gate against the persisted checkpoint table (``SequenceTracker``
@@ -19,7 +19,7 @@ Each invocation is one "directory pass" of the reference decoder
    composition ``run_pipeline`` runs on a lazy gate), stamp the run id (the
    group's pass counter + 1) and the held chunks' ages, and commit them
    with rejects and metrics in ONE atomic TableGroup manifest, against the
-   state snapshot step 1 read,
+   view step 1 read,
 4. release the checkpoint, and return the per-sink counts and the
    rejects/held row counts read with pyarrow from the files that commit
    added — exactly what was published, at no Spark job.
@@ -34,10 +34,10 @@ before the CAS, and the retry starts over from the committed state. No
 parse is cached: the gate and the ``rejects`` write each evaluate the UDF,
 and both evaluations are pure functions of the same new files, so an
 envelope the gate skips as malformed is exactly one the rejects member
-records. The pass reads checkpoint, held and lineage at one state snapshot
-and commits against that snapshot, so the CAS covers its whole
-read-to-commit window: a rival commit that lands while the pass computes
-fails the pass instead of being stacked on.
+records. The pass reads checkpoint, held and lineage through one state
+view and commits against it, so the CAS covers its whole read-to-commit
+window: a rival commit that lands while the pass computes fails the pass
+instead of being stacked on.
 
 Cost: at small inputs a pass is bound by fixed per-job and per-task cost.
 A warm pass over new chunks starts 11 Spark jobs on perfbench's
@@ -149,21 +149,17 @@ def _run_job_once(
     ``run_id``. Lineage rows come from metadata alone (the manifests and the
     new files' parquet footers), so they cost no second scan of the input."""
     t_start = time.perf_counter()
-    # the pass reads the state at one snapshot and commits against it
-    read_snap = state.group.current_snapshot()
-    ckpt_df = None
-    if state.checkpoint.exists(read_snap):
-        ckpt_df = state.checkpoint.read(spark, read_snap)
-    has_held = state.held.exists(read_snap)
-    lineage = state.group.lineage(read_snap)
-    chunks_snap, new_files, schema = chunks_table.increment(lineage.get("chunks_snapshot"))
-    if not new_files and not has_held:
+    # the pass reads the state through one view and commits against it
+    view = state.group.snapshot()
+    ckpt_df = view.read(spark, "checkpoint") if view.exists("checkpoint") else None
+    chunks_snap, new_files, schema = chunks_table.increment(view.lineage.get("chunks_snapshot"))
+    if not new_files and not view.exists("held"):
         return {"run_id": None, "status": "no_new_data"}
     # the group's pass counter, +1 per pass and carried unchanged through
     # compactions and requeues: routed segments sort in run order by it, and
     # held chunks age by passes — not by chunk commits (several may land
     # between passes, ADVICE r2) nor by state commits
-    run_id = lineage.get("run_id", 0) + 1
+    run_id = view.lineage.get("run_id", 0) + 1
 
     # The gate's local checkpoint, the one thing this pass pins in executor
     # storage, is released in the ``finally`` below, on success, crash or
@@ -189,10 +185,10 @@ def _run_job_once(
             parsed, rejects = split_rejects(read_files(spark, new_files, schema).coalesce(
                 _parse_tasks(spark, sum(new_file_rows))
             ))
-        if has_held:
+        if view.exists("held"):
             # held chunks carry ``first_held_run`` into the gate, which keeps
             # the least one among equal seqs; new chunks carry none
-            held = state.held.read(spark, read_snap)
+            held = view.read(spark, "held")
             parsed = (
                 held if parsed is None
                 else parsed.unionByName(held, allowMissingColumns=True)
@@ -240,21 +236,22 @@ def _run_job_once(
         snap = state.group.commit(
             tables,
             lineage={"run_id": run_id, "chunks_snapshot": chunks_snap, "wall_sec": wall},
-            parent=read_snap,
+            parent=view,
         )
     finally:
         unpersist_rdds(spark, exclude=pinned_before)
 
+    committed = state.group.snapshot(snap)
     return {
         "run_id": run_id,
         "status": "ok",
         "wall_sec": round(time.perf_counter() - t_start, 3),
-        "sink_counts": _committed_sink_counts(state.routed.added_files(snap)),
+        "sink_counts": _committed_sink_counts(committed.added_files("routed")),
         "rejects": (
-            sum(file_rows(state.rejects.added_files(snap)))
+            sum(file_rows(committed.added_files("rejects")))
             if rejects is not None else 0
         ),
-        "held": sum(file_rows(state.held.added_files(snap))),
+        "held": sum(file_rows(committed.added_files("held"))),
     }
 
 
@@ -287,25 +284,22 @@ def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     instantly re-quarantine), quarantine empties; the lineage carries the
     last pass's ``run_id`` and ``chunks_snapshot`` forward. Returns rows
     moved."""
-    read_snap = state.group.current_snapshot()
-    if not state.quarantine.exists(read_snap):
-        return 0
-    q = state.quarantine.read(spark, read_snap)
-    n = q.count()
+    view = state.group.snapshot()
+    q = view.read(spark, "quarantine") if view.exists("quarantine") else None
+    n = q.count() if q is not None else 0
     if n == 0:
         return 0
-    next_run = state.group.lineage(read_snap)["run_id"] + 1
+    next_run = view.lineage["run_id"] + 1
     requeued = q.select(
         "doc_id", "session", "seq", "chunk_tokens", "source"
     ).withColumn("first_held_run", F.lit(next_run).cast("long"))
-    if state.held.exists(read_snap):
-        held = state.held.read(spark, read_snap)
-        requeued = held.select(*requeued.columns).unionByName(requeued)
+    if view.exists("held"):
+        requeued = view.read(spark, "held").select(*requeued.columns).unionByName(requeued)
     empty_q = spark.createDataFrame([], schema=q.schema)
     state.group.commit(
         {"held": (requeued, "overwrite"), "quarantine": (empty_q, "overwrite")},
         lineage={"requeued_quarantine_rows": n},
-        parent=read_snap,
+        parent=view,
     )
     return n
 

@@ -30,23 +30,23 @@ from pyspark.sql import functions as F
 
 DELETE_OP = "D"
 UPSERT_OP = "U"
+VERSION_COL = "version"
+OP_COL = "op"
 
 
 def merge_upsert(
     base: DataFrame,
     updates: DataFrame,
     keys: Sequence[str],
-    version_col: str = "version",
-    op_col: str = "op",
     base_version: int = 0,
 ) -> DataFrame:
     """Last-writer-wins MERGE of ``updates`` into ``base``.
 
     ``base``: current snapshot (no version/op columns — it is implicitly
     ``base_version``, op=U). ``updates``: change batch carrying every
-    payload column of ``base`` plus ``version_col`` (monotone per key;
-    must exceed ``base_version`` to win) and ``op_col`` ('U' upsert /
-    'D' delete). Returns the merged snapshot with ``version_col`` kept
+    payload column of ``base`` plus ``version`` (monotone per key; must
+    exceed ``base_version`` to win) and ``op`` ('U' upsert / 'D'
+    delete). Returns the merged snapshot with ``version`` kept
     (provenance: which batch last touched the row).
 
     The contract is one row per key per version with version >
@@ -68,21 +68,21 @@ def merge_upsert(
     b = base.select(
         *keys,
         *payload,
-        F.lit(base_version).cast("long").alias(version_col),
-        F.lit(UPSERT_OP).alias(op_col),
+        F.lit(base_version).cast("long").alias(VERSION_COL),
+        F.lit(UPSERT_OP).alias(OP_COL),
         F.lit(1).alias("_prov"),
     )
     u = updates.select(
         *keys,
         *payload,
-        F.col(version_col).cast("long").alias(version_col),
-        F.col(op_col),
+        F.col(VERSION_COL).cast("long").alias(VERSION_COL),
+        F.col(OP_COL),
         F.lit(0).alias("_prov"),
     )
-    st = F.struct(*[F.col(c) for c in payload], F.col(op_col))
+    st = F.struct(*[F.col(c) for c in payload], F.col(OP_COL))
     order = F.struct(
-        F.col(version_col),
-        F.when(F.col(op_col) == DELETE_OP, F.lit(2))
+        F.col(VERSION_COL),
+        F.when(F.col(OP_COL) == DELETE_OP, F.lit(2))
         .otherwise(F.col("_prov"))
         .alias("_rank"),
     )
@@ -91,11 +91,11 @@ def merge_upsert(
         .groupBy(*keys)
         .agg(
             F.max_by(st, order).alias("_w"),
-            F.max(version_col).cast("long").alias(version_col),
+            F.max(VERSION_COL).cast("long").alias(VERSION_COL),
         )
     )
-    return winner.where(F.col(f"_w.{op_col}") != DELETE_OP).select(
+    return winner.where(F.col(f"_w.{OP_COL}") != DELETE_OP).select(
         *keys,
         *[F.col(f"_w.{c}").alias(c) for c in payload],
-        F.col(version_col),
+        F.col(VERSION_COL),
     )

@@ -17,10 +17,10 @@ scale for zero correctness gain.
 ``cluster_by_sink=True`` is the opt-in layout pass for when the *stored*
 layout matters more than write throughput (few large files per sink →
 cheaper downstream scans/compaction). That path is where hot-sink skew
-exists, so it salts: ``repartition(n, sink, xxhash64(doc_id) % n_salts)``
-spreads a hot sink over ``n_salts`` writer tasks while keeping each output
-file single-sink (north star: "salted repartitioning to defuse hot-source
-skew").
+exists, so it salts: ``repartition(32, sink, xxhash64(doc_id) % 8)``
+spreads a hot sink over up to 8 of 32 writer tasks while keeping each
+output file single-sink (north star: "salted repartitioning to defuse
+hot-source skew").
 
 ``partitionBy("sink")`` gives per-sink directories = per-sink tables;
 readers get partition pruning on sink for free.
@@ -37,12 +37,7 @@ def route_write(
     out_dir: str,
     mode: str = "overwrite",
     cluster_by_sink: bool = False,
-    n_partitions: int = 32,
-    n_salts: int = 8,
 ) -> None:
-    df = enriched
     if cluster_by_sink:
-        df = df.repartition(
-            n_partitions, F.col("sink"), (F.xxhash64("doc_id") % n_salts)
-        )
-    df.write.mode(mode).partitionBy("sink").parquet(out_dir)
+        enriched = enriched.repartition(32, F.col("sink"), F.xxhash64("doc_id") % 8)
+    enriched.write.mode(mode).partitionBy("sink").parquet(out_dir)

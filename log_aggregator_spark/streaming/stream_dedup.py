@@ -71,7 +71,7 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from ..functions import dedup as fdedup
 from ..session import persistent_rdd_ids, unpersist_rdds
 from ..functions.text import shingles
-from ..tableio import TableGroup
+from ..tableio import Snapshot, TableGroup
 
 DOC_SCHEMA = (
     "doc_id long, text string, lang string, source string, n_chars long"
@@ -166,15 +166,19 @@ def _empty(spark: SparkSession, schema: StructType) -> DataFrame:
 
 
 def read_clusters(
-    spark: SparkSession, group: TableGroup, snapshot: int | None = None
+    spark: SparkSession, group: TableGroup, snapshot: Snapshot | None = None
 ) -> DataFrame:
     """The resolved duplicate-clusters view: append-only base labels
     resolved through the consolidated remap (single-hop by construction).
     Remap is merge-event-sized — broadcast under AQE in the common case;
     past broadcast size the join degrades gracefully to a shuffle join and
-    ``compact_clusters`` resets it. ``snapshot``: default latest."""
-    base = group.read_member(spark, CLUSTERS_BASE, snapshot)
-    remap = group.read_member(spark, LABEL_REMAP, snapshot)
+    ``compact_clusters`` resets it. Both members come from one view,
+    ``snapshot`` (default: the group's current one): a compaction that
+    lands between the two reads would otherwise pair the old base with the
+    emptied remap and undo every merge."""
+    view = snapshot if snapshot is not None else group.snapshot()
+    base = view.read(spark, CLUSTERS_BASE)
+    remap = view.read(spark, LABEL_REMAP)
     return (
         base.join(remap, base["cluster_id"] == remap["old_label"], "left")
         .select(
@@ -195,15 +199,15 @@ def compact_clusters(spark: SparkSession, group: TableGroup) -> int:
     base+remap or the new base+empty, never a half state. Committed against
     the snapshot it read, so a fold that lands meanwhile fails it with
     ConcurrentCommitError instead of being overwritten."""
-    snap = group.current_snapshot()
-    resolved = read_clusters(spark, group, snap).select("doc_id", "cluster_id")
+    view = group.snapshot()
+    resolved = read_clusters(spark, group, view).select("doc_id", "cluster_id")
     return group.commit(
         {
             CLUSTERS_BASE: (resolved, "overwrite"),
             LABEL_REMAP: (_empty(spark, _REMAP_SCHEMA), "overwrite"),
         },
-        lineage={"compacted_from": snap},
-        parent=snap,
+        lineage={"compacted_from": view.id},
+        parent=view,
     )
 
 
@@ -246,7 +250,8 @@ def apply_dedup_batch(
         if (
             snap is not None
             and auto_compact_rows is not None
-            and group.read_member(spark, LABEL_REMAP).count() > auto_compact_rows
+            and group.snapshot(snap).read(spark, LABEL_REMAP).count()
+            > auto_compact_rows
         ):
             compact_clusters(spark, group)
         return snap
@@ -261,19 +266,19 @@ def _fold_batch(
     batch_id: int,
     stop_shingles: DataFrame | None = None,
 ) -> int | None:
-    # every state read below is at this snapshot; the commit is against it
-    snap = group.current_snapshot()
+    # every state read below is through this view; the commit is against it
+    view = group.snapshot()
 
     # At-least-once upstream: collapse intra-batch re-deliveries, drop docs
     # already folded in by an earlier batch (ids-only anti-join against the
     # append-only base — membership needs no remap resolution).
     batch = batch.select("doc_id", "text").dropDuplicates(["doc_id"])
-    if snap is not None:
-        base = group.read_member(spark, CLUSTERS_BASE, snap)
-        old_remap = group.read_member(spark, LABEL_REMAP, snap)
-        stored = read_clusters(spark, group, snap)
-        fp_tbl = group.read_member(spark, FINGERPRINTS, snap)
-        key_tbl = group.read_member(spark, BAND_KEYS, snap)
+    if view.id is not None:
+        base = view.read(spark, CLUSTERS_BASE)
+        old_remap = view.read(spark, LABEL_REMAP)
+        stored = read_clusters(spark, group, view)
+        fp_tbl = view.read(spark, FINGERPRINTS)
+        key_tbl = view.read(spark, BAND_KEYS)
         batch = batch.join(base.select("doc_id"), "doc_id", "left_anti")
     else:
         old_remap = _empty(spark, _REMAP_SCHEMA)
@@ -413,7 +418,7 @@ def _fold_batch(
             DECISIONS: (decisions, "append"),
         },
         lineage={"batch_id": int(batch_id), "n_docs": int(n_docs)},
-        parent=snap,
+        parent=view,
     )
 
 

@@ -22,9 +22,10 @@ A group commits several member tables in one manifest. A standalone
 ``SnapshotTable`` is a group of one member, so there is one write, publish,
 compaction and expiry path for both.
 
-On a real cluster the same call sites switch to
-``df.writeTo(table).append()`` / snapshot-ref reads — the pipeline code
-only sees this module's API.
+A reader pins one snapshot, as an Iceberg reader loads the table metadata
+once: ``TableGroup.snapshot()`` parses one manifest into a ``Snapshot``, and
+an operation reads and commits (``commit(parent=)``) through that one view.
+Only ``Snapshot`` and ``_manifest`` read the manifest layout.
 
 Layout::
 
@@ -37,6 +38,7 @@ data movement); executors touch parquet exclusively.
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import json
 import os
@@ -47,6 +49,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Never-manifested data dirs younger than this survive orphan GC — they may
 # be a concurrent commit's files awaiting its manifest CAS (Iceberg's
@@ -65,9 +68,6 @@ class ConcurrentCommitError(RuntimeError):
 
 class SnapshotExpiredError(LookupError):
     """An incremental read's ``since`` has expired: what came after it is unknown."""
-
-
-_AT_CALL = object()  # ``TableGroup.commit``'s default parent
 
 
 def _gc_data_dir(
@@ -128,17 +128,11 @@ def _keep_files_with_rows(data_dir: str) -> list[str]:
     return kept
 
 
-def _schema_from_json(schema_json: str):
-    from pyspark.sql.types import StructType
-
-    return StructType.fromJson(json.loads(schema_json))
-
-
 def read_files(spark: SparkSession, files: list[str], schema_json: str) -> DataFrame:
     """Scan ``files`` under the schema their manifest recorded. Naming the
     schema skips Spark's parquet footer-inference job (one per read), and
     older files that lack a column added later read it as null."""
-    schema = _schema_from_json(schema_json)
+    schema = StructType.fromJson(json.loads(schema_json))
     if not files:
         return spark.createDataFrame([], schema=schema)
     return spark.read.schema(schema).parquet(*files)
@@ -160,9 +154,10 @@ class IcebergTable:
         spark.sql.catalog.lake.warehouse = s3://.../warehouse
 
     Construction performs a capability check and fails with these
-    instructions when the runtime is absent, so the switch is a flipped
-    constructor (``IcebergTable(spark, "lake.db.routed")`` in place of
-    ``SnapshotTable(path)``), not a rewrite."""
+    instructions when the runtime is absent. One table switches by the
+    constructor (``IcebergTable(spark, "lake.db.routed")`` for
+    ``SnapshotTable(path)``); ``run_job`` needs Iceberg forms of the
+    multi-table ``TableGroup`` commit and of ``increment`` first."""
 
     def __init__(self, spark: SparkSession, name: str) -> None:
         if not self.available(spark):
@@ -278,29 +273,48 @@ class IcebergTable:
         return {"expired": [r[0] for r in expired], "deleted_files": len(orphans)}
 
 
+class Snapshot:
+    """One parsed manifest of a :class:`TableGroup`. An operation reads
+    every member through one view and commits against it, so it sees one
+    snapshot whatever lands meanwhile; an empty group's view has id None."""
+
+    def __init__(self, snap_id: int | None, manifest: dict) -> None:
+        self.id = snap_id
+        self.lineage: dict = manifest["lineage"]
+        self._tables: dict = manifest["tables"]
+        self.members = list(self._tables)
+
+    def exists(self, name: str) -> bool:
+        return name in self._tables
+
+    def files(self, name: str) -> list[str]:
+        return self._tables[name]["files"]
+
+    def added_files(self, name: str) -> list[str]:
+        """The files this snapshot's commit wrote for ``name``; [] if carried."""
+        return self._tables[name]["added_files"]
+
+    def appended_files(self, name: str) -> list[str]:
+        """``added_files`` if the commit appended them; [] if it overwrote."""
+        return self.added_files(name) if self._tables[name]["mode"] == "append" else []
+
+    def schema(self, name: str) -> str:
+        return self._tables[name]["schema"]
+
+    def read(self, spark: SparkSession, name: str) -> DataFrame:
+        return read_files(spark, self.files(name), self.schema(name))
+
+
 class GroupMember:
-    """Read-side handle for one table inside a :class:`TableGroup` — the
-    same read/exists/lineage surface as a standalone SnapshotTable, so
-    callers don't care whether a table commits alone or transactionally
-    with its siblings."""
+    """One table of a :class:`TableGroup`, read at the current snapshot; an
+    operation that reads several reads them through one ``snapshot()``."""
 
     def __init__(self, group: "TableGroup", name: str) -> None:
         self._group = group
         self.name = name
 
-    def read(self, spark: SparkSession, snapshot: int | None = None) -> DataFrame:
-        return self._group.read_member(spark, self.name, snapshot)
-
-    def added_files(self, snapshot: int | None = None) -> list[str]:
-        """The data files ``snapshot`` (default: latest) wrote for this
-        member; [] when that commit carried the member forward."""
-        return self._group._entry(self.name, snapshot)["added_files"]
-
-    def exists(self, snapshot: int | None = None) -> bool:
-        return self._group.member_exists(self.name, snapshot)
-
-    def lineage(self, snapshot: int | None = None) -> dict:
-        return self._group.lineage(snapshot)
+    def read(self, spark: SparkSession) -> DataFrame:
+        return self._group.snapshot().read(spark, self.name)
 
 
 class TableGroup:
@@ -322,7 +336,8 @@ class TableGroup:
     "lineage": {...}}``; an 'append' member lists its parent's files plus
     the new ones, an 'overwrite' member only the new ones, an unnamed one is
     an append of nothing; lineage is the parent's updated with the commit's;
-    the snap file is created once, by ``_publish`` (CAS)."""
+    the snap file is created once, by ``_publish`` (CAS). ``_manifest``
+    parses it and ``Snapshot`` reads it; nothing else opens it."""
 
     def __init__(self, root: str) -> None:
         self.root = root
@@ -334,19 +349,19 @@ class TableGroup:
         self,
         tables: dict[str, tuple[DataFrame, str]],
         lineage: dict | None = None,
-        parent=_AT_CALL,
+        parent: Snapshot | None = None,
     ) -> int:
         """tables: name → (df, mode) with mode in {'append', 'overwrite'}.
         Members absent from ``tables`` carry forward unchanged. Returns the
         new snapshot id, visible once ``_publish`` links the manifest.
-        ``parent`` is the snapshot the inputs were read at (None: the empty
-        group) and the CAS's expected value: if another commit has landed
-        since, this one raises ConcurrentCommitError. The default, the
-        snapshot current at the call, suits a blind append."""
+        ``parent`` is the view the inputs were read at (empty for the empty
+        group): the commit carries its members and lineage forward, and its
+        id is the CAS's expected value, so if another commit has landed
+        since, this one raises ConcurrentCommitError. The default, the view
+        current at the call, suits a blind append."""
         os.makedirs(self._manifest_dir, exist_ok=True)
-        if parent is _AT_CALL:
-            parent = self.current_snapshot()
-        base = self._manifest(parent) if parent else {"tables": {}, "lineage": {}}
+        if parent is None:
+            parent = self.snapshot()
 
         # Member writes are independent Spark jobs over disjoint data dirs;
         # submit them from driver threads so the scheduler overlaps them
@@ -365,12 +380,10 @@ class TableGroup:
                 "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
             ).mode("overwrite").parquet(data_dir)
             new_files = _keep_files_with_rows(data_dir)
-            files = list(new_files)
-            if mode == "append" and name in base["tables"]:
-                files = base["tables"][name]["files"] + files
+            carried = parent.files(name) if mode == "append" and parent.exists(name) else []
             return name, {
                 "mode": mode,
-                "files": files,
+                "files": carried + new_files,
                 "added_files": new_files,
                 "schema": df.schema.json(),
             }
@@ -382,16 +395,17 @@ class TableGroup:
                 for name, (df, mode) in tables.items()
             ]
             entries = dict(f.result() for f in futures)
-        for name, t in base["tables"].items():
+        for name in parent.members:
             if name not in entries:
-                entries[name] = {**t, "mode": "append", "added_files": []}
+                entries[name] = {"mode": "append", "files": parent.files(name),
+                                 "added_files": [], "schema": parent.schema(name)}
 
-        snap_id = (parent or 0) + 1
+        snap_id = (parent.id or 0) + 1
         manifest = {
             "snapshot": snap_id,
-            "parent": parent,
+            "parent": parent.id,
             "tables": entries,
-            "lineage": {**base["lineage"], **(lineage or {})},
+            "lineage": {**parent.lineage, **(lineage or {})},
         }
         self._publish(snap_id, manifest)
         return snap_id
@@ -441,25 +455,14 @@ class TableGroup:
         with open(self._snap_path(snap_id)) as f:
             return json.load(f)
 
-    def member_exists(self, name: str, snapshot: int | None = None) -> bool:
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        return snap is not None and name in self._manifest(snap)["tables"]
-
-    def read_member(
-        self, spark: SparkSession, name: str, snapshot: int | None = None
-    ) -> DataFrame:
-        entry = self._entry(name, snapshot)
-        return read_files(spark, entry["files"], entry["schema"])
-
-    def _entry(self, name: str, snapshot: int | None) -> dict:
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        if snap is None:
-            raise FileNotFoundError(f"no snapshot in {self.root}")
-        return self._manifest(snap)["tables"][name]
-
-    def lineage(self, snapshot: int | None = None) -> dict:
-        snap = snapshot if snapshot is not None else self.current_snapshot()
-        return self._manifest(snap)["lineage"] if snap else {}
+    def snapshot(self, snap_id: int | None = None) -> Snapshot:
+        """Snapshot ``snap_id`` (default: the current one, empty if none),
+        parsed once. Raises FileNotFoundError once it has expired."""
+        if snap_id is None:
+            snap_id = self.current_snapshot()
+        if snap_id is None:
+            return Snapshot(None, {"tables": {}, "lineage": {}})
+        return Snapshot(snap_id, self._manifest(snap_id))
 
     # ---------------------------------------------------- maintenance ops
 
@@ -482,22 +485,21 @@ class TableGroup:
         snapshot compaction read, so an append that lands meanwhile fails
         it with ConcurrentCommitError instead of being dropped by the
         overwrite."""
-        cur = self.current_snapshot()
-        if cur is None:
+        view = self.snapshot()
+        if view.id is None:
             raise FileNotFoundError(f"no snapshot in {self.root}")
-        entries = self._manifest(cur)["tables"]
-        names = names if names is not None else list(entries)
+        names = names if names is not None else view.members
         dfs: dict[str, tuple[DataFrame, str]] = {}
         for n in names:
-            files = entries[n]["files"]
+            files = view.files(n)
             if not files:
                 continue
             total = sum(os.path.getsize(f) for f in files)
             n_out = max(1, round(total / (target_file_mb * 1024 * 1024)))
-            dfs[n] = (self.read_member(spark, n, cur).coalesce(n_out), "overwrite")
+            dfs[n] = (view.read(spark, n).coalesce(n_out), "overwrite")
         # the group commit by name: SnapshotTable overrides ``commit`` with
         # its one-table form
-        return TableGroup.commit(self, dfs, {"compacted_from": cur}, parent=cur)
+        return TableGroup.commit(self, dfs, {"compacted_from": view.id}, parent=view)
 
     def expire_snapshots(
         self, keep_last: int = 2, orphan_min_age_sec: float = ORPHAN_MIN_AGE_SEC
@@ -515,17 +517,23 @@ class TableGroup:
         threshold may be an in-flight commit, not a crash orphan — it is
         skipped (Iceberg's remove_orphan_files defaults to 3 days for
         exactly this). Dirs referenced only by the manifests being expired
-        were committed and superseded — they delete regardless of age."""
+        were committed and superseded — they delete regardless of age. A
+        ``manifests/.tmp-*`` file a crash left in ``_publish`` is age-guarded."""
         ids = self._snapshot_ids()
         cut = max(0, len(ids) - max(1, keep_last))  # ids[:cut] expire
         referenced: set[str] = set()
         expired_refs: set[str] = set()
         for i, snap_id in enumerate(ids):
             refs = expired_refs if i < cut else referenced
-            for entry in self._manifest(snap_id)["tables"].values():
-                refs.update(entry["files"])
+            view = self.snapshot(snap_id)
+            refs.update(f for name in view.members for f in view.files(name))
         for snap_id in ids[:cut]:
             os.remove(self._snap_path(snap_id))
+        cutoff = time.time() - orphan_min_age_sec
+        for tmp in glob.glob(os.path.join(self._manifest_dir, ".tmp-*")):
+            with contextlib.suppress(FileNotFoundError):  # its commit removed it
+                if os.path.getmtime(tmp) < cutoff:
+                    os.remove(tmp)
         deleted = _gc_data_dir(
             os.path.join(self.root, "data"), referenced, expired_refs,
             orphan_min_age_sec,
@@ -538,8 +546,8 @@ class SnapshotTable(TableGroup):
     member ``MEMBER``. Commit, publish, compaction and expiry are the
     group's; this class adds the one-table surface the storage contract
     suite names (``commit(df, mode, lineage)``, ``exists``, ``read``,
-    ``read_incremental``, ``incremental_files``), shared with
-    ``IcebergTable``."""
+    ``lineage``, ``read_incremental``, ``incremental_files``), shared
+    with ``IcebergTable``."""
 
     MEMBER = "table"
 
@@ -554,11 +562,14 @@ class SnapshotTable(TableGroup):
         return super().commit({self.MEMBER: (df, mode)}, lineage)
 
     def exists(self) -> bool:
-        return self.member_exists(self.MEMBER)
+        return self.snapshot().exists(self.MEMBER)
 
     def read(self, spark: SparkSession, snapshot: int | None = None) -> DataFrame:
         """Read the table as of ``snapshot`` (default: latest)."""
-        return self.read_member(spark, self.MEMBER, snapshot)
+        return self.snapshot(snapshot).read(spark, self.MEMBER)
+
+    def lineage(self, snapshot: int | None = None) -> dict:
+        return self.snapshot(snapshot).lineage
 
     def read_incremental(
         self, spark: SparkSession, since: int | None
@@ -583,13 +594,13 @@ class SnapshotTable(TableGroup):
         if not ids:
             return None, [], None
         if since is None:
-            entry = self._entry(self.MEMBER, ids[-1])
-            return ids[-1], list(entry["files"]), entry["schema"]
+            cur = self.snapshot(ids[-1])
+            return cur.id, list(cur.files(self.MEMBER)), cur.schema(self.MEMBER)
         if since < ids[0]:
             raise SnapshotExpiredError(f"snapshot {since} of {self.root} has expired")
-        later = [self._entry(self.MEMBER, s) for s in ids if s > since]
-        files = [f for e in later if e["mode"] == "append" for f in e["added_files"]]
-        return ids[-1], files, later[-1]["schema"] if later else None
+        later = [self.snapshot(s) for s in ids if s > since]
+        files = [f for v in later for f in v.appended_files(self.MEMBER)]
+        return ids[-1], files, later[-1].schema(self.MEMBER) if later else None
 
 
 # ---------------------------------------------------------- bucketed layout

@@ -139,8 +139,9 @@ def _setup(spark, root):
 
 def _assert_listed_files_exist(group: TableGroup) -> None:
     for snap in group._snapshot_ids():
-        for entry in group._manifest(snap)["tables"].values():
-            missing = [f for f in entry["files"] if not os.path.exists(f)]
+        view = group.snapshot(snap)
+        for name in view.members:
+            missing = [f for f in view.files(name) if not os.path.exists(f)]
             assert not missing, (snap, missing)
 
 
@@ -148,7 +149,7 @@ def _assert_routed_is_oracle(group: TableGroup) -> None:
     """Routed token segments, concatenated in run order per stream, equal
     the single-run reassembly of both batches; no stream has two segments
     from one run."""
-    files = group._manifest(group.current_snapshot())["tables"]["routed"]["files"]
+    files = group.snapshot().files("routed")
     routed = (
         ds.dataset(files, format="parquet")
         .to_table(columns=["doc_id", "session", "run_id", "tokens"])

@@ -312,7 +312,7 @@ def test_resume_pass_parses_once(spark, tmp_path):
     assert run_job(spark, ct, routes, state)["status"] == "ok"
     hits = _parse_executions(spark, before)
     assert len(hits) == 2, f"parse UDF ran in executions {hits}"
-    (rejects_file,) = state.rejects.added_files()
+    (rejects_file,) = state.group.snapshot().added_files("rejects")
     plans = [_plan_text(spark, eid) for eid in hits]
     writes = [p for p in plans if "InsertIntoHadoopFsRelationCommand" in p]
     assert len(writes) == 1 and os.path.dirname(rejects_file) in writes[0]
@@ -338,7 +338,7 @@ def test_resume_pass_parses_in_one_task(spark, tmp_path):
     for eid in hits:
         tasks = _parse_stage_tasks(spark, eid)
         assert list(tasks.values()) == [1], f"parse tasks per stage: {tasks}"
-    assert len(state.metrics.added_files()) == 1
+    assert len(state.group.snapshot().added_files("metrics")) == 1
     assert state.metrics.read(spark).count() == len(ct.incremental_files(None))
 
 
@@ -531,7 +531,7 @@ def test_crash_before_publish_leaves_no_partial_state(spark, tmp_path, monkeypat
 
     # commit point never reached → previous state (nothing) fully visible
     assert state.group.current_snapshot() is None
-    assert not state.routed.exists() and not state.checkpoint.exists()
+    assert not state.group.snapshot().members
 
     # retry with the crash removed: exactly-once output
     monkeypatch.setattr(TableGroup, "_publish", real_publish)
@@ -720,6 +720,37 @@ def test_rival_pass_during_compute_loses_the_cas(spark, tmp_path, monkeypatch):
     assert state.group.current_snapshot() == 2
 
 
+def test_warm_pass_parses_the_state_manifest_at_most_twice(spark, tmp_path, monkeypatch):
+    """A warm pass (checkpoint, held chunks and rejects in its state) reads
+    the state group through one snapshot view: one parse of the manifest it
+    reads and commits against, one of the manifest it committed, for the
+    summary. When each read resolved the current snapshot and parsed its
+    manifest again, the pass parsed the state manifest 9 times."""
+    from log_aggregator_spark.tableio import TableGroup
+
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2, 5]).unionByName(_garbage(spark, "bad-1")))
+    run_job(spark, ct, routes, state)
+    ct.commit(_one_stream(spark, [3]).unionByName(_garbage(spark, "bad-2")))
+
+    real_manifest = TableGroup._manifest
+    parsed = []
+
+    def counted(self, snap_id):
+        if self.root == state.group.root:
+            parsed.append(snap_id)
+        return real_manifest(self, snap_id)
+
+    monkeypatch.setattr(TableGroup, "_manifest", counted)
+    r = run_job(spark, ct, routes, state)
+    assert r["status"] == "ok" and r["rejects"] == 1 and r["held"] == 1
+    assert parsed == [1, 2], parsed
+
+
 def test_requeue_quarantine_backfills_held(spark, tmp_path):
     """requeue_quarantine: after the root cause of a permanent gap is fixed,
     quarantined chunks move back to the held cache (one atomic commit, age
@@ -793,7 +824,7 @@ def _garbage(spark, envelope):
 
 def _added(ct: SnapshotTable, *snaps) -> list[str]:
     """The data files the chunk commits ``snaps`` added."""
-    return [f for s in snaps for f in ct._manifest(s)["tables"][ct.MEMBER]["added_files"]]
+    return [f for s in snaps for f in ct.snapshot(s).added_files(ct.MEMBER)]
 
 
 def _input_files(state: JobState, spark, run_id) -> list[str]:
@@ -826,7 +857,7 @@ def test_pass_after_requeue_reads_only_new_chunks(spark, tmp_path):
     r = run_job(spark, ct, routes, state, held_max_age_runs=1)
     assert r["rejects"] == 0 and state.rejects.read(spark).count() == 1
     assert _input_files(state, spark, r["run_id"]) == sorted(_added(ct, s2))
-    assert state.group.lineage(requeue_snap)["chunks_snapshot"] == s1
+    assert state.group.snapshot(requeue_snap).lineage["chunks_snapshot"] == s1
     assert [list(t) for t in _segments(state, spark)["tokens"]] == [[1, 2, 3, 4, 5]]
 
 
@@ -886,7 +917,7 @@ def test_chunk_commit_during_resolution_is_parsed_once(spark, tmp_path, monkeypa
     assert r2["run_id"] == 2 and r2["rejects"] == 1
 
     metrics = state.metrics.read(spark).toPandas()
-    assert len(metrics) == len(ct._manifest(2)["tables"][ct.MEMBER]["files"])
+    assert len(metrics) == len(ct.snapshot(2).files(ct.MEMBER))
     assert metrics["n_rows"].sum() == ct.read(spark).count() == 5
     assert sorted(r["envelope"] for r in state.rejects.read(spark).collect()) == [
         "bad-1", "bad-2",
@@ -1265,7 +1296,7 @@ def test_lineage_metrics_recorded(spark, docs, tmp_path):
     assert {"partition_id", "input_file", "n_rows", "n_bytes", "wall_ms"}.issubset(m.columns)
     assert m["n_rows"].sum() == chunks.count()
     assert (m["n_bytes"] > 0).all()
-    assert state.metrics.lineage()["wall_sec"] > 0
+    assert state.group.snapshot().lineage["wall_sec"] > 0
 
 
 def test_lineage_metadata_matches_scan(spark, docs, tmp_path):

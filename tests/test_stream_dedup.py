@@ -115,7 +115,7 @@ def test_stream_dedup_matches_batch_recompute(spark, tmp_path):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
     # one atomic group snapshot per non-empty micro-batch
     assert group.current_snapshot() is not None
-    assert group.lineage()["n_docs"] > 0
+    assert group.snapshot().lineage["n_docs"] > 0
 
 
 def test_apply_batch_incremental_equals_recompute_and_replay_is_noop(
@@ -150,13 +150,13 @@ def test_apply_batch_incremental_equals_recompute_and_replay_is_noop(
     # (never a rewritten corpus table), the remap is single-hop and
     # bounded by merge events, and compaction folds it in atomically
     # without changing the resolved view.
-    base = group.read_member(spark, CLUSTERS_BASE).toPandas()
+    base = group.table(CLUSTERS_BASE).read(spark).toPandas()
     assert len(base) == len(pdf) and base.doc_id.is_unique
-    remap = group.read_member(spark, LABEL_REMAP).toPandas()
+    remap = group.table(LABEL_REMAP).read(spark).toPandas()
     assert (remap.new_label < remap.old_label).all()  # labels only decrease
     assert not set(remap.old_label) & set(remap.new_label)  # single-hop
     compact_clusters(spark, group)
-    assert group.read_member(spark, LABEL_REMAP).count() == 0
+    assert group.table(LABEL_REMAP).read(spark).count() == 0
     pd.testing.assert_frame_equal(
         _stored_clusters(spark, group), want, check_dtype=False
     )
@@ -181,15 +181,15 @@ def test_stream_dedup_state_tables_and_decisions(spark, tmp_path):
     apply_dedup_batch(spark, group, _docs_df(spark, pdf.iloc[3:]), 1)
 
     # fingerprint table holds one row per distinct content, canonical = first arrival
-    fps = group.read_member(spark, FINGERPRINTS).toPandas()
+    fps = group.table(FINGERPRINTS).read(spark).toPandas()
     assert len(fps) == 3  # {0-dup content, 2's content, 4's content}
     assert set(fps.doc_id) == {0, 2, 4}
 
     # band keys only for content-fresh canonicals (exact dups carry none)
-    keys = group.read_member(spark, BAND_KEYS).toPandas()
+    keys = group.table(BAND_KEYS).read(spark).toPandas()
     assert set(keys.doc_id.unique()) == {0, 2, 4}
 
-    dec = group.read_member(spark, DECISIONS).toPandas()
+    dec = group.table(DECISIONS).read(spark).toPandas()
     exact = dec[dec.verdict == VERDICT_EXACT].sort_values("doc_id")
     assert list(exact.doc_id) == [1, 3]
     assert list(exact.dup_of) == [0, 0]  # both point at the stored canonical
@@ -252,13 +252,13 @@ def test_checkpoint_reset_does_not_drop_new_docs(spark, tmp_path):
     group = TableGroup(str(tmp_path / "state"))
     apply_dedup_batch(spark, group, _docs_df(spark, pdf.iloc[:20]), 0)
     apply_dedup_batch(spark, group, _docs_df(spark, pdf.iloc[20:30]), 1)
-    assert group.lineage()["batch_id"] == 1
+    assert group.snapshot().lineage["batch_id"] == 1
 
     # fresh checkpoint: "batch 0" now carries everything the source lists —
     # 30 already-folded docs plus 10 never-seen ones
     snap = apply_dedup_batch(spark, group, _docs_df(spark, pdf), 0)
     assert snap is not None  # NOT skipped
-    base = group.read_member(spark, CLUSTERS_BASE).toPandas()
+    base = group.table(CLUSTERS_BASE).read(spark).toPandas()
     assert len(base) == 40 and base.doc_id.is_unique
     pd.testing.assert_frame_equal(
         _stored_clusters(spark, group), _full_recompute(spark, pdf),
@@ -323,15 +323,11 @@ def test_apply_batch_parity_fuzz_random_splits(spark, tmp_path):
         )
 
 
-def test_auto_compact_keeps_remap_bounded_and_view_identical(spark, tmp_path):
-    """In-loop maintenance policy: with auto_compact_rows=0 every fold that
-    leaves merge events behind is followed by an atomic compaction, so the
-    remap never outlives its trigger and the resolved view stays identical
-    to the un-compacted fold and to the one-shot recompute."""
-    # Deterministic merge events: batch 1 establishes canonicals 10/11,
-    # batch 2 delivers SMALLER ids carrying the same content — the exact
-    # probe edges (0,10) and (5,11) relabel both stored clusters, which is
-    # precisely the remap-growing case the policy exists for.
+def _merge_corpus() -> pd.DataFrame:
+    """Deterministic merge events: batch 1 (rows 0-2) establishes
+    canonicals 10/11, batch 2 (rows 3-5) delivers SMALLER ids carrying the
+    same content — the exact probe edges (0,10) and (5,11) relabel both
+    stored clusters, which is precisely the remap-growing case."""
     t1 = " ".join(_WORDS[:12])
     t2 = " ".join(_WORDS[12:24])
     t3 = " ".join(_WORDS[24:36])
@@ -339,10 +335,18 @@ def test_auto_compact_keeps_remap_bounded_and_view_identical(spark, tmp_path):
         (10, t1), (11, t2), (12, t3),          # batch 1
         (0, t1), (5, t2), (13, " ".join(_WORDS[3:15])),  # batch 2
     ]
-    pdf = pd.DataFrame(
+    return pd.DataFrame(
         [(d, t, "en", "src0", len(t)) for d, t in rows],
         columns=["doc_id", "text", "lang", "source", "n_chars"],
     )
+
+
+def test_auto_compact_keeps_remap_bounded_and_view_identical(spark, tmp_path):
+    """In-loop maintenance policy: with auto_compact_rows=0 every fold that
+    leaves merge events behind is followed by an atomic compaction, so the
+    remap never outlives its trigger and the resolved view stays identical
+    to the un-compacted fold and to the one-shot recompute."""
+    pdf = _merge_corpus()
     plain = TableGroup(str(tmp_path / "plain"))
     auto = TableGroup(str(tmp_path / "auto"))
     for b, (lo, hi) in enumerate([(0, 3), (3, 6)]):
@@ -351,8 +355,8 @@ def test_auto_compact_keeps_remap_bounded_and_view_identical(spark, tmp_path):
         apply_dedup_batch(
             spark, auto, _docs_df(spark, batch), b, auto_compact_rows=0
         )
-        assert auto.read_member(spark, LABEL_REMAP).count() == 0
-    assert plain.read_member(spark, LABEL_REMAP).count() >= 2  # policy did work
+        assert auto.table(LABEL_REMAP).read(spark).count() == 0
+    assert plain.table(LABEL_REMAP).read(spark).count() >= 2  # policy did work
     want = _full_recompute(spark, pdf)
     pd.testing.assert_frame_equal(
         _stored_clusters(spark, auto), want, check_dtype=False
@@ -396,7 +400,35 @@ def test_compact_clusters_fails_on_fold_landing_after_its_read(
         compact_clusters(spark, g)
     assert read_clusters(spark, g).count() == len(pdf)
     compact_clusters(spark, g)
-    assert g.read_member(spark, LABEL_REMAP).count() == 0
+    assert g.table(LABEL_REMAP).read(spark).count() == 0
     pd.testing.assert_frame_equal(
         _stored_clusters(spark, g), _full_recompute(spark, pdf), check_dtype=False
     )
+
+
+def test_read_clusters_reads_one_snapshot(spark, tmp_path, monkeypatch):
+    """read_clusters resolves the base through the remap of the same
+    snapshot. A compaction that lands between its two member reads folds
+    the remap into a new base and empties the remap; the view read before
+    it still pairs the old base with the old remap, so docs 10 and 11
+    resolve to the merged labels 0 and 5. Read at two snapshots, the old
+    base met the empty remap and they kept labels 10 and 11."""
+    from log_aggregator_spark import tableio
+
+    pdf = _merge_corpus()
+    g = TableGroup(str(tmp_path / "g"))
+    for b, (lo, hi) in enumerate([(0, 3), (3, 6)]):
+        apply_dedup_batch(spark, g, _docs_df(spark, pdf.iloc[lo:hi]), b)
+    real_read_files = tableio.read_files
+    pending = {"compact": True}
+
+    def read_then_compact(*args):
+        df = real_read_files(*args)
+        if pending.pop("compact", False):
+            compact_clusters(spark, g)
+        return df
+
+    monkeypatch.setattr(tableio, "read_files", read_then_compact)
+    got = {r["doc_id"]: r["cluster_id"] for r in read_clusters(spark, g).collect()}
+    assert not pending  # the compaction landed between the reads
+    assert (got[10], got[11]) == (0, 5)

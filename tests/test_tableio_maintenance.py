@@ -31,12 +31,12 @@ def test_commit_keeps_only_files_with_rows(spark, tmp_path):
     t = SnapshotTable(root)
     three = spark.range(3, numPartitions=4)
     t.commit(three)
-    files = t._manifest(1)["tables"][t.MEMBER]["files"]
+    files = t.snapshot(1).files(t.MEMBER)
     assert [pq.read_metadata(f).num_rows for f in files] == [1, 1, 1]
     assert _n_data_files(root) == 3
 
     t.commit(three.where("id < 0"), mode="overwrite")
-    assert t._manifest(2)["tables"][t.MEMBER]["files"] == []
+    assert t.snapshot(2).files(t.MEMBER) == []
     empty = t.read(spark)
     assert empty.columns == ["id"] and empty.count() == 0
     assert _n_data_files(root) == 3
@@ -51,12 +51,12 @@ def test_compact_reduces_files_preserves_rows(spark, tmp_path):
         t.commit(spark.range(i * 10, (i + 1) * 10).repartition(4)
                  .select(F.col("id").alias("x")))
     assert t.current_snapshot() == 5
-    before_files = len(t._manifest(5)["tables"][t.MEMBER]["files"])
+    before_files = len(t.snapshot(5).files(t.MEMBER))
     assert before_files >= 20  # 5 commits × 4 files
 
     snap = t.compact(spark)
     assert snap == 6
-    after_files = len(t._manifest(6)["tables"][t.MEMBER]["files"])
+    after_files = len(t.snapshot(6).files(t.MEMBER))
     assert after_files < before_files
     assert sorted(r["x"] for r in t.read(spark).collect()) == list(range(50))
     # history preserved until expiry: time travel to pre-compaction works
@@ -88,10 +88,27 @@ def test_expire_snapshots_gc_orphans(spark, tmp_path):
     # current snapshot intact and readable
     assert sorted(r["x"] for r in t.read(spark).collect()) == list(range(20))
     # only the kept snapshot's files remain on disk
-    assert _n_data_files(str(tmp_path / "t")) == len(t._manifest(5)["tables"][t.MEMBER]["files"])
+    assert _n_data_files(str(tmp_path / "t")) == len(t.snapshot(5).files(t.MEMBER))
     # time travel past the horizon is gone, loudly
     with pytest.raises(FileNotFoundError):
         t._manifest(2)
+
+
+def test_expire_removes_old_manifest_temp_files(spark, tmp_path):
+    """A crash between ``_publish``'s temp write and its removal leaves a
+    ``manifests/.tmp-*`` file that no reader lists. Expiry removes one
+    older than ``orphan_min_age_sec``; a younger one may belong to a live
+    commit that has not linked it yet, so it stays."""
+    g = TableGroup(str(tmp_path / "g"))
+    g.commit({"m": (spark.range(3), "append")})
+    leftover = os.path.join(g._manifest_dir, ".tmp-crashed")
+    with open(leftover, "w") as f:
+        f.write("{}")
+    g.expire_snapshots()
+    assert os.path.exists(leftover)
+    g.expire_snapshots(orphan_min_age_sec=0)
+    assert not os.path.exists(leftover)
+    assert g._snapshot_ids() == [1] and g.table("m").read(spark).count() == 3
 
 
 def test_group_compact_and_expire(spark, tmp_path):
@@ -102,14 +119,14 @@ def test_group_compact_and_expire(spark, tmp_path):
                        .repartition(3).select(F.col("id").alias("x")), "append"),
             "ckpt": (spark.range(5).select(F.col("id").alias("y")), "overwrite"),
         })
-    routed_files = len(g._manifest(3)["tables"]["routed"]["files"])
+    routed_files = len(g.snapshot(3).files("routed"))
     assert routed_files == 9
 
     snap = g.compact(spark, names=["routed"])
     assert snap == 4
-    assert len(g._manifest(4)["tables"]["routed"]["files"]) < routed_files
+    assert len(g.snapshot(4).files("routed")) < routed_files
     # untouched member carried forward identically
-    assert g._manifest(4)["tables"]["ckpt"]["files"] == g._manifest(3)["tables"]["ckpt"]["files"]
+    assert g.snapshot(4).files("ckpt") == g.snapshot(3).files("ckpt")
     assert sorted(r["x"] for r in g.table("routed").read(spark).collect()) == list(range(30))
 
     res = g.expire_snapshots(keep_last=1)
@@ -166,8 +183,8 @@ def test_group_empty_commit_is_carry_forward(spark, tmp_path):
     })
     snap = g.compact(spark, names=["remap"])  # empty member -> zero writes
     assert snap == 2
-    assert g._manifest(2)["tables"]["labels"]["files"] == g._manifest(1)["tables"]["labels"]["files"]
-    assert g.read_member(spark, "remap").count() == 0
+    assert g.snapshot(2).files("labels") == g.snapshot(1).files("labels")
+    assert g.table("remap").read(spark).count() == 0
     assert g.commit({}) == 3  # pure carry-forward commit
     assert g.table("labels").read(spark).count() == 5
 
@@ -197,7 +214,7 @@ def test_commit_against_expired_parent_raises(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(DataFrameWriter, "parquet", rivals_then_write)
     with pytest.raises(ConcurrentCommitError):
-        g.commit({"m": (df, "append")}, parent=1)
+        g.commit({"m": (df, "append")}, parent=g.snapshot(1))
     assert g._snapshot_ids() == [4]
     assert g.table("m").read(spark).count() == 3
 
