@@ -8,7 +8,7 @@ table of pre-tokenized sequence chunks:
 
     chunks → parse(envelope, vectorized pandas UDF)
            → dropDuplicates(doc_id, session, seq)
-           → checkpoint gate (broadcast join vs resume state)
+           → checkpoint gate (join vs resume state, broadcast while small)
            → groupBy(doc_id, session) reassembly (monotone-seq gate, gap cut)
            → broadcast hash-join enrich (source → sink routes)
            → salted fan-out per-sink writes

@@ -19,7 +19,7 @@ from .functions import multimodal as fmm
 from .functions import similarity as fsim
 from .functions import text as ftext
 from .operators.merge import merge_upsert
-from .operators.parse import parse_envelope, split_rejects
+from .operators.parse import split_rejects
 from .operators.aggregate import source_counts
 from .operators.reassemble import _gate_flags, held_back
 from .plans.pipeline import after_gate, run_pipeline
@@ -42,7 +42,8 @@ def _pipeline(spark: SparkSession, sf_dir: str):
 
 def q_pipeline_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = chunker.load_documents(spark, sf_dir)
-    return parse_envelope(chunker.chunks(docs)).select(
+    parsed, _rejects = split_rejects(chunker.chunks(docs))
+    return parsed.select(
         "doc_id",
         "session",
         "seq",
@@ -89,9 +90,8 @@ def q_pipeline_source_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_pipeline_held_back(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = chunker.load_documents(spark, sf_dir)
-    return held_back(
-        parse_envelope(chunker.chunks(docs)), chunker.checkpoint_table(docs)
-    ).select("doc_id", "session", "seq")
+    parsed, _rejects = split_rejects(chunker.chunks(docs))
+    return held_back(parsed, chunker.checkpoint_table(docs)).select("doc_id", "session", "seq")
 
 
 def q_pipeline_checkpoint_out(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -133,7 +133,7 @@ def q_pipeline_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     init-accept of sessions that restart mid-corpus, gap carry-over and
     checkpoint merge, all under the driver's value-hash."""
     docs = chunker.load_documents(spark, sf_dir)
-    parsed = parse_envelope(chunker.chunks(docs))
+    parsed, _rejects = split_rejects(chunker.chunks(docs))
     ckpt0 = chunker.checkpoint_table(docs)
     routes = chunker.routes_table(docs)
 

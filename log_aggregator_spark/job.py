@@ -40,17 +40,18 @@ window: a rival commit that lands while the pass computes fails the pass
 instead of being stacked on.
 
 Cost: at small inputs a pass is bound by fixed per-job and per-task cost.
-A warm pass over new chunks starts 11 Spark jobs on perfbench's
-``resume_two_pass`` input: the gate's checkpoint and the commit's member
-writes. It runs the parse UDF in two of them, the gate's and the
+A warm pass over new chunks starts 12 Spark jobs on the test corpus
+(``test_resume_pass_job_budget`` bounds it): the gate's checkpoint and the
+commit's member writes. It runs the parse UDF in two of them, the gate's and the
 ``rejects`` write's, each in one Python task per Arrow batch of new rows
 (``maxRecordsPerBatch``, counted from the new files' footers), not one per
 input file: a Python UDF task costs about 0.03 CPU-s of Python-worker time
 before it reads a row (0.14 when the workers import pyspark from Spark's
 zips, see ``worker_daemon``; measured on a 4-vCPU VM). The held chunks'
-ages ride through the gate, so no join brings them back. Every read names the schema its
-manifest recorded, so none starts a parquet schema-inference job, and the
-lineage rows reach the JVM as Arrow and are written as one file.
+ages ride through the gate, so no join brings them back. Every read names
+the schema its manifest recorded, so none starts a parquet
+schema-inference job, and the lineage rows reach the JVM as Arrow and are
+written as one file. An idle poll starts none (see ``run_job``).
 
 Crash safety: the single TableGroup commit has NO duplicate-append window —
 either its manifest was linked in (all tables advanced together; the retry
@@ -114,7 +115,17 @@ def run_job(
     (another committer won the manifest CAS) re-read the group state and
     re-run the pass up to N more times — the loser's recomputation then
     stands on the winner's committed checkpoint, so work is neither lost
-    nor doubled. 0 (default) = propagate immediately."""
+    nor doubled. 0 (default) = propagate immediately.
+
+    An idle poll publishes nothing: with no new chunks, and either no held
+    chunk or no ``held_max_age_runs``, the pass returns
+    ``{"run_id": None, "status": "no_new_data"}`` before any Spark work, as
+    the reference's decoder runs a pass only when its file watch sees new
+    chunk files (``CacheWatcher.java:36-41``). Each held chunk lies past a
+    gap above its stream's last_seq, which is positive, so re-gating held
+    chunks alone against the committed checkpoint would accept none; only
+    aging can change them. A chunk requeued into state that runs without an
+    age limit is therefore re-gated by the next pass that has new chunks."""
     for attempt in range(retries + 1):
         try:
             return _run_job_once(
@@ -151,10 +162,13 @@ def _run_job_once(
     t_start = time.perf_counter()
     # the pass reads the state through one view and commits against it
     view = state.group.snapshot()
-    ckpt_df = view.read(spark, "checkpoint") if view.exists("checkpoint") else None
     chunks_snap, new_files, schema = chunks_table.increment(view.lineage.get("chunks_snapshot"))
-    if not new_files and not view.exists("held"):
+    held_files = view.files("held") if view.exists("held") else []
+    # the idle poll (see ``run_job``): without new chunks only aging can
+    # change the held cache
+    if not new_files and (not held_files or held_max_age_runs is None):
         return {"run_id": None, "status": "no_new_data"}
+    ckpt_df = view.read(spark, "checkpoint") if view.exists("checkpoint") else None
     # the group's pass counter, +1 per pass and carried unchanged through
     # compactions and requeues: routed segments sort in run order by it, and
     # held chunks age by passes — not by chunk commits (several may land
@@ -176,7 +190,7 @@ def _run_job_once(
             # dead-letter split: a malformed envelope parses to null fields
             # and the gate's null-evaluating predicates would silently drop
             # it — the reject stream makes corrupt input first-class data
-            # instead (the reference logs-and-skips; parse.py:85-). The gate
+            # instead (the reference logs-and-skips). The gate
             # and the rejects write each run the UDF, the latter over the
             # envelope column alone. Sized by rows, not files: a Python task
             # costs a fixed ~0.03 CPU-s before its first row, so the new

@@ -34,41 +34,35 @@ VERSION_COL = "version"
 OP_COL = "op"
 
 
-def merge_upsert(
-    base: DataFrame,
-    updates: DataFrame,
-    keys: Sequence[str],
-    base_version: int = 0,
-) -> DataFrame:
+def merge_upsert(base: DataFrame, updates: DataFrame, keys: Sequence[str]) -> DataFrame:
     """Last-writer-wins MERGE of ``updates`` into ``base``.
 
     ``base``: current snapshot (no version/op columns — it is implicitly
-    ``base_version``, op=U). ``updates``: change batch carrying every
-    payload column of ``base`` plus ``version`` (monotone per key; must
-    exceed ``base_version`` to win) and ``op`` ('U' upsert / 'D'
-    delete). Returns the merged snapshot with ``version`` kept
-    (provenance: which batch last touched the row).
+    version 0, op=U). ``updates``: change batch carrying every payload
+    column of ``base`` plus ``version`` (monotone per key; must exceed 0 to
+    win) and ``op`` ('U' upsert / 'D' delete). Returns the merged snapshot
+    with ``version`` kept (provenance: which batch last touched the row).
 
-    The contract is one row per key per version with version >
-    ``base_version`` — but the argmax is deterministic even when a caller
-    violates it: the winner is ordered by ``struct(version, rank)`` where
-    rank is delete=2 > base-row=1 > batch-upsert=0 (an explicit rank bit:
-    'D' < 'U' lexically, so ordering on the raw op string would invert the
+    The contract is one row per key per version with version > 0 — but
+    the argmax is deterministic even when a caller violates it: the winner
+    is ordered by ``struct(version, rank)`` where rank is delete=2 >
+    base-row=1 > batch-upsert=0 (an explicit rank bit: 'D' < 'U'
+    lexically, so ordering on the raw op string would invert the
     convention). At equal version a delete beats everything — MERGE's
     "delete wins the tie" convention, including a delete arriving at
-    exactly ``base_version`` — and a batch upsert at
-    version ≤ ``base_version`` loses to the base row deterministically
-    instead of varying per run. Two batch upserts sharing (key, version)
-    remain a contract violation (payload pick would still tie); everything
-    the operator itself introduces (the base row at ``base_version``)
-    resolves deterministically. Output: keys + payload + version.
+    exactly the base version 0 — and a batch upsert at version ≤ 0 loses
+    to the base row deterministically instead of varying per run. Two
+    batch upserts sharing (key, version) remain a contract violation
+    (payload pick would still tie); everything the operator itself
+    introduces (the base row at version 0) resolves deterministically.
+    Output: keys + payload + version.
     """
     keys = list(keys)
     payload = [c for c in base.columns if c not in keys]
     b = base.select(
         *keys,
         *payload,
-        F.lit(base_version).cast("long").alias(VERSION_COL),
+        F.lit(0).cast("long").alias(VERSION_COL),
         F.lit(UPSERT_OP).alias(OP_COL),
         F.lit(1).alias("_prov"),
     )

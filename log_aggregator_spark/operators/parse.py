@@ -12,11 +12,13 @@ split: 0.026 CPU-s per 105k envelopes on a 4-vCPU VM, against 0.105 for a
 capturing ``extract_regex``. A row whose numbers do not fit in int64 is a
 reject, like a row that does not match.
 
-``split_rejects`` is the one parse entry of ``run_pipeline``,
-``job.run_job`` and ``stream_pipeline``. Its two streams are two plans, so
-a caller that runs both evaluates the UDF twice; no caller caches the
-parse, since the rejects plan reads one string column and a Python task
-costs about 0.03 CPU-s.
+``split_rejects`` is the only parse entry: ``run_pipeline``, ``job.run_job``,
+``stream_pipeline`` and the gated queries all parse through it, and no
+public function returns the UDF's null-keyed rows, which the gate's
+null-evaluating predicates would drop without a trace. Its two streams are
+two plans, so a caller that runs both evaluates the UDF twice; no caller
+caches the parse, since the rejects plan reads one string column and a
+Python task costs about 0.03 CPU-s.
 """
 
 from __future__ import annotations
@@ -80,15 +82,6 @@ def _parse_envelope_udf(env: pa.Array) -> pa.Array:
 # the whole Arrow batch a second time (observed as two ArrowEvalPython nodes
 # in the physical plan — 2x the Python cost of the parse stage).
 _parse_envelope_udf = _parse_envelope_udf.asNondeterministic()
-
-
-def parse_envelope(chunks: DataFrame) -> DataFrame:
-    """chunks(envelope, chunk_tokens, source) →
-    (doc_id, session, seq, chunk_tokens, source); a malformed envelope
-    keeps its row, with null fields."""
-    return chunks.withColumn("_p", _parse_envelope_udf(F.col("envelope"))).select(
-        "_p.*", "chunk_tokens", "source"
-    )
 
 
 def split_rejects(chunks: DataFrame) -> tuple[DataFrame, DataFrame]:

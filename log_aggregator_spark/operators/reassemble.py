@@ -41,14 +41,16 @@ from pyspark.sql import functions as F
 
 
 def _with_last_seq(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame:
-    """Attach resume state. The checkpoint table is small (one row per live
-    stream) → broadcast, never a shuffle."""
+    """Attach resume state. The checkpoint has one row per stream ever
+    seen, so no hint forces its side of the join: the planner broadcasts it
+    while its files are below ``spark.sql.autoBroadcastJoinThreshold``
+    (no shuffle of the new chunks), and shuffles both sides once it is
+    larger, where a forced broadcast would fail the pass at Spark's
+    broadcast row or byte cap."""
     if checkpoint is None:
         return parsed.withColumn("last_seq", F.lit(0).cast("long"))
     return parsed.join(
-        F.broadcast(checkpoint.select("doc_id", "session", "last_seq")),
-        ["doc_id", "session"],
-        "left",
+        checkpoint.select("doc_id", "session", "last_seq"), ["doc_id", "session"], "left"
     ).withColumn("last_seq", F.coalesce(F.col("last_seq"), F.lit(0)).cast("long"))
 
 

@@ -32,12 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def route_write(
-    enriched: DataFrame,
-    out_dir: str,
-    mode: str = "overwrite",
-    cluster_by_sink: bool = False,
-) -> None:
+def route_write(enriched: DataFrame, out_dir: str, cluster_by_sink: bool = False) -> None:
+    """Write ``enriched`` under ``out_dir``, replacing what a previous write
+    left there, one ``sink=`` directory per sink."""
     if cluster_by_sink:
         enriched = enriched.repartition(32, F.col("sink"), F.xxhash64("doc_id") % 8)
-    enriched.write.mode(mode).partitionBy("sink").parquet(out_dir)
+    enriched.write.mode("overwrite").partitionBy("sink").parquet(out_dir)

@@ -35,7 +35,6 @@ from typing import Any
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
@@ -46,6 +45,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..operators.enrich import enrich
 from ..operators.parse import split_rejects
 from ..operators.reassemble import gate_select, payload_ranks
 
@@ -198,11 +198,7 @@ def stream_reassemble(
             ),
         )
     )
-    if routes is not None:
-        segments = segments.join(
-            F.broadcast(routes.select("source", "sink", "priority")), "source"
-        )
-    return segments
+    return segments if routes is None else enrich(segments, routes)
 
 
 def stream_rejects(

@@ -71,10 +71,7 @@ class SnapshotExpiredError(LookupError):
 
 
 def _gc_data_dir(
-    data_root: str,
-    referenced: set[str],
-    expired_refs: set[str] = frozenset(),
-    orphan_min_age_sec: float = ORPHAN_MIN_AGE_SEC,
+    data_root: str, referenced: set[str], expired_refs: set[str], orphan_min_age_sec: float
 ) -> int:
     """Delete whole unreferenced commit dirs under ``data_root`` (a member
     write leaves one ``data/<uuid>`` dir, none when it wrote no rows, so
@@ -224,7 +221,7 @@ class IcebergTable:
             .load(self.name)
         )
 
-    def lineage(self, snapshot: int | None = None) -> dict:
+    def lineage(self) -> dict:
         rows = self.spark.sql(f"SHOW TBLPROPERTIES {self.name}").collect()
         p = "lineage."
         return {r["key"][len(p):]: r["value"] for r in rows if r["key"].startswith(p)}
@@ -568,8 +565,8 @@ class SnapshotTable(TableGroup):
         """Read the table as of ``snapshot`` (default: latest)."""
         return self.snapshot(snapshot).read(spark, self.MEMBER)
 
-    def lineage(self, snapshot: int | None = None) -> dict:
-        return self.snapshot(snapshot).lineage
+    def lineage(self) -> dict:
+        return self.snapshot().lineage
 
     def read_incremental(
         self, spark: SparkSession, since: int | None

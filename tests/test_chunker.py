@@ -9,7 +9,7 @@ import re
 import pytest
 
 from log_aggregator_spark import chunker, spec
-from log_aggregator_spark.operators.parse import encode_envelope, parse_envelope
+from log_aggregator_spark.operators.parse import encode_envelope, split_rejects
 
 from conftest import SF_DIR
 
@@ -23,7 +23,7 @@ def test_chunks_roundtrip_and_reconstruct(spark, docs):
     """Unperturbed chunks: parse(envelope) recovers (doc_id, session, seq);
     per (doc, session) the chunk tokens concatenate back to a contiguous
     counter run, and chunk sizes are ≤ CHUNK with only the last short."""
-    parsed = parse_envelope(chunker.chunks(docs, perturb=False)).toPandas()
+    parsed = split_rejects(chunker.chunks(docs, perturb=False))[0].toPandas()
     seqs = chunker.sequences(docs).toPandas().set_index("doc_id")
 
     assert parsed["doc_id"].str.match(r"doc\d{8}$").all()
@@ -51,13 +51,13 @@ def test_envelope_encode_is_parse_inverse(spark, docs):
     """S4 filename-encode (DataPumpImpl.java:87-89) is the exact inverse of
     the parse regex (PBLogFile.java:17-27)."""
     ch = chunker.chunks(docs).select("envelope", "chunk_tokens", "source")
-    re_enc = encode_envelope(parse_envelope(ch).withColumnRenamed("envelope", "_"))
+    ok, _rejects = split_rejects(ch)
+    re_enc = encode_envelope(ok)
     import pyspark.sql.functions as F
 
     n_total = ch.count()
     n_match = (
-        parse_envelope(ch)
-        .withColumn("env2", F.format_string(spec.ENVELOPE_FMT, "doc_id", "session", "seq"))
+        ok.withColumn("env2", F.format_string(spec.ENVELOPE_FMT, "doc_id", "session", "seq"))
         .join(ch.select("envelope"), F.col("env2") == F.col("envelope"), "inner")
         .count()
     )
@@ -69,7 +69,7 @@ def test_perturbations_present(spark, docs):
     directions: duplicates exist, gap seqs are absent, lost prefixes absent."""
     import pyspark.sql.functions as F
 
-    p = parse_envelope(chunker.chunks(docs)).toPandas()
+    p = split_rejects(chunker.chunks(docs))[0].toPandas()
     dup_docs = p[p.duplicated(["doc_id", "session", "seq"], keep=False)]
     assert len(dup_docs) > 0
     assert (dup_docs["seq"] == 2).all()
@@ -107,16 +107,27 @@ _INT64_MAX = 2**63 - 1
     ],
 )
 def test_parse_envelope_matches_python_reference(spark, envelope):
-    """The Arrow parse kernel against the full-match Python reference: a
-    row parses iff ``spec.ENVELOPE_REGEX`` full-matches with ASCII digits
-    and both numbers fit in int64; anything else gets null fields."""
+    """The Arrow parse kernel against the full-match Python reference,
+    through the one parse entry: an envelope parses iff
+    ``spec.ENVELOPE_REGEX`` full-matches with ASCII digits and both numbers
+    fit in int64, giving one ``ok`` row with the reference's fields and no
+    ``rejects`` row; any other envelope, ``None`` included, gives one
+    ``rejects`` row that keeps it, and no ``ok`` row."""
     m = envelope is not None and re.fullmatch(spec.ENVELOPE_REGEX, envelope, re.ASCII)
-    want = (None, None, None)
-    if m and int(m.group(2)) <= _INT64_MAX and int(m.group(3)) <= _INT64_MAX:
-        want = (m.group(1), int(m.group(2)), int(m.group(3)))
+    parses = bool(m) and int(m.group(2)) <= _INT64_MAX and int(m.group(3)) <= _INT64_MAX
     df = spark.createDataFrame(
         [(envelope, [1], "s")],
         schema="envelope string, chunk_tokens array<int>, source string",
     )
-    (row,) = parse_envelope(df).collect()
-    assert (row["doc_id"], row["session"], row["seq"]) == want
+    ok, rejects = split_rejects(df)
+    ok_rows = [
+        (r["doc_id"], r["session"], r["seq"], list(r["chunk_tokens"]), r["source"])
+        for r in ok.collect()
+    ]
+    reject_rows = [(r["envelope"], r["source"]) for r in rejects.collect()]
+    if parses:
+        assert ok_rows == [(m.group(1), int(m.group(2)), int(m.group(3)), [1], "s")]
+        assert reject_rows == []
+    else:
+        assert ok_rows == []
+        assert reject_rows == [(envelope, "s")]

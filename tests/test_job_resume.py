@@ -373,6 +373,68 @@ def test_repeated_pass_compiles_no_code(spark, docs, tmp_path):
     assert counts[-1] == 0, f"compiles per repeated pass: {counts}"
 
 
+def _plan_nodes(spark, eid: int) -> list[str]:
+    """Names of the nodes of SQL execution ``eid``'s final physical plan."""
+    nodes = spark._jsparkSession.sharedState().statusStore().planGraph(eid).allNodes()
+    return [nodes.apply(i).name() for i in range(nodes.size())]
+
+
+def test_checkpoint_join_follows_the_broadcast_threshold(spark, docs, tmp_path):
+    """The gate joins the checkpoint member as the planner chooses from its
+    files' size. With both broadcast thresholds off, a warm pass's gate
+    plans no broadcast: the join shuffles each side once and the window
+    reuses that partitioning. The pass commits the same rows as at the
+    default thresholds, where the small checkpoint is broadcast. A forced
+    broadcast would fail every pass once the checkpoint passes Spark's
+    broadcast row or byte cap."""
+    chunks = chunker.chunks(docs)
+    routes = _routes(docs)
+    seq = F.regexp_extract("envelope", r"_(\d+)\.pbData$", 1).cast("long")
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    default, no_bc = JobState(str(tmp_path / "default")), JobState(str(tmp_path / "no_bc"))
+    ct.commit(chunks.where(seq <= 2))
+    run_job(spark, ct, routes, default)
+    run_job(spark, ct, routes, no_bc)
+    ct.commit(chunks.where(seq > 2))
+
+    def gate_nodes(since):
+        (gate,) = [
+            eid for eid in _parse_executions(spark, since)
+            if "InsertIntoHadoopFsRelationCommand" not in _plan_text(spark, eid)
+        ]
+        return _plan_nodes(spark, gate)
+
+    before = _execution_ids(spark)
+    assert run_job(spark, ct, routes, default)["status"] == "ok"
+    assert "BroadcastHashJoin" in gate_nodes(before)  # a small checkpoint
+
+    keys = (
+        "spark.sql.autoBroadcastJoinThreshold",
+        "spark.sql.adaptive.autoBroadcastJoinThreshold",
+    )
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    before = _execution_ids(spark)
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        assert run_job(spark, ct, routes, no_bc)["status"] == "ok"
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    nodes = gate_nodes(before)
+    assert "Window" in nodes
+    assert "BroadcastHashJoin" not in nodes and "SortMergeJoin" in nodes, nodes
+    assert nodes.count("Exchange") <= 2, nodes
+
+    for member in ("routed", "checkpoint", "held"):
+        want = default.group.table(member).read(spark)
+        got = no_bc.group.table(member).read(spark)
+        assert got.count() == want.count() and got.exceptAll(want).count() == 0, member
+
+
 def test_sink_counts_are_the_committed_routed_rows(spark, tmp_path):
     """run_job's sink counts equal the per-sink counts of the routed rows it
     committed for its run_id — over a chunks table with malformed envelopes
@@ -450,11 +512,39 @@ def test_gap_fill_across_runs(spark, tmp_path):
     ck = state.checkpoint.read(spark).collect()
     assert len(ck) == 1 and ck[0]["last_seq"] == 4
 
-    # idempotent third pass: no new data → no output
+    # idempotent third pass: no new data → no output, no snapshot
+    snap = state.group.current_snapshot()
     r3 = run_job(spark, ct, routes, state)
-    assert r3["status"] in ("no_new_data", "ok")
+    assert r3["status"] == "no_new_data"
+    assert state.group.current_snapshot() == snap
     seg3 = state.routed.read(spark)
     assert seg3.count() == 2  # unchanged
+
+
+def test_idle_poll_publishes_nothing(spark, tmp_path):
+    """A poll that finds no new chunks publishes nothing and starts no Spark
+    job, with nothing held and with a held chunk but no age limit: re-gating
+    the held chunk alone against the committed checkpoint cannot accept it.
+    With an age limit the pass still runs, so the held chunk ages out."""
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    for name, seqs in (("none_held", [1, 2]), ("one_held", [1, 2, 5])):
+        ct = SnapshotTable(str(tmp_path / name / "chunks"))
+        state = JobState(str(tmp_path / name / "state"))
+        ct.commit(_one_stream(spark, seqs))
+        assert run_job(spark, ct, routes, state)["status"] == "ok"
+        snap = state.group.current_snapshot()
+        jobs = _job_ids(spark)
+        r = run_job(spark, ct, routes, state)
+        assert r == {"run_id": None, "status": "no_new_data"}, (name, r)
+        assert _job_ids(spark) == jobs, name
+        assert state.group.current_snapshot() == snap, name
+
+    r = run_job(spark, ct, routes, state, held_max_age_runs=1)
+    assert r["status"] == "ok" and r["held"] == 0
+    assert [row["seq"] for row in state.quarantine.read(spark).collect()] == [5]
+    assert state.group.current_snapshot() == snap + 1
 
 
 def test_midstream_init_across_runs(spark, tmp_path):
@@ -685,7 +775,7 @@ def test_rival_pass_during_compute_loses_the_cas(spark, tmp_path, monkeypatch):
     after its reads and before its commit. The pass commits against the
     snapshot it read, so it loses the CAS instead of stacking a second copy
     of the rival's routed rows; with ``retries=1`` it re-reads the rival's
-    state and routes nothing twice."""
+    state, finds the input consumed and routes nothing twice."""
     from log_aggregator_spark.tableio import ConcurrentCommitError, TableGroup
 
     routes = spark.createDataFrame(
@@ -712,12 +802,13 @@ def test_rival_pass_during_compute_loses_the_cas(spark, tmp_path, monkeypatch):
         run_job(spark, ct, routes, state0)
     assert [list(r["tokens"]) for r in state0.routed.read(spark).collect()] == [[1, 2]]
 
-    # retries=1: the re-run stands on the rival's snapshot
+    # retries=1: the re-run stands on the rival's snapshot, which already
+    # consumed the input, so it publishes nothing
     rival["state"] = str(tmp_path / "state")
     state = JobState(rival["state"])
-    assert run_job(spark, ct, routes, state, retries=1)["status"] == "ok"
+    assert run_job(spark, ct, routes, state, retries=1)["status"] == "no_new_data"
     assert [list(r["tokens"]) for r in state.routed.read(spark).collect()] == [[1, 2]]
-    assert state.group.current_snapshot() == 2
+    assert state.group.current_snapshot() == 1
 
 
 def test_warm_pass_parses_the_state_manifest_at_most_twice(spark, tmp_path, monkeypatch):

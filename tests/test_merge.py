@@ -87,8 +87,8 @@ def test_delete_wins_equal_version_tie(spark):
 
 
 def test_delete_at_base_version_wins_tie(spark):
-    # delete arriving at exactly base_version beats the implicit base row
-    # (delete-wins-tie); an upsert at base_version loses to the base.
+    # delete arriving at exactly the base version (0) beats the implicit
+    # base row (delete-wins-tie); an upsert at version 0 loses to the base.
     base = _base(spark, [(1, "a", 10), (2, "b", 20)])
     batch = _batch(
         spark,
@@ -112,7 +112,7 @@ def test_randomized_collisions_match_python_oracle(spark):
     batch_rows = []
     for _ in range(120):
         k = rng.randrange(16)            # keys 12..15 are pure inserts
-        ver = rng.randrange(3)           # 0 collides with base_version
+        ver = rng.randrange(3)           # 0 collides with the base version
         op = rng.choice(["U", "U", "D"])
         batch_rows.append((k, f"{k}.{ver}.{op}", k * 10 + ver, ver, op))
 

@@ -14,7 +14,7 @@ import pandas as pd
 import pytest
 
 from log_aggregator_spark import chunker, spec
-from log_aggregator_spark.operators.parse import parse_envelope
+from log_aggregator_spark.operators.parse import split_rejects
 from log_aggregator_spark.oracle_pandas import reassemble_oracle
 from log_aggregator_spark.plans.pipeline import run_pipeline
 
@@ -31,7 +31,7 @@ def oracle_frames(spark, docs):
     """Pandas-side chunks + checkpoint, derived via the Spark chunker (the
     chunker itself is validated structurally in test_chunker.py), then pushed
     through the independent pandas oracle."""
-    chunks_pdf = parse_envelope(chunker.chunks(docs)).toPandas()
+    chunks_pdf = split_rejects(chunker.chunks(docs))[0].toPandas()
     ckpt_pdf = chunker.checkpoint_table(docs).toPandas()
     oracle = reassemble_oracle(chunks_pdf, ckpt_pdf)
     return chunks_pdf, ckpt_pdf, oracle
@@ -145,8 +145,8 @@ def test_resume_second_run_emits_suffix(spark, docs):
     assert len(out2) > 0  # gap/blocked streams emit on run 2
 
     # independent oracle chain
-    run1_pdf = parse_envelope(run1_chunks).toPandas()
-    all_pdf = parse_envelope(all_chunks).toPandas()
+    run1_pdf = split_rejects(run1_chunks)[0].toPandas()
+    all_pdf = split_rejects(all_chunks)[0].toPandas()
     ckpt0_pdf = ckpt0.toPandas()
     o1 = reassemble_oracle(run1_pdf, ckpt0_pdf)
     o_ckpt1 = pd.concat(
