@@ -117,15 +117,18 @@ def run_job(
     stands on the winner's committed checkpoint, so work is neither lost
     nor doubled. 0 (default) = propagate immediately.
 
-    An idle poll publishes nothing: with no new chunks, and either no held
-    chunk or no ``held_max_age_runs``, the pass returns
+    An idle poll runs no pass: with no new chunks, and either no held
+    chunk or no ``held_max_age_runs``, it returns
     ``{"run_id": None, "status": "no_new_data"}`` before any Spark work, as
     the reference's decoder runs a pass only when its file watch sees new
     chunk files (``CacheWatcher.java:36-41``). Each held chunk lies past a
     gap above its stream's last_seq, which is positive, so re-gating held
     chunks alone against the committed checkpoint would accept none; only
     aging can change them. A chunk requeued into state that runs without an
-    age limit is therefore re-gated by the next pass that has new chunks."""
+    age limit is therefore re-gated by the next pass that has new chunks.
+    If the chunks table gained snapshots that add no files (a compaction),
+    the poll commits a zero-member snapshot moving ``chunks_snapshot`` to
+    the current one, so expiring the chunks table cannot strand the cursor."""
     for attempt in range(retries + 1):
         try:
             return _run_job_once(
@@ -167,6 +170,8 @@ def _run_job_once(
     # the idle poll (see ``run_job``): without new chunks only aging can
     # change the held cache
     if not new_files and (not held_files or held_max_age_runs is None):
+        if chunks_snap != view.lineage.get("chunks_snapshot"):
+            state.group.commit({}, lineage={"chunks_snapshot": chunks_snap}, parent=view)
         return {"run_id": None, "status": "no_new_data"}
     ckpt_df = view.read(spark, "checkpoint") if view.exists("checkpoint") else None
     # the group's pass counter, +1 per pass and carried unchanged through
@@ -291,13 +296,14 @@ def _parse_tasks(spark: SparkSession, rows: int) -> int:
 
 def requeue_quarantine(spark: SparkSession, state: JobState) -> int:
     """Backfill: move every quarantined chunk back into the held cache so
-    the next pass re-gates it — the operator a deployment runs after the
-    root cause of a permanent gap is fixed (the missing chunks finally
-    shipped, or the source was re-exported). One atomic TableGroup commit:
-    held gains the rows (their age reset to the next pass, so they don't
-    instantly re-quarantine), quarantine empties; the lineage carries the
-    last pass's ``run_id`` and ``chunks_snapshot`` forward. Returns rows
-    moved."""
+    the next pass re-gates it (the next with new chunks if it runs without
+    ``held_max_age_runs``, see ``run_job``) — the operator a deployment
+    runs after the root cause of a permanent gap is fixed (the missing
+    chunks finally shipped, or the source was re-exported). One atomic
+    TableGroup commit: held gains the rows (their age reset to the next
+    pass, so they don't instantly re-quarantine), quarantine empties; the
+    lineage carries the last pass's ``run_id`` and ``chunks_snapshot``
+    forward. Returns rows moved."""
     view = state.group.snapshot()
     q = view.read(spark, "quarantine") if view.exists("quarantine") else None
     n = q.count() if q is not None else 0

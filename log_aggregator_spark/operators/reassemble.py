@@ -46,7 +46,9 @@ def _with_last_seq(parsed: DataFrame, checkpoint: DataFrame | None) -> DataFrame
     while its files are below ``spark.sql.autoBroadcastJoinThreshold``
     (no shuffle of the new chunks), and shuffles both sides once it is
     larger, where a forced broadcast would fail the pass at Spark's
-    broadcast row or byte cap."""
+    broadcast row or byte cap. Below those caps, the cost of shuffling and
+    sorting a checkpoint past the threshold on every pass is unmeasured
+    (ROADMAP direction 2)."""
     if checkpoint is None:
         return parsed.withColumn("last_seq", F.lit(0).cast("long"))
     return parsed.join(

@@ -547,6 +547,40 @@ def test_idle_poll_publishes_nothing(spark, tmp_path):
     assert state.group.current_snapshot() == snap + 1
 
 
+def test_idle_poll_moves_cursor_past_chunks_maintenance(spark, tmp_path):
+    """Compactions of the chunks table during a quiet period add no files,
+    so the idle poll runs no pass, but it moves the lineage's
+    ``chunks_snapshot`` forward in a zero-member commit that starts no Spark
+    job. An expiry that keeps only the newest chunks snapshot then leaves
+    the cursor in range, and the next pass routes only the new rows. When
+    the idle poll committed nothing, that pass raised SnapshotExpiredError."""
+    routes = spark.createDataFrame(
+        [("src1", "sinkA", 0)], schema="source string, sink string, priority int"
+    )
+    ct = SnapshotTable(str(tmp_path / "chunks"))
+    state = JobState(str(tmp_path / "state"))
+    ct.commit(_one_stream(spark, [1, 2]))
+    assert run_job(spark, ct, routes, state)["status"] == "ok"
+    ct.compact(spark)
+    compacted = ct.compact(spark)
+
+    snap = state.group.current_snapshot()
+    jobs = _job_ids(spark)
+    assert run_job(spark, ct, routes, state) == {"run_id": None, "status": "no_new_data"}
+    assert _job_ids(spark) == jobs
+    assert state.group.current_snapshot() == snap + 1
+    assert state.group.snapshot().lineage["chunks_snapshot"] == compacted
+    # the poll again: the chunks table stood still, so nothing is published
+    assert run_job(spark, ct, routes, state)["status"] == "no_new_data"
+    assert state.group.current_snapshot() == snap + 1
+
+    ct.expire_snapshots(keep_last=1)
+    ct.commit(_one_stream(spark, [3]))
+    r = run_job(spark, ct, routes, state)
+    assert r["status"] == "ok" and r["sink_counts"] == {"sinkA": 1}
+    assert [list(t) for t in _segments(state, spark)["tokens"]] == [[1, 2, 3]]
+
+
 def test_midstream_init_across_runs(spark, tmp_path):
     """If the first batch starts mid-stream (seq 3), the init rule anchors
     there — a later batch delivering seqs 1-2 must be treated as stale
